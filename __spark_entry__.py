@@ -86,6 +86,9 @@ def _green_rounds() -> dict[str, int]:
 # merge/commit/time-travel consumer THROUGH merge_into/read_ref, so
 # those second-order consumers (m5/m47/m49/m5x, st7/st13/st19/st20/
 # st30/st37) and VERDICT r16 #10's st31-35/st38 are added explicitly.
+# The one-ref-core rewrite of snapshots.py/workspace.py (every commit
+# writer, the "latest" readers and the workspace ref ops) pulls in the
+# remaining commit-layer consumers m20-m22, m29-m46, m48, m53 and m58.
 RECHECK = frozenset({
     "ann11_trained_ivf",
     "ann16_residual_pq",
@@ -128,16 +131,39 @@ RECHECK = frozenset({
     "m11_incremental_append_scan",
     "m12_schema_evolution_scan",
     "m13_merge_on_read_scan",
+    "m20_snapshot_rollback",
+    "m21_orphan_cleanup",
+    "m22_snapshot_expiry",
+    "m29_branch_tag_scan",
+    "m30_branch_wap",
+    "m31_ref_diff",
+    "m32_transplant_scan",
+    "m33_ref_aware_expiry",
+    "m34_multi_table_commit",
+    "m35_divergent_merge",
+    "m36_workspace_branch_wap",
+    "m37_workspace_expiry",
     "m38_workspace_diff",
+    "m39_workspace_transplant",
+    "m40_commit_retry_reuse",
+    "m41_truncating_retention",
+    "m42_workspace_rollback",
+    "m43_evolved_append_scan",
+    "m44_at_ref_sugar",
+    "m45_autocompaction_scan",
+    "m46_workspace_at_ref",
     "m47_snapshots_history_table",
+    "m48_sql_at_ref",
     "m49_merge_upsert",
     "m50_stats_pruned_scan",
     "m51_time_travel_asof",
     "m52_merge_on_read_upsert",
+    "m53_rename_and_views",
     "m54_mor_changelog",
     "m55_mor_stats_pruned_scan",
     "m56_mor_delete_pruned_scan",
     "m57_merge_update_set",
+    "m58_view_at_ref",
     "m59_mor_compaction_policy",
     "m5_time_travel_versions",
     "m60_partitioned_mor_scan",

@@ -9,121 +9,75 @@ store; endpoint matrix at blog-zero-cost-data-lakehouse.md:373-397).
 table path, so a two-table publish there is two separate commits with a
 torn window where readers see one but not the other.
 
-This module lifts the same commit-log design one level up:
+This module lifts the same commit log one level up:
 
     <workspace>/
       _versions.json     # ONE log for ALL tables: [{version, ts_ms,
-                         #   parent, tables: {name: {"adds": [...]}
+      _versions.jsonl    #   parent, tables: {name: {"adds": [...]}
                          #                        | {"set": [...]}}}]
-      _refs.json         # workspace-level branches/tags (same shape as
-                         #   the table-level refs — and like Nessie's,
-                         #   a workspace BRANCH spans every table)
+      _refs.json         # workspace-level branches/tags — and like
+                         #   Nessie's, a workspace BRANCH spans every table
       <table>/w{N}-<tok>/  # immutable data dirs, one per table per commit
 
 A commit entry names only the tables it TOUCHED, each as a delta
-(``adds``) or a restatement (``set``) — the same O(commits) metadata
-discipline the table-level log adopted in round 10 — and records its
-``parent`` workspace version, so history is a TREE: resolving table T at
-version V walks V's parent chain collecting adds until a set. Readers
-of one version therefore see every table exactly as that single commit
-left the workspace — both tables of a publish, or neither — and a
-branch isolates multi-table work-in-progress until one merge publishes
-ALL of it (the catalog-level branch-WAP m36 oracle-checks; m30 is the
-same workflow one table at a time).
+(``adds``) or a restatement (``set``), and records its ``parent``
+workspace version, so history is a TREE: resolving table T at version V
+walks V's parent chain collecting adds until a set. Readers of one
+version therefore see every table exactly as that single commit left the
+workspace — both tables of a publish, or neither — and a branch isolates
+multi-table work-in-progress until one merge publishes ALL of it (the
+catalog-level branch-WAP m36 oracle-checks; m30 is the same workflow one
+table at a time).
 
-The commit point is the identical CAS: data dirs first (uniquely named),
-then verify-head + append + atomic rename under the ``O_EXCL`` lock, so
-a lost race raises ``CommitConflict`` (imported from snapshots — one
-conflict type across both layers); branch pointers move inside the same
-critical section (the round-10 refs-clobber lesson).
+Everything below the entry payload is the table log's machinery,
+imported from ``snapshots.py`` — one implementation for both layers: the
+base + append-segment log files, refs I/O, the one ancestry walk
+(``_ancestry``), ref resolution and the ``main`` rule (``_resolve_ref``:
+the pinned pointer, else the log tail), the idempotency-key lookup,
+ref protection and key hygiene for expiry, and the commit step. Data
+commits (``ws_commit``) write their data dirs first and then run the CAS
+(``_append_commit``); the metadata-only commits (rename, views, merge,
+transplant, rollback) plan inside the ``O_EXCL`` lock and call the
+in-lock step (``_commit_locked``) directly, since the lock is not
+re-entrant. Either way a lost race raises ``CommitConflict`` and branch
+pointers move inside the same critical section.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
 
-from apache_iceberg_spark.catalog.snapshots import (
+from apache_iceberg_spark.catalog.snapshots import (  # noqa: F401
     CommitConflict,
-    _MISSING,
-    _append_entry,
+    _ancestry,
+    _append_commit,
+    _commit_locked,
+    _create_ref,
     _data_dir,
+    _drop_expired_keys,
+    _ensure_main,
+    _expirable,
+    _find_idempotent,
     _locked_state,
+    _plan_commit,
     _log_lock,
-    _prune_keys,
+    _read_dirs,
     _read_log,
-    _read_tail,
-    _state_ancestry,
-    _state_parent,
+    _read_refs,
+    _resolve_ref,
     _touch_lock,
     _write_log,
-    compact_log as ws_compact_log,  # same file layout, one implementation
+    _write_refs,
+    compact_log as ws_compact_log,
+    create_branch as ws_create_branch,
+    delete_branch as ws_delete_branch,
+    parse_at_ref,
 )
 
-_LOG = "_versions.json"
-_REFS = "_refs.json"
-
-# The commit log is the SAME base-array + append-segment layout as the
-# table-level store (snapshots.py round 11): a workspace commit appends
-# ONE JSONL line — O(entry bytes) per commit instead of rewriting the
-# whole log (O(commits²) cumulative at streaming cadence, the st19/st20
-# shape; VERDICT r10 ask #1). `_read_log`/`_write_log`/`_append_entry`/
-# `ws_compact_log` are imported from snapshots.py — one implementation,
-# both layers.
-
-
-def _read_refs(ws_path: str) -> dict:
-    try:
-        with open(os.path.join(ws_path, _REFS)) as f:
-            return json.load(f)
-    except FileNotFoundError:
-        return {"branches": {}, "tags": {}}
-
-
-def _write_refs(ws_path: str, refs: dict) -> None:
-    tmp = os.path.join(ws_path, _REFS + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(refs, f)
-    os.replace(tmp, os.path.join(ws_path, _REFS))
-
-
-def _parent_of(by_v: dict[int, dict], v: int) -> int | None:
-    """One ancestry step: recorded ``parent``, or (for entries predating
-    parent recording) the implicit previous log version — the same
-    unified rule as the table-level store. ``root`` entries (expiry
-    materialized them) are explicit chain ends (ADVICE r10: the
-    implicit fallback walked them into foreign lineages)."""
-    entry = by_v[v]
-    if entry.get("root"):
-        return None
-    if "parent" in entry:
-        return entry["parent"]
-    prior = [x for x in by_v if x < v]
-    return max(prior) if prior else None
-
-
-def _chain(by_v: dict[int, dict], head: int) -> list[int]:
-    """``head`` and every ancestor, nearest first (bisect for the
-    implicit-parent steps — O(n log n) on legacy linear logs)."""
-    import bisect
-
-    sorted_vs = sorted(by_v)
-    out: list[int] = []
-    v: int | None = head
-    while v is not None and v in by_v:
-        out.append(v)
-        entry = by_v[v]
-        if entry.get("root"):
-            v = None  # explicit end-of-chain (expiry-materialized)
-        elif "parent" in entry:
-            v = entry["parent"]
-        else:
-            i = bisect.bisect_left(sorted_vs, v)
-            v = sorted_vs[i - 1] if i > 0 else None
-    return out
+ws_resolve_ref = _resolve_ref
 
 
 def _resolve_table(
@@ -144,7 +98,7 @@ def _resolve_table(
             f"version {version} not found (have {sorted(by_v)})"
         )
     chain: list[list[str]] = []
-    for v in _chain(by_v, version):
+    for v in _ancestry(by_v, version):
         t = by_v[v]["tables"].get(table)
         if t is None:
             continue
@@ -152,9 +106,6 @@ def _resolve_table(
             chain.append(t["set"])
             break
         chain.append(t["adds"])
-    else:
-        if not chain:
-            return None
     out: list[str] = []
     for part in reversed(chain):
         out.extend(part)
@@ -169,60 +120,11 @@ def _table_layout(by_v: dict[int, dict], version: int, table: str):
     """The most recently recorded ``partition_by`` for ``table`` along
     ``version``'s lineage; the sentinel ``"unknown"`` when no touching
     entry recorded one (pre-validation commits)."""
-    for v in _chain(by_v, version):
+    for v in _ancestry(by_v, version):
         t = by_v[v]["tables"].get(table)
-        if t is None:
-            continue
-        if "partition_by" in t:
-            return t["partition_by"]
-        return "unknown"
+        if t is not None:
+            return t.get("partition_by", "unknown")
     return "unknown"
-
-
-def _ensure_main(ws_path: str, refs: dict, log: list[dict]) -> dict:
-    if "main" not in refs["branches"]:
-        if not log:
-            raise ValueError(f"no commits at {ws_path}")
-        refs["branches"]["main"] = log[-1]["version"]
-    return refs
-
-
-def _ws_find_idempotent(
-    ws_path: str,
-    refs: dict,
-    branch: str,
-    parent_v: int | None,
-    key: str,
-) -> int | None:
-    """O(1) indexed idempotency lookup, workspace flavor — same contract
-    as the table-level ``_find_idempotent`` (VERDICT r10 ask #4): map
-    probe first (a fully-indexed MISS never touches the log state),
-    ancestry-verify on the rare hit, chain walk only for history below
-    ``keys_floor`` (pre-index commits; fresh workspaces have floor 0, so
-    a new stream's per-batch miss check never walks)."""
-    if parent_v is None:
-        return None
-    mk = f"{branch}\x00{key}"
-    hit = refs.get("keys", {}).get(mk)
-    floor = refs.get("keys_floor")
-    if hit is None and floor is not None and floor <= 0:
-        return None
-    with _locked_state(ws_path) as st:
-        ancestry: list[int] | None = None
-        if hit is not None and hit in st.by_v:
-            ancestry = _state_ancestry(st, parent_v)
-            if hit in ancestry:
-                return hit
-        if floor is not None and floor <= 0:
-            return None
-        if ancestry is None:
-            ancestry = _state_ancestry(st, parent_v)
-        for v in ancestry:
-            if floor is not None and v > floor:
-                continue
-            if st.by_v[v].get("idempotency_key") == key:
-                return v
-    return None
 
 
 def _ws_first_touch(st, table: str, version: int | None):
@@ -235,14 +137,26 @@ def _ws_first_touch(st, table: str, version: int | None):
     caller's own rule), so any touch that is not an empty set means the
     table exists. Runs on the shared cached state: call under
     ``_locked_state``."""
-    v = version
-    while v is not None and v in st.by_v:
+    for v in _ancestry(st.by_v, version):
         t = st.by_v[v]["tables"].get(table)
         if t is not None:
             exists = bool(t["set"]) if "set" in t else True
             return exists, t.get("partition_by", "unknown")
-        v = _state_parent(st, v)
     return False, "unknown"
+
+
+def _log_at(ws_path: str, version: int | None = None, ref: str | None = None):
+    """``(log, version)`` for a read at ``version`` or ``ref`` — by the
+    ``main`` rule, ``main``'s head when neither is given (``None`` on an
+    empty log)."""
+    if ref is not None:
+        if version is not None:
+            raise ValueError("pass version or ref, not both")
+        version = _resolve_ref(ws_path, ref)
+    log = _read_log(ws_path)
+    if version is None and log:
+        version = _resolve_ref(ws_path, "main")
+    return log, version
 
 
 def ws_commit(
@@ -318,27 +232,11 @@ def ws_commit(
     os.makedirs(ws_path, exist_ok=True)
     written: dict[str, str] = {}  # table -> data dir, written ONCE
     for attempt in range(max_retries + 1):
-        refs = _read_refs(ws_path)
-        if branch in refs["tags"]:
-            raise ValueError(f"cannot commit to tag {branch!r}")
-        if branch != "main" and branch not in refs["branches"]:
-            raise ValueError(f"unknown branch {branch!r}")
+        refs, parent_v, _parent_entry, head = _plan_commit(ws_path, branch)
         with _locked_state(ws_path) as st:
-            head = st.log[-1]["version"] if st.log else None
-            if branch == "main":
-                parent_v = refs["branches"].get("main", head)
-            else:
-                parent_v = refs["branches"][branch]
-            touch = {
-                name: (
-                    _ws_first_touch(st, name, parent_v)
-                    if parent_v is not None
-                    else (False, "unknown")
-                )
-                for name in dfs
-            }
+            touch = {name: _ws_first_touch(st, name, parent_v) for name in dfs}
         if idempotency_key is not None:
-            found = _ws_find_idempotent(
+            found = _find_idempotent(
                 ws_path, refs, branch, parent_v, idempotency_key
             )
             if found is not None:
@@ -371,75 +269,25 @@ def ws_commit(
                         w = w.partitionBy(*pby)
                     w.parquet(ddir)
                 written[name] = ddir
-            if mode == "overwrite" or not exists:
-                tables[name] = {"set": [written[name]], "partition_by": pby}
-            else:
-                tables[name] = {"adds": [written[name]], "partition_by": pby}
+            kind = "set" if mode == "overwrite" or not exists else "adds"
+            tables[name] = {kind: [written[name]], "partition_by": pby}
+        entry = {
+            "version": version,
+            "ts_ms": int(time.time() * 1000) if ts_ms is None else ts_ms,
+            "tables": tables,
+        }
+        if parent_v is not None:
+            entry["parent"] = parent_v
+        if idempotency_key is not None:
+            entry["idempotency_key"] = idempotency_key
         try:
-            with _log_lock(ws_path):
-                tail = _read_tail(ws_path)
-                cur_head = tail["version"] if tail else None
-                if cur_head != head:
-                    raise CommitConflict(
-                        f"workspace {ws_path} head moved {head} -> "
-                        f"{cur_head} during commit of v{version}; "
-                        "re-read and retry"
-                    )
-                cur_refs = _read_refs(ws_path)
-                # A branch pointer can move WITHOUT a log append (a
-                # fast-forward ws_merge_branch is a pure pointer move),
-                # which the head CAS cannot see — a commit planned
-                # before such a merge would silently revert it (ADVICE
-                # r10, medium). Re-verify the pointer in-section. A
-                # MISSING branch is a concurrent ws_delete_branch — a
-                # conflict, not a silent branch re-creation (ADVICE r11,
-                # low); missing "main" is the lazy-pin case (main is
-                # undeletable) and passes.
-                cur = cur_refs["branches"].get(branch, _MISSING)
-                if cur is _MISSING and branch != "main":
-                    raise CommitConflict(
-                        f"branch {branch!r} at {ws_path} was deleted "
-                        f"during commit of v{version}; re-read and retry"
-                    )
-                if cur is not _MISSING and cur != parent_v:
-                    raise CommitConflict(
-                        f"branch {branch!r} at {ws_path} moved "
-                        f"{parent_v} -> "
-                        f"{cur_refs['branches'].get(branch)} during "
-                        f"commit of v{version}; re-read and retry"
-                    )
-                entry = {
-                    "version": version,
-                    "ts_ms": (
-                        int(time.time() * 1000) if ts_ms is None else ts_ms
-                    ),
-                    "tables": tables,
-                }
-                if parent_v is not None:
-                    entry["parent"] = parent_v
-                if idempotency_key is not None:
-                    entry["idempotency_key"] = idempotency_key
-                _append_entry(ws_path, entry)
-                cur_refs["branches"][branch] = version
-                if idempotency_key is not None:
-                    if "keys_floor" not in cur_refs:
-                        # Same one-shot legacy scan as the table level:
-                        # floor 0 (pure O(1) misses) unless some
-                        # pre-index commit carries an unindexed key.
-                        legacy_keyed = any(
-                            "idempotency_key" in e
-                            and e["version"] != version
-                            for e in _read_log(ws_path)
-                        )
-                        cur_refs["keys_floor"] = (
-                            head if legacy_keyed and head is not None
-                            else 0
-                        )
-                    cur_refs.setdefault("keys", {})[
-                        f"{branch}\x00{idempotency_key}"
-                    ] = version
-                    _prune_keys(cur_refs, keys_max)
-                _write_refs(ws_path, cur_refs)
+            # The pointer re-check matters here: a fast-forward
+            # ws_merge_branch moves a pointer WITHOUT a log append, and
+            # a commit planned before it would silently revert it.
+            _append_commit(
+                ws_path, entry, expected_head=head, move_branch=branch,
+                expected_branch_v=parent_v, keys_max=keys_max,
+            )
             return version
         except CommitConflict:
             if attempt >= max_retries:
@@ -459,21 +307,12 @@ def ws_read(
     is WORKSPACE-scoped, two ``ws_read`` calls with the same version (or
     the same tag/branch) are guaranteed mutually consistent — the
     cross-table read contract m34 oracle-checks."""
-    from apache_iceberg_spark.catalog.snapshots import _read_dirs
-
-    if ref is not None:
-        if version is not None:
-            raise ValueError("pass version or ref, not both")
-        version = ws_resolve_ref(ws_path, ref)
-    log = _read_log(ws_path)
+    log, version = _log_at(ws_path, version, ref)
     if not log:
         raise ValueError(f"no commits at {ws_path}")
-    if version is None and "main" in _read_refs(ws_path)["branches"]:
-        version = ws_resolve_ref(ws_path, "main")
     paths = _resolve_table(log, table, version)
     if paths is None:
-        at = version if version is not None else log[-1]["version"]
-        raise ValueError(f"table {table!r} does not exist at v{at}")
+        raise ValueError(f"table {table!r} does not exist at v{version}")
     return _read_dirs(spark, paths)
 
 
@@ -491,11 +330,9 @@ def ws_read_at(spark: SparkSession, ws_path: str, name: str) -> DataFrame:
     where a ref scopes view text, table set, and table contents
     together. Tables win a (disallowed but legacy-possible) name
     collision, matching ws_create_view's namespace rule."""
-    from apache_iceberg_spark.catalog.snapshots import parse_at_ref
-
     table, ref = parse_at_ref(name)
     log = _read_log(ws_path)
-    version = ws_resolve_ref(ws_path, ref)
+    version = _resolve_ref(ws_path, ref)
     if (
         _resolve_table(log, table, version) is None
         and table in _resolve_views(log, version)
@@ -516,8 +353,6 @@ def ws_read_incremental(
     audit input of the multi-table branch-WAP (m36): gates scan ONLY
     the staged delta files, never the table. Raises if files were
     rewritten in the range (the diff is then not an append delta)."""
-    from apache_iceberg_spark.catalog.snapshots import _read_dirs
-
     log = _read_log(ws_path)
     base = _resolve_table(log, table, from_version)
     target = _resolve_table(log, table, to_version)
@@ -540,81 +375,24 @@ def ws_list_versions(ws_path: str) -> list[dict]:
 
 
 def ws_list_tables(ws_path: str, version: int | None = None) -> list[str]:
-    """Every table that exists at ``version`` (default: main / head)."""
-    log = _read_log(ws_path)
-    if version is None and "main" in _read_refs(ws_path)["branches"]:
-        version = ws_resolve_ref(ws_path, "main")
+    """Every table that exists at ``version`` (default: main's head)."""
+    log, version = _log_at(ws_path, version)
     names = {n for e in log for n in e["tables"]}
     return sorted(
         n for n in names if _resolve_table(log, n, version) is not None
     )
 
 
-def ws_resolve_ref(ws_path: str, ref: str) -> int:
-    refs = _read_refs(ws_path)
-    if ref in refs["tags"]:
-        return refs["tags"][ref]
-    if ref in refs["branches"]:
-        return refs["branches"][ref]
-    if ref == "main":
-        log = _read_log(ws_path)
-        if not log:
-            raise ValueError(f"no commits at {ws_path}")
-        return log[-1]["version"]
-    raise ValueError(f"unknown ref {ref!r} at {ws_path}")
-
-
 def ws_create_tag(ws_path: str, name: str, version: int | None = None) -> int:
     """Pin a workspace version under a name — because the version spans
     EVERY table, the tag is a consistent cross-table snapshot ('the
     state we audited'), which is exactly what a per-table tag cannot
-    promise."""
-    log = _read_log(ws_path)
-    if not log:
-        raise ValueError(f"no commits at {ws_path}")
+    promise. ``version`` defaults to main's head."""
     if version is None:
-        version = ws_resolve_ref(ws_path, "main")
-    elif version not in {e["version"] for e in log}:
+        version = _resolve_ref(ws_path, "main")
+    elif version not in {e["version"] for e in _read_log(ws_path)}:
         raise ValueError(f"version {version} not found")
-    with _log_lock(ws_path):
-        refs = _read_refs(ws_path)
-        if name in refs["tags"] or name in refs["branches"]:
-            raise ValueError(f"ref {name!r} already exists")
-        refs["tags"][name] = version
-        _write_refs(ws_path, refs)
-    return version
-
-
-def ws_create_branch(
-    ws_path: str, name: str, from_ref: str = "main"
-) -> int:
-    """A movable pointer spanning EVERY table — Nessie's actual branch
-    model (a branch of the catalog, not of one table): multi-table
-    work-in-progress accumulates on it invisibly to main until one
-    merge publishes everything."""
-    version = ws_resolve_ref(ws_path, from_ref)
-    log = _read_log(ws_path)
-    with _log_lock(ws_path):
-        refs = _ensure_main(ws_path, _read_refs(ws_path), log)
-        if name in refs["branches"] or name in refs["tags"]:
-            raise ValueError(f"ref {name!r} already exists")
-        refs["branches"][name] = version
-        _write_refs(ws_path, refs)
-    return version
-
-
-def ws_delete_branch(ws_path: str, name: str) -> None:
-    """Abandon a workspace branch: one ref deletion — the reject path of
-    the multi-table WAP, costing zero data operations for ANY number of
-    staged tables."""
-    if name == "main":
-        raise ValueError("cannot delete main")
-    with _log_lock(ws_path):
-        refs = _read_refs(ws_path)
-        if name not in refs["branches"]:
-            raise ValueError(f"unknown branch {name!r}")
-        del refs["branches"][name]
-        _write_refs(ws_path, refs)
+    return _create_ref(ws_path, "tags", name, version)
 
 
 def ws_merge_branch(
@@ -642,13 +420,13 @@ def ws_merge_branch(
         # the lock would drop a commit that landed in between.
         log = _read_log(ws_path)
         by_v = {e["version"]: e for e in log}
-        refs = _ensure_main(ws_path, _read_refs(ws_path), log)
+        refs = _ensure_main(ws_path, _read_refs(ws_path))
         for r in (src, into):
             if r not in refs["branches"]:
                 raise ValueError(f"unknown branch {r!r}")
         src_v, into_v = refs["branches"][src], refs["branches"][into]
-        src_chain = _chain(by_v, src_v)
-        into_chain = _chain(by_v, into_v)
+        src_chain = list(_ancestry(by_v, src_v))
+        into_chain = list(_ancestry(by_v, into_v))
         if src_v in into_chain:
             return into_v  # up to date (includes equal heads)
         if into_v in src_chain:
@@ -666,8 +444,7 @@ def ws_merge_branch(
         names = {
             n
             for v in (src_v, into_v)
-            for c in [_chain(by_v, v)]
-            for x in c
+            for x in _ancestry(by_v, v)
             for n in by_v[x]["tables"]
         }
         tables: dict[str, dict] = {}
@@ -747,21 +524,10 @@ def ws_merge_branch(
             )
         if not tables and not views:
             return into_v
-        head = log[-1]["version"]
-        version = head + 1
-        entry = {
-            "version": version,
-            "ts_ms": int(time.time() * 1000) if ts_ms is None else ts_ms,
-            "parent": into_v,
-            "merged_from": src_v,
-            "tables": tables,
-        }
+        entry = {"merged_from": src_v, "tables": tables}
         if views:
             entry["views"] = views
-        _append_entry(ws_path, entry)
-        refs["branches"][into] = version
-        _write_refs(ws_path, refs)
-        return version
+        return _commit_meta_locked(ws_path, log, into, into_v, ts_ms, entry)
 
 
 def _resolve_any(ws_path: str, log: list[dict], ref) -> int:
@@ -770,7 +536,7 @@ def _resolve_any(ws_path: str, log: list[dict], ref) -> int:
         if ref not in {e["version"] for e in log}:
             raise ValueError(f"version {ref} not found")
         return ref
-    return ws_resolve_ref(ws_path, ref)
+    return _resolve_ref(ws_path, ref)
 
 
 def ws_diff(ws_path: str, from_ref, to_ref) -> dict[str, dict]:
@@ -829,7 +595,7 @@ def ws_transplant(
     with _log_lock(ws_path):
         log = _read_log(ws_path)
         by_v = {e["version"]: e for e in log}
-        refs = _ensure_main(ws_path, _read_refs(ws_path), log)
+        refs = _ensure_main(ws_path, _read_refs(ws_path))
         if onto not in refs["branches"]:
             raise ValueError(f"unknown branch {onto!r}")
         if src_version not in by_v:
@@ -884,21 +650,10 @@ def ws_transplant(
             tables[n] = delta
         if not tables:
             return onto_v
-        head = log[-1]["version"]
-        version = head + 1
-        _append_entry(
-            ws_path,
-            {
-                "version": version,
-                "ts_ms": int(time.time() * 1000) if ts_ms is None else ts_ms,
-                "parent": onto_v,
-                "transplanted_from": src_version,
-                "tables": tables,
-            },
+        return _commit_meta_locked(
+            ws_path, log, onto, onto_v, ts_ms,
+            {"transplanted_from": src_version, "tables": tables},
         )
-        refs["branches"][onto] = version
-        _write_refs(ws_path, refs)
-        return version
 
 
 def ws_rollback(
@@ -921,14 +676,9 @@ def ws_rollback(
             raise ValueError(
                 f"version {version} not found (have {sorted(by_v)})"
             )
-        refs = _ensure_main(ws_path, _read_refs(ws_path), log)
-        if branch in refs["tags"]:
-            raise ValueError(f"cannot roll back a tag {branch!r}")
-        if branch not in refs["branches"]:
-            raise ValueError(f"unknown branch {branch!r}")
+        _refs, head_v, _entry, _head = _plan_commit(ws_path, branch)
         names = {n for e in log for n in e["tables"]}
         tables: dict[str, dict] = {}
-        head_v = refs["branches"][branch]
         for n in sorted(names):
             paths = _resolve_table(log, n, version)
             if paths is None:
@@ -951,21 +701,10 @@ def ws_rollback(
         for n in _resolve_views(log, head_v):
             if n not in target_views:
                 views[n] = {"drop": True}
-        head = log[-1]["version"]
-        new_version = head + 1
-        entry = {
-            "version": new_version,
-            "ts_ms": int(time.time() * 1000) if ts_ms is None else ts_ms,
-            "parent": refs["branches"][branch],
-            "rolled_back_to": version,
-            "tables": tables,
-        }
+        entry = {"rolled_back_to": version, "tables": tables}
         if views:
             entry["views"] = views
-        _append_entry(ws_path, entry)
-        refs["branches"][branch] = new_version
-        _write_refs(ws_path, refs)
-        return new_version
+        return _commit_meta_locked(ws_path, log, branch, head_v, ts_ms, entry)
 
 
 def ws_remove_orphans(
@@ -1012,33 +751,6 @@ def ws_remove_orphans(
     return removed
 
 
-def _ws_ref_protected(
-    ws_path: str, log: list[dict], heads_only: bool = False
-) -> set[int]:
-    """Every workspace version reachable from a ref (tag pins + branch
-    heads + full parent ancestry) — exempt from expiry, mirroring the
-    table-level `_ref_protected_versions` (VERDICT r9 ask #1 applied to
-    the workspace layer): a tagged cross-table state is addressable
-    until the tag is deleted."""
-    refs = _read_refs(ws_path)
-    heads = set(refs["branches"].values()) | set(refs["tags"].values())
-    if heads_only:
-        # Streaming retention mode (round 11): a linear main history is
-        # entirely reachable from its own head, so ancestry protection
-        # would make a one-commit-per-micro-batch workspace forever
-        # untruncatable; heads-only cuts to the ts window and keep_last
-        # while materialization keeps the boundary entries readable.
-        return heads
-    by_v = {e["version"]: e for e in log}
-    protected: set[int] = set()
-    for h in heads:
-        for v in _chain(by_v, h):
-            if v in protected:
-                break
-            protected.add(v)
-    return protected
-
-
 def ws_expire_versions(
     ws_path: str, older_than_ms: int, keep_last: int = 1,
     truncate_history: bool = False,
@@ -1056,18 +768,9 @@ def ws_expire_versions(
 
     with _log_lock(ws_path):
         log = _read_log(ws_path)
-        if len(log) <= keep_last:
-            return []
-        protected = {e["version"] for e in log[-keep_last:]}
-        protected |= _ws_ref_protected(
-            ws_path, log, heads_only=truncate_history
+        expired = _expirable(
+            ws_path, log, older_than_ms, keep_last, truncate_history
         )
-        expired = [
-            e
-            for e in log[:-keep_last]
-            if e["ts_ms"] < older_than_ms
-            and e["version"] not in protected
-        ]
         if not expired:
             return []
         expired_vs = {e["version"] for e in expired}
@@ -1107,17 +810,7 @@ def ws_expire_versions(
             keep.append(e)
         _touch_lock(ws_path)  # heartbeat before the long rewrite
         _write_log(ws_path, keep)
-        # Drop indexed idempotency keys whose version was expired — the
-        # key's retry window has passed (table-level twin does the same).
-        refs = _read_refs(ws_path)
-        if refs.get("keys"):
-            kept_vs = {e["version"] for e in keep}
-            pruned = {
-                k: v for k, v in refs["keys"].items() if v in kept_vs
-            }
-            if len(pruned) != len(refs["keys"]):
-                refs["keys"] = pruned
-                _write_refs(ws_path, refs)
+        _drop_expired_keys(ws_path, keep)
     still = {
         os.path.normpath(p)
         for e in keep
@@ -1149,6 +842,33 @@ def ws_expire_versions(
 # tag sees the tables as that tag pinned them.
 
 
+def _commit_meta_locked(
+    ws_path: str,
+    log: list[dict],
+    branch: str,
+    parent_v: int,
+    ts_ms: int | None,
+    payload: dict,
+) -> int:
+    """Commit a metadata-only entry planned INSIDE the commit lock from
+    ``log``: ``payload`` (tables, views, provenance) gets the next
+    version and ``parent_v`` as its parent, and goes through the in-lock
+    commit step, moving ``branch`` from ``parent_v``. Returns the new
+    version."""
+    head = log[-1]["version"]
+    entry = {
+        "version": head + 1,
+        "ts_ms": int(time.time() * 1000) if ts_ms is None else ts_ms,
+        "parent": parent_v,
+        **payload,
+    }
+    _commit_locked(
+        ws_path, entry, expected_head=head, move_branch=branch,
+        expected_branch_v=parent_v,
+    )
+    return head + 1
+
+
 def _ws_meta_commit(
     ws_path: str,
     branch: str,
@@ -1161,33 +881,17 @@ def _ws_meta_commit(
     holding the lock is cheap and removes the CAS retry loop data
     commits need)."""
     with _log_lock(ws_path):
-        log = _read_log(ws_path)
-        if not log:
+        _refs, parent_v, _entry, head = _plan_commit(ws_path, branch)
+        if head is None:
             raise ValueError(f"no commits at {ws_path}")
-        head = log[-1]["version"]
-        refs = _read_refs(ws_path)
-        if branch in refs["tags"]:
-            raise ValueError(f"cannot commit to tag {branch!r}")
-        if branch == "main":
-            parent_v = refs["branches"].get("main", head)
-        elif branch in refs["branches"]:
-            parent_v = refs["branches"][branch]
-        else:
-            raise ValueError(f"unknown branch {branch!r}")
+        log = _read_log(ws_path)
         tables, views = plan(log, parent_v)
-        version = head + 1
-        entry = {
-            "version": version,
-            "ts_ms": int(time.time() * 1000) if ts_ms is None else ts_ms,
-            "tables": tables,
-            "parent": parent_v,
-        }
+        payload = {"tables": tables}
         if views:
-            entry["views"] = views
-        _append_entry(ws_path, entry)
-        refs["branches"][branch] = version
-        _write_refs(ws_path, refs)
-        return version
+            payload["views"] = views
+        return _commit_meta_locked(
+            ws_path, log, branch, parent_v, ts_ms, payload
+        )
 
 
 def ws_rename_table(
@@ -1273,7 +977,7 @@ def _resolve_views(
         )
     out: dict[str, str] = {}
     seen: set[str] = set()
-    for v in _chain(by_v, version):
+    for v in _ancestry(by_v, version):
         for name, spec in by_v[v].get("views", {}).items():
             if name in seen:
                 continue
@@ -1333,14 +1037,7 @@ def ws_list_views(
 ) -> dict[str, str]:
     """``{name: sql}`` for every view live at the version/ref (default:
     main head)."""
-    if ref is not None:
-        if version is not None:
-            raise ValueError("pass version or ref, not both")
-        version = ws_resolve_ref(ws_path, ref)
-    log = _read_log(ws_path)
-    if version is None and "main" in _read_refs(ws_path)["branches"]:
-        version = ws_resolve_ref(ws_path, "main")
-    return _resolve_views(log, version)
+    return _resolve_views(*_log_at(ws_path, version, ref))
 
 
 def ws_read_view(
@@ -1358,19 +1055,10 @@ def ws_read_view(
     version; two view reads at one tag are mutually consistent exactly
     like two ``ws_read`` calls. Lazy: returns the composed DataFrame,
     nothing is collected here."""
-    if ref is not None:
-        if version is not None:
-            raise ValueError("pass version or ref, not both")
-        version = ws_resolve_ref(ws_path, ref)
-    log = _read_log(ws_path)
-    if version is None and "main" in _read_refs(ws_path)["branches"]:
-        version = ws_resolve_ref(ws_path, "main")
+    log, version = _log_at(ws_path, version, ref)
     views = _resolve_views(log, version)
     if name not in views:
-        at = version if version is not None else (
-            log[-1]["version"] if log else "?"
-        )
-        raise ValueError(f"view {name!r} does not exist at v{at}")
+        raise ValueError(f"view {name!r} does not exist at v{version}")
     # Transient registrations (round 15): spark.sql resolves the view
     # text against the temp views eagerly at analysis time, so they are
     # dropped before returning — leaving them registered made a LATER

@@ -1155,7 +1155,7 @@ def test_ws_expiry_protects_refs_and_materializes(spark):
     # must be materialized to stay readable. NOTE: v1 is main's
     # ancestry, hence protected FOREVER while main descends from it —
     # the Nessie unreachable-commit rule.
-    import apache_iceberg_spark.catalog.workspace as W
+    import apache_iceberg_spark.catalog.snapshots as S
 
     ws_create_branch(ws, "tmp", from_ref="audit")
     v5 = ws_commit(
@@ -1163,10 +1163,10 @@ def test_ws_expiry_protects_refs_and_materializes(spark):
         branch="tmp", ts_ms=50_000,
     )
     ws_delete_branch(ws, "tmp")
-    with W._log_lock(ws):
-        refs = W._read_refs(ws)
+    with S._log_lock(ws):
+        refs = S._read_refs(ws)
         del refs["tags"]["audit"]
-        W._write_refs(ws, refs)
+        S._write_refs(ws, refs)
     expired2 = ws_expire_versions(ws, older_than_ms=10_000, keep_last=1)
     assert expired2 == [2]  # v1 stays: main's ancestry is ref-reachable
     (e5,) = [e for e in ws_list_versions(ws) if e["version"] == v5]

@@ -557,18 +557,15 @@ def test_materialized_entry_does_not_phantom_resolve_foreign_lineage(spark):
 
 
 def test_table_level_root_terminates_ancestry():
-    from apache_iceberg_spark.catalog.snapshots import (
-        _ancestry,
-        _parent_of,
-    )
+    from apache_iceberg_spark.catalog.snapshots import _ancestry
 
     by_v = {
         1: {"version": 1, "path": "/p1"},
         3: {"version": 3, "paths": ["/p1", "/b"], "root": True},
         4: {"version": 4, "adds": ["/c"], "parent": 3},
     }
-    assert _parent_of(by_v, 3) is None
-    assert _ancestry(by_v, 4) == [4, 3]  # stops at the root, not v1
+    assert list(_ancestry(by_v, 3)) == [3]  # the root has no parent
+    assert list(_ancestry(by_v, 4)) == [4, 3]  # stops at the root, not v1
 
 
 # ---------------------------------------------------------------------------
@@ -608,15 +605,14 @@ def test_idempotency_miss_is_o1_when_fully_indexed(spark):
     over a stream's lifetime (round 12 made the fully-indexed miss a
     pure refs-dict probe with zero log I/O)."""
     import apache_iceberg_spark.catalog.snapshots as S
-    import apache_iceberg_spark.catalog.workspace as W
 
     refs = {"branches": {"b": 500}, "tags": {}, "keys": {}, "keys_floor": 0}
 
     def boom(*a, **k):  # noqa: ANN002
         raise AssertionError("log-state access on a fully-indexed miss")
 
-    orig_state, orig_anc = S._refresh_state, S._state_ancestry
-    S._refresh_state, S._state_ancestry = boom, boom
+    orig_state, orig_anc = S._refresh_state, S._ancestry
+    S._refresh_state, S._ancestry = boom, boom
     try:
         # nonexistent path: any state access would boom (or OSError)
         assert (
@@ -624,11 +620,11 @@ def test_idempotency_miss_is_o1_when_fully_indexed(spark):
             is None
         )
         assert (
-            W._ws_find_idempotent("/nonexistent/ws", refs, "b", 500, "nope")
+            S._find_idempotent("/nonexistent/ws", refs, "b", 500, "nope")
             is None
         )
     finally:
-        S._refresh_state, S._state_ancestry = orig_state, orig_anc
+        S._refresh_state, S._ancestry = orig_state, orig_anc
 
 
 def test_legacy_keyed_history_sets_floor_and_still_found(spark, ref_table):
@@ -675,8 +671,8 @@ def test_legacy_keyed_history_sets_floor_and_still_found(spark, ref_table):
 def test_ws_keys_pruned_on_expiry(spark):
     """Indexed keys whose commit was expired are dropped — their retry
     window has passed; keys of live commits survive."""
+    from apache_iceberg_spark.catalog.snapshots import _read_refs
     from apache_iceberg_spark.catalog.workspace import (
-        _read_refs,
         ws_commit,
         ws_create_branch,
         ws_delete_branch,

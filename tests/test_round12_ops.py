@@ -651,10 +651,8 @@ def test_keys_max_bounds_refs_and_keeps_recent_idempotency(spark, ref_table):
 
 
 def test_ws_keys_max_bounds_refs(spark):
-    from apache_iceberg_spark.catalog.workspace import (
-        _read_refs,
-        ws_commit,
-    )
+    from apache_iceberg_spark.catalog.snapshots import _read_refs
+    from apache_iceberg_spark.catalog.workspace import ws_commit
 
     ws = tempfile.mkdtemp(prefix="r12_keysmax_")
     for i in range(25):

@@ -150,11 +150,11 @@ def test_bounded_state_refuses_concurrent_stream(spark):
         .start()
     )
     try:
+        before = spark.conf.get("spark.sql.shuffle.partitions")
         with pytest.raises(RuntimeError, match="refusing to narrow"):
             with _bounded_state(spark, 64):
                 pass
         # and the conf was left untouched by the refusal
-        before = spark.conf.get("spark.sql.shuffle.partitions")
         assert before == spark.conf.get("spark.sql.shuffle.partitions")
     finally:
         q.stop()

@@ -74,9 +74,9 @@ _write_ordered_range_files(batch_docs, "doc_id", 4, src)
 src_dirhack = src
 mark("fixture write")
 outdir = os.path.join(base, "admitted")
-from apache_iceberg_spark.tables import PARALLEL_CHUNK_BYTES
+from apache_iceberg_spark.tables import FOLD_CHUNK_BYTES
 batch_bytes = max(os.path.getsize(os.path.join(src_dirhack, f)) for f in os.listdir(src_dirhack))
-batch_parts = max(1, min(spark.sparkContext.defaultParallelism, -(-batch_bytes // PARALLEL_CHUNK_BYTES)))
+batch_parts = max(1, min(spark.sparkContext.defaultParallelism, -(-batch_bytes // FOLD_CHUNK_BYTES)))
 print("batch_parts", batch_parts)
 
 
