@@ -131,9 +131,13 @@ RECHECK = frozenset({
     "m11_incremental_append_scan",
     "m12_schema_evolution_scan",
     "m13_merge_on_read_scan",
+    "m19_partitions_metadata",
     "m20_snapshot_rollback",
     "m21_orphan_cleanup",
     "m22_snapshot_expiry",
+    "m23_metadata_only_aggregates",
+    "m26_clustering_depth_report",
+    "m28_compaction_plan",
     "m29_branch_tag_scan",
     "m30_branch_wap",
     "m31_ref_diff",
@@ -170,6 +174,8 @@ RECHECK = frozenset({
     "m61_conditional_merge",
     "m62_mor_dels_inventory",
     "m63_merge_schema_evolution",
+    "m7_manifest_pruned_scan",
+    "m8_zorder_clustering",
     "mm10_vlm_sequence_packing",
     "mm11_aspect_bucket_report",
     "mm12_letterbox_pad_report",

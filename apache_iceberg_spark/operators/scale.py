@@ -390,7 +390,7 @@ def m7_manifest_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from apache_iceberg_spark.catalog.manifests import (
-        scan_pruned,
+        scan_pruned_box,
         write_with_manifest,
     )
 
@@ -401,12 +401,16 @@ def m7_manifest_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     write_with_manifest(
         o, path, cluster_by="o_orderdate", track_cols=["o_orderdate"]
     )
-    df, _total, _read = scan_pruned(
+    df, _total, _read = scan_pruned_box(
         spark,
         path,
-        "o_orderdate",
-        datetime.datetime(1995, 3, 1),
-        datetime.datetime(1995, 3, 31),
+        [
+            (
+                "o_orderdate",
+                datetime.datetime(1995, 3, 1),
+                datetime.datetime(1995, 3, 31),
+            )
+        ],
     )
     return df.select("o_orderkey", "o_orderdate", "o_totalprice")
 
@@ -1037,6 +1041,25 @@ def m18_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _required_bounds(op: str, tbl: str, col: str) -> tuple[F.Column, F.Column]:
+    """``min_<col>``/``max_<col>`` of a ``footer_stats`` frame for an
+    operator that ANSWERS from metadata (m19, m23): a file without usable
+    footer statistics (NULL bounds) fails the query in-plan with a
+    message naming ``tbl.col`` and the file, instead of silently dropping
+    out of MIN/MAX (real Iceberg would fall back to a data scan; these
+    operators' contract is the footer-only answer)."""
+    lo, hi = F.col(f"min_{col}"), F.col(f"max_{col}")
+    missing = lo.isNull() | hi.isNull()
+    err = F.raise_error(
+        F.concat(
+            F.lit(f"{op}: footer statistics missing for {tbl}.{col} in "),
+            F.col("file_path"),
+            F.lit(" — cannot answer from metadata; scan the data instead"),
+        )
+    )
+    return F.when(missing, err).otherwise(lo), F.when(missing, err).otherwise(hi)
+
+
 @register(
     "m19_partitions_metadata",
     oracle="""
@@ -1055,10 +1078,11 @@ def m18_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     "written hive-partitioned by month (repartitioned on the partition "
     "key first, so each month lands in exactly one file — the compacted "
     "layout), then the per-partition listing is built ENTIRELY from "
-    "parquet FOOTER statistics — a distributed mapInPandas over the file "
-    "list reads each footer's row count and o_totalprice bounds; no data "
-    "page is ever touched. The oracle recomputes the same stats from the "
-    "rows, proving metadata == data. At 100 TB this is the O(files) "
+    "parquet FOOTER statistics — the catalog/manifests.py footer_stats "
+    "kernel reads each footer's row count and o_totalprice bounds; no "
+    "data page is ever touched, and a file without usable stats fails "
+    "the query naming the file. The oracle recomputes the same stats "
+    "from the rows, proving metadata == data. At 100 TB this is the O(files) "
     "planning query that answers 'how big is each partition and what do "
     "its bounds cover' without scanning the table.",
     tags=("scale", "metadata", "manifest"),
@@ -1066,17 +1090,8 @@ def m18_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 def m19_partitions_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import tempfile
-    from collections.abc import Iterator
 
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    from apache_iceberg_spark.catalog.manifests import _local_path
+    from apache_iceberg_spark.catalog.manifests import footer_stats
 
     o = load_table(spark, sf_dir, "orders").withColumn(
         "o_month", F.date_format("o_orderdate", "yyyy-MM")
@@ -1089,58 +1104,10 @@ def m19_partitions_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(path)
     )
     files = spark.read.parquet(path).inputFiles()
-
-    out_schema = StructType(
-        [
-            StructField("file_path", StringType()),
-            StructField("record_count", LongType()),
-            StructField("min_price", DoubleType()),
-            StructField("max_price", DoubleType()),
-        ]
-    )
-
-    def footer_stats(batches: Iterator) -> Iterator:
-        import pandas as pd
-        import pyarrow.parquet as pq
-
-        for pdf in batches:
-            rows = []
-            for uri in pdf["file_path"]:
-                md = pq.ParquetFile(_local_path(uri)).metadata
-                names = [
-                    md.schema.column(i).name for i in range(md.num_columns)
-                ]
-                idx = names.index("o_totalprice")
-                mins, maxs = [], []
-                for rg in range(md.num_row_groups):
-                    st = md.row_group(rg).column(idx).statistics
-                    # Same footer-stats guard as m23 (ADVICE r7): a file
-                    # written without column statistics cannot feed the
-                    # metadata listing — fail loudly, not AttributeError.
-                    if st is None or not st.has_min_max:
-                        raise RuntimeError(
-                            f"m19: footer statistics missing for "
-                            f"o_totalprice in {uri} (row group {rg})"
-                        )
-                    mins.append(st.min)
-                    maxs.append(st.max)
-                rows.append(
-                    {
-                        "file_path": uri,
-                        "record_count": md.num_rows,
-                        "min_price": min(mins),
-                        "max_price": max(maxs),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in out_schema])
-
-    manifest = (
-        spark.createDataFrame([(f,) for f in files], "file_path string")
-        .repartition(min(len(files), 32) or 1)
-        .mapInPandas(footer_stats, out_schema)
-    )
+    stats = footer_stats(spark, files, [o.schema["o_totalprice"]])
+    lo, hi = _required_bounds("m19", "orders", "o_totalprice")
     return (
-        manifest.withColumn(
+        stats.withColumn(
             "partition",
             F.regexp_extract(F.col("file_path"), r"o_month=([^/]+)", 1),
         )
@@ -1148,8 +1115,8 @@ def m19_partitions_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count("*").alias("n_files"),
             F.sum("record_count").alias("record_count"),
-            F.min("min_price").alias("min_price"),
-            F.max("max_price").alias("max_price"),
+            F.min(lo).alias("min_price"),
+            F.max(hi).alias("max_price"),
         )
     )
 
@@ -1271,12 +1238,11 @@ def m22_snapshot_expiry(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- m23: metadata-only aggregates ------------------------------------------
 
-#: (table, column) pairs answered purely from parquet footer statistics.
-M23_TARGETS = [
-    ("lineitem", "l_quantity"),
-    ("lineitem", "l_extendedprice"),
-    ("orders", "o_totalprice"),
-]
+#: table → columns answered purely from parquet footer statistics.
+M23_TARGETS = {
+    "lineitem": ["l_quantity", "l_extendedprice"],
+    "orders": ["o_totalprice"],
+}
 
 
 @register(
@@ -1298,98 +1264,57 @@ M23_TARGETS = [
     doc="METADATA-ONLY aggregates: COUNT(*)/MIN/MAX answered purely from "
     "parquet FOOTER statistics without reading a single data page — the "
     "oracle runs the same aggregates over the actual DATA, so the green "
-    "hash PROVES metadata == data (m19's footer machinery, turned from "
-    "introspection into query answering). This is Iceberg's "
-    "metadata-query optimization made explicit: the engine m7 uses "
+    "hash PROVES metadata == data (the footer_stats kernel of "
+    "catalog/manifests.py, turned from introspection into query "
+    "answering; one footer pass per table covers all its columns, and "
+    "a file without usable stats fails the query naming the file). "
+    "This is Iceberg's metadata-query optimization made explicit: the engine m7 uses "
     "footer stats to PRUNE with, m23 uses them to ANSWER with — at "
     "100 TB a count/min/max over a petabyte table is a manifest scan "
-    "(thousands of footer rows distributed over mapInPandas), "
+    "(thousands of footer rows distributed by footer_stats), "
     "milliseconds instead of a full-table pass. Exactness caveat "
     "handled: parquet truncates string statistics but stores numeric "
     "min/max exactly, so only numeric columns are answered this way.",
     tags=("metadata", "iceberg", "scale"),
 )
 def m23_metadata_only_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
+    from functools import reduce
 
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
+    from apache_iceberg_spark.catalog.manifests import footer_stats
 
-    from apache_iceberg_spark.catalog.manifests import _local_path
-
-    out_schema = StructType(
-        [
-            StructField("tbl", StringType()),
-            StructField("col", StringType()),
-            StructField("record_count", LongType()),
-            StructField("min_value", DoubleType()),
-            StructField("max_value", DoubleType()),
-        ]
-    )
-
-    # (tbl, col, file) work list — every parquet file of every target
-    # table; at Iceberg scale this frame comes from the manifest list.
-    work = []
-    for tbl, col in M23_TARGETS:
-        for f in spark.read.parquet(f"{sf_dir}/{tbl}.parquet").inputFiles():
-            work.append((tbl, col, f))
-
-    def footer_aggs(batches: Iterator) -> Iterator:
-        import pandas as pd
-        import pyarrow.parquet as pq
-
-        for pdf in batches:
-            rows = []
-            for tbl, col, uri in zip(pdf["tbl"], pdf["col"], pdf["file"]):
-                md = pq.ParquetFile(_local_path(uri)).metadata
-                names = [
-                    md.schema.column(i).name for i in range(md.num_columns)
-                ]
-                idx = names.index(col)
-                mins, maxs = [], []
-                for rg in range(md.num_row_groups):
-                    st = md.row_group(rg).column(idx).statistics
-                    # A writer may omit column statistics (ADVICE r7):
-                    # the metadata-only path is then impossible by
-                    # construction — fail with the real reason instead
-                    # of an AttributeError inside mapInPandas. (Real
-                    # Iceberg falls back to a data scan; this operator's
-                    # contract is the footer-only answer.)
-                    if st is None or not st.has_min_max:
-                        raise RuntimeError(
-                            f"m23: footer statistics missing for "
-                            f"{tbl}.{col} in {uri} (row group {rg}) — "
-                            "cannot answer from metadata; scan the data "
-                            "instead"
-                        )
-                    mins.append(st.min)
-                    maxs.append(st.max)
-                rows.append(
-                    {
-                        "tbl": tbl,
-                        "col": col,
-                        "record_count": md.num_rows,
-                        "min_value": min(mins),
-                        "max_value": max(maxs),
-                    }
+    # One footer pass per table for all of its columns; at Iceberg scale
+    # the file list comes from the manifest list. Each file row unpivots
+    # into one (tbl, col, ...) row per column.
+    per_file = []
+    for tbl, cols in M23_TARGETS.items():
+        t = spark.read.parquet(f"{sf_dir}/{tbl}.parquet")
+        stats = footer_stats(spark, t.inputFiles(), [t.schema[c] for c in cols])
+        cells = []
+        for c in cols:
+            lo, hi = _required_bounds("m23", tbl, c)
+            cells.append(
+                F.struct(
+                    F.lit(c).alias("col"),
+                    lo.cast("double").alias("min_value"),
+                    hi.cast("double").alias("max_value"),
                 )
-            yield pd.DataFrame(rows, columns=[f.name for f in out_schema])
-
-    per_file = (
-        spark.createDataFrame(work, "tbl string, col string, file string")
-        .repartition(min(len(work), 32) or 1)
-        .mapInPandas(footer_aggs, out_schema)
-    )
+            )
+        per_file.append(
+            stats.select(
+                F.lit(tbl).alias("tbl"),
+                "record_count",
+                F.inline(F.array(*cells)),
+            )
+        )
     # fold per-file footer stats to table level (the manifest-merge step)
-    return per_file.groupBy("tbl", "col").agg(
-        F.sum("record_count").alias("record_count"),
-        F.min("min_value").alias("min_value"),
-        F.max("max_value").alias("max_value"),
+    return (
+        reduce(DataFrame.unionByName, per_file)
+        .groupBy("tbl", "col")
+        .agg(
+            F.sum("record_count").alias("record_count"),
+            F.min("min_value").alias("min_value"),
+            F.max("max_value").alias("max_value"),
+        )
     )
 
 
@@ -1822,9 +1747,9 @@ M28_TARGET_ROWS = 600
     "Iceberg's rewrite_data_files, answered from parquet FOOTERS only "
     "(m4 executes a rewrite; this plans one): orders is laid out "
     "hive-partitioned (month, priority) with one file per leaf, the "
-    "file list's record counts come from a distributed mapInPandas "
-    "footer scan (no data page touched — the O(files) planning cost), "
-    "and files are next-fit packed per partition in deterministic "
+    "file list's record counts come from the footer_stats kernel of "
+    "catalog/manifests.py (no data page touched — the O(files) planning "
+    "cost), and files are next-fit packed per partition in deterministic "
     f"(priority) order: bin = cum_rows_before DIV {M28_TARGET_ROWS}. "
     "Output = the rewrite groups a table service would submit "
     "(n_files>1 ⇒ that bin merges small files). The oracle re-derives "
@@ -1837,11 +1762,8 @@ M28_TARGET_ROWS = 600
 def m28_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import tempfile
-    from collections.abc import Iterator
 
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    from apache_iceberg_spark.catalog.manifests import _local_path
+    from apache_iceberg_spark.catalog.manifests import footer_stats
 
     o = load_table(spark, sf_dir, "orders").select(
         F.date_format("o_orderdate", "yyyy-MM").alias("o_month"),
@@ -1855,42 +1777,7 @@ def m28_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         .partitionBy("o_month", "o_pri")
         .parquet(path)
     )
-    files = spark.read.parquet(path).inputFiles()
-
-    out_schema = StructType(
-        [
-            StructField("file_path", StringType()),
-            StructField("record_count", LongType()),
-        ]
-    )
-
-    def footer_counts(batches: Iterator) -> Iterator:
-        from urllib.parse import unquote
-
-        import pandas as pd
-        import pyarrow.parquet as pq
-
-        for pdf in batches:
-            # hive layout percent-encodes partition values ('4-NOT
-            # SPECIFIED' → %20); the filesystem path is the decoded form
-            rows = [
-                {
-                    "file_path": uri,
-                    "record_count": pq.ParquetFile(
-                        unquote(_local_path(uri))
-                    ).metadata.num_rows,
-                }
-                for uri in pdf["file_path"]
-            ]
-            yield pd.DataFrame(rows, columns=["file_path", "record_count"])
-
-    manifest = (
-        spark.createDataFrame([(f,) for f in files], "file_path string")
-        .repartition(min(len(files), 32) or 1)
-        .mapInPandas(footer_counts, out_schema)
-    )
-    from pyspark.sql import Window as W
-
+    manifest = footer_stats(spark, spark.read.parquet(path).inputFiles(), [])
     packed = manifest.select(
         F.regexp_extract("file_path", r"o_month=([^/]+)", 1).alias("month"),
         # decode the hive percent-encoding so the pack order matches the

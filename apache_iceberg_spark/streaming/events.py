@@ -21,7 +21,17 @@ import tempfile
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from apache_iceberg_spark.registry import register
+# Batch operators whose oracles the streams reuse: a stream over bounded
+# input must equal its batch operator's answer. No operator module
+# imports this one, so these imports cannot cycle.
+from apache_iceberg_spark.operators import (  # noqa: F401
+    analytics,
+    dedup,
+    similarity,
+    text,
+    timeseries,
+)
+from apache_iceberg_spark.registry import REGISTRY, register
 from apache_iceberg_spark.tables import load_table
 
 _stream_ids = itertools.count()
@@ -1082,7 +1092,7 @@ def st12_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame
     # Identical semantics to ann14 (the stream is the batch, arriving):
     # reuse its oracle verbatim — the bounded availableNow run must equal
     # the declarative batch answer, the same gate as every st operator.
-    oracle=None,  # set below after the import (avoids a module cycle at top)
+    oracle=similarity._ann14_oracle(),
     doc="STREAMING vector-index update — ann14's maintenance shape as the "
     "embedding batch actually ARRIVES: each streaming vector assigns to "
     "the STATIC trained coarse quantizer map-only inside the micro-batch "
@@ -1141,20 +1151,6 @@ def st13_stream_index_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     return small_full_outer(stored, res, "cell_id")
 
 
-def _st13_set_oracle() -> None:
-    from apache_iceberg_spark.operators.similarity import _ann14_oracle
-    from apache_iceberg_spark.registry import REGISTRY
-    import dataclasses
-
-    q = REGISTRY["st13_stream_index_update"]
-    REGISTRY["st13_stream_index_update"] = dataclasses.replace(
-        q, oracle=_ann14_oracle()
-    )
-
-
-_st13_set_oracle()
-
-
 # --- st14: streaming EWMA — ts10's recurrence at ingest ---------------------
 
 
@@ -1186,10 +1182,9 @@ def _ewma_state_fn(key, pdf_iter, state):
 @register(
     "st14_stream_ewma",
     # Identical semantics to ts10 (the stream is the events table,
-    # arriving): the oracle is set to ts10's after import — the bounded
-    # availableNow run must equal the declarative batch answer bitwise,
-    # the same gate as st10/st13.
-    oracle=None,  # set below (avoids an import cycle at module top)
+    # arriving): ts10's oracle — the bounded availableNow run must equal
+    # the declarative batch answer bitwise, the same gate as st10/st13.
+    oracle=REGISTRY["ts10_ewma"].oracle,
     doc="STREAMING per-user EWMA — ts10's sequential recurrence as a "
     "custom stateful operator (applyInPandasWithState): state is O(1) "
     "per user (the smoothed value + count, NOT the sample list — the "
@@ -1241,21 +1236,6 @@ def st14_stream_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per user per batch.
     assert_single_batch(query, "st14_stream_ewma")
     return spark.table(qname)
-
-
-def _st14_set_oracle() -> None:
-    import dataclasses
-
-    from apache_iceberg_spark.operators import timeseries  # noqa: F401
-    from apache_iceberg_spark.registry import REGISTRY
-
-    q = REGISTRY["st14_stream_ewma"]
-    REGISTRY["st14_stream_ewma"] = dataclasses.replace(
-        q, oracle=REGISTRY["ts10_ewma"].oracle
-    )
-
-
-_st14_set_oracle()
 
 
 # --- st15: streaming CUSUM — ts13's change-point monitor at ingest ----------
@@ -1343,7 +1323,7 @@ def _st15_monitor(spark: SparkSession, sf_dir: str, stream: DataFrame) -> DataFr
 
 @register(
     "st15_stream_cusum",
-    oracle=None,  # set below from ts13 (same answer, arriving)
+    oracle=REGISTRY["ts13_cusum_changepoint"].oracle,
     doc="STREAMING CUSUM change-point monitor — ts13 as events arrive "
     "(applyInPandasWithState): per-key state is the exact integer "
     "(n, s, best, peak) quadruple carried ACROSS micro-batches against "
@@ -1382,21 +1362,6 @@ def st15_stream_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rn") == 1)
         .drop("rn")
     )
-
-
-def _st15_set_oracle() -> None:
-    import dataclasses
-
-    from apache_iceberg_spark.operators import timeseries  # noqa: F401
-    from apache_iceberg_spark.registry import REGISTRY
-
-    q = REGISTRY["st15_stream_cusum"]
-    REGISTRY["st15_stream_cusum"] = dataclasses.replace(
-        q, oracle=REGISTRY["ts13_cusum_changepoint"].oracle
-    )
-
-
-_st15_set_oracle()
 
 
 # --- st16: streaming quality gate (tx19 at ingest time) ---------------------
@@ -1460,16 +1425,10 @@ def st16_stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- st17: streaming seasonal anomaly scoring --------------------------------
 
 
-def _st17_oracle() -> str:
-    from apache_iceberg_spark.registry import REGISTRY as _REG
-
-    # Same answer as batch ts14 — the serving-parity contract.
-    return _REG["ts14_seasonal_anomalies"].oracle
-
-
 @register(
     "st17_stream_seasonal_scoring",
-    oracle=_st17_oracle(),
+    # Same answer as batch ts14 — the serving-parity contract.
+    oracle=REGISTRY["ts14_seasonal_anomalies"].oracle,
     doc="STREAMING seasonal anomaly scoring — ts14's serving shape: the "
     "(event_type, hour) profile and per-type residual moments are "
     "TRAINED on the static batch (two tiny aggregates, broadcast), and "
@@ -1532,16 +1491,10 @@ def st17_stream_seasonal_scoring(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- st18: streaming M4 downsampling ------------------------------------------
 
 
-def _st18_oracle() -> str:
-    from apache_iceberg_spark.registry import REGISTRY as _REG
-
-    # Same answer as batch ts16 — the dashboard-serving parity contract.
-    return _REG["ts16_m4_downsample"].oracle
-
-
 @register(
     "st18_stream_m4_downsample",
-    oracle=_st18_oracle(),
+    # Same answer as batch ts16 — the dashboard-serving parity contract.
+    oracle=REGISTRY["ts16_m4_downsample"].oracle,
     doc="STREAMING M4 downsampling — ts16's dashboard-serving shape: a "
     "watermarked 6-hour tumbling window maintains the per-(series, "
     "bucket) min/max/first/last points incrementally as events arrive, "
@@ -1829,7 +1782,7 @@ def st20_stream_atomic_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "st21_stream_seasonal_profile",
-    oracle=None,  # bound to ts23's oracle below
+    oracle=REGISTRY["ts23_seasonal_strength"].oracle,
     doc="ts23's seasonal-strength decomposition maintained BY THE "
     "STREAM: the micro-batch aggregation keeps per-(event_type, "
     "hour-of-day) partials — count, exact cents sum, exact DECIMAL "
@@ -1871,27 +1824,12 @@ def st21_stream_seasonal_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _ts23_finish(spark.table(qname))
 
 
-def _st21_set_oracle() -> None:
-    import dataclasses
-
-    from apache_iceberg_spark.operators import timeseries  # noqa: F401
-    from apache_iceberg_spark.registry import REGISTRY
-
-    q = REGISTRY["st21_stream_seasonal_profile"]
-    REGISTRY["st21_stream_seasonal_profile"] = dataclasses.replace(
-        q, oracle=REGISTRY["ts23_seasonal_strength"].oracle
-    )
-
-
-_st21_set_oracle()
-
-
 # --- st22: streaming CUSUM changepoint (ts25 at ingest) ----------------------
 
 
 @register(
     "st22_stream_changepoint",
-    oracle=None,  # bound to ts25's oracle below
+    oracle=REGISTRY["ts25_cusum_changepoint"].oracle,
     doc="ts25's series-level CUSUM changepoint maintained BY THE "
     "STREAM (st15 is the OTHER cusum: Page's one-sided per-user "
     "monitor with O(1) per-key state; this one locates WHERE the "
@@ -1925,21 +1863,6 @@ def st22_stream_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, per_h, qname, "complete", state_bound=24 * 366
     )
     return _ts25_finish(spark, spark.table(qname))
-
-
-def _st22_set_oracle() -> None:
-    import dataclasses
-
-    from apache_iceberg_spark.operators import timeseries  # noqa: F401
-    from apache_iceberg_spark.registry import REGISTRY
-
-    q = REGISTRY["st22_stream_changepoint"]
-    REGISTRY["st22_stream_changepoint"] = dataclasses.replace(
-        q, oracle=REGISTRY["ts25_cusum_changepoint"].oracle
-    )
-
-
-_st22_set_oracle()
 
 
 # --- st23: streaming Benford first-digit monitor (round 12) -------------------
@@ -1991,7 +1914,7 @@ def _st23_oracle() -> str:
 
 @register(
     "st23_stream_benford",
-    oracle=None,  # bound below (needs analytics imported first)
+    oracle=_st23_oracle(),
     doc="Benford first-digit CONFORMANCE maintained BY THE STREAM over "
     "event values — a26's batch digit profile as a streaming monitor, "
     "plus the single decision number a26 stops short of (the per-cell "
@@ -2072,20 +1995,6 @@ def st23_stream_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("digit")
 
 
-def _st23_set_oracle() -> None:
-    import dataclasses
-
-    from apache_iceberg_spark.registry import REGISTRY
-
-    q = REGISTRY["st23_stream_benford"]
-    REGISTRY["st23_stream_benford"] = dataclasses.replace(
-        q, oracle=_st23_oracle()
-    )
-
-
-_st23_set_oracle()
-
-
 # --- st24: streaming rank correlation (a40's Spearman at ingest) -------------
 
 
@@ -2144,7 +2053,7 @@ def _st24_oracle() -> str:
 
 @register(
     "st24_stream_rank_correlation",
-    oracle=None,  # bound below (needs analytics imported first)
+    oracle=_st24_oracle(),
     doc="a40's Spearman rank correlation maintained BY THE STREAM: the "
     "diurnal-effect monitor (does the metric's MAGNITUDE track the "
     "hour of day, per event type — rank-space, so one fat-tailed "
@@ -2186,26 +2095,12 @@ def st24_stream_rank_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _a40_finish(spark.table(qname), "event_type", precached=True)
 
 
-def _st24_set_oracle() -> None:
-    import dataclasses
-
-    from apache_iceberg_spark.registry import REGISTRY
-
-    q = REGISTRY["st24_stream_rank_correlation"]
-    REGISTRY["st24_stream_rank_correlation"] = dataclasses.replace(
-        q, oracle=_st24_oracle()
-    )
-
-
-_st24_set_oracle()
-
-
 # --- st25: streaming periodogram (ts28's spectrum at ingest) ------------------
 
 
 @register(
     "st25_stream_periodogram",
-    oracle=None,  # bound to ts28's oracle below
+    oracle=REGISTRY["ts28_periodogram"].oracle,
     doc="ts28's candidate-period spectrum maintained BY THE STREAM: "
     "the micro-batch aggregation keeps one COUNT per hour bucket — the "
     "SAME mergeable partial st22's changepoint monitor holds, so "
@@ -2241,27 +2136,12 @@ def st25_stream_periodogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _ts28_finish(spark, _spine_from_hourly(spark.table(qname)))
 
 
-def _st25_set_oracle() -> None:
-    import dataclasses
-
-    from apache_iceberg_spark.operators import timeseries  # noqa: F401
-    from apache_iceberg_spark.registry import REGISTRY
-
-    q = REGISTRY["st25_stream_periodogram"]
-    REGISTRY["st25_stream_periodogram"] = dataclasses.replace(
-        q, oracle=REGISTRY["ts28_periodogram"].oracle
-    )
-
-
-_st25_set_oracle()
-
-
 # --- st26: streaming bootstrap CI (a43 at ingest) ------------------------------
 
 
 @register(
     "st26_stream_bootstrap_ci",
-    oracle=None,  # bound to a43's oracle below
+    oracle=REGISTRY["a43_poisson_bootstrap_ci"].oracle,
     doc="a43's deterministic Poisson-bootstrap CI maintained BY THE "
     "STREAM: every bootstrap replica's (sum k, sum k*v, n, sum v) "
     "partial is a plain sum, so the WHOLE uncertainty estimate is 100 "
@@ -2305,27 +2185,12 @@ def st26_stream_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _a43_finish(spark.table(qname))
 
 
-def _st26_set_oracle() -> None:
-    import dataclasses
-
-    from apache_iceberg_spark.operators import analytics  # noqa: F401
-    from apache_iceberg_spark.registry import REGISTRY
-
-    q = REGISTRY["st26_stream_bootstrap_ci"]
-    REGISTRY["st26_stream_bootstrap_ci"] = dataclasses.replace(
-        q, oracle=REGISTRY["a43_poisson_bootstrap_ci"].oracle
-    )
-
-
-_st26_set_oracle()
-
-
 # --- st27: streaming median CI (a44 at ingest) ---------------------------------
 
 
 @register(
     "st27_stream_median_ci",
-    oracle=None,  # bound to a44's oracle below
+    oracle=REGISTRY["a44_median_ci"].oracle,
     doc="a44's distribution-free median CI maintained BY THE STREAM: "
     "the micro-batch aggregation keeps one COUNT per (type, cent) "
     "cell — the per-value histogram is the mergeable sufficient "
@@ -2359,21 +2224,6 @@ def st27_stream_median_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, per_v, qname, "complete", state_bound=None
     )
     return _a44_finish(spark.table(qname))
-
-
-def _st27_set_oracle() -> None:
-    import dataclasses
-
-    from apache_iceberg_spark.operators import analytics  # noqa: F401
-    from apache_iceberg_spark.registry import REGISTRY
-
-    q = REGISTRY["st27_stream_median_ci"]
-    REGISTRY["st27_stream_median_ci"] = dataclasses.replace(
-        q, oracle=REGISTRY["a44_median_ci"].oracle
-    )
-
-
-_st27_set_oracle()
 
 
 def _write_bucketed_files(df: DataFrame, bucket, n_files: int, src: str) -> None:
@@ -2467,7 +2317,7 @@ def _st28_oracle() -> str:
 
 @register(
     "st28_stream_neardup_gate",
-    oracle=None,  # bound below (needs dedup imported first)
+    oracle=_st28_oracle(),
     doc="The fuzzy near-dup GATE at the stream (VERDICT r12 ask #4): "
     "st3/st12 dedup exact keys or probe a FROZEN index; this is dd15's "
     "full MinHash-LSH cascade as an ADMISSION CONTROL loop whose index "
@@ -2694,26 +2544,12 @@ def _st28_run(spark: SparkSession, sf_dir: str) -> tuple[str, DataFrame]:
     return base, spark.read.parquet(outdir)
 
 
-def _st28_set_oracle() -> None:
-    import dataclasses
-
-    from apache_iceberg_spark.registry import REGISTRY
-
-    q = REGISTRY["st28_stream_neardup_gate"]
-    REGISTRY["st28_stream_neardup_gate"] = dataclasses.replace(
-        q, oracle=_st28_oracle()
-    )
-
-
-_st28_set_oracle()
-
-
 # --- st29: streaming Page-Hinkley drift alarm (ts31 at ingest) -----------------
 
 
 @register(
     "st29_stream_page_hinkley",
-    oracle=None,  # bound to ts31's oracle below
+    oracle=REGISTRY["ts31_page_hinkley"].oracle,
     doc="ts31's Page-Hinkley drift alarm maintained BY THE STREAM: the "
     "micro-batch aggregation keeps one COUNT per hour bucket — the "
     "SAME calendar-bounded mergeable partial st22/st25 hold — and the "
@@ -2742,21 +2578,6 @@ def st29_stream_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, per_h, qname, "complete", state_bound=24 * 366
     )
     return _ts31_finish(spark.table(qname))
-
-
-def _st29_set_oracle() -> None:
-    import dataclasses
-
-    from apache_iceberg_spark.operators import timeseries  # noqa: F401
-    from apache_iceberg_spark.registry import REGISTRY
-
-    q = REGISTRY["st29_stream_page_hinkley"]
-    REGISTRY["st29_stream_page_hinkley"] = dataclasses.replace(
-        q, oracle=REGISTRY["ts31_page_hinkley"].oracle
-    )
-
-
-_st29_set_oracle()
 
 
 # --- st30: streaming CDC upsert through MERGE INTO (m49 at the stream) ---------
@@ -2883,7 +2704,7 @@ def st30_stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "st31_stream_mutual_information",
-    oracle=None,  # bound to a45's oracle below
+    oracle=REGISTRY["a45_mutual_information"].oracle,
     doc="a45's mutual information maintained BY THE STREAM: the "
     "micro-batch aggregation keeps one COUNT per (type, hour) cell — "
     "the joint contingency is the mergeable sufficient statistic for "
@@ -2917,27 +2738,12 @@ def st31_stream_mutual_information(spark: SparkSession, sf_dir: str) -> DataFram
     return _a45_finish(spark.table(qname), precached=True)
 
 
-def _st31_set_oracle() -> None:
-    import dataclasses
-
-    from apache_iceberg_spark.operators import analytics  # noqa: F401
-    from apache_iceberg_spark.registry import REGISTRY
-
-    q = REGISTRY["st31_stream_mutual_information"]
-    REGISTRY["st31_stream_mutual_information"] = dataclasses.replace(
-        q, oracle=REGISTRY["a45_mutual_information"].oracle
-    )
-
-
-_st31_set_oracle()
-
-
 # --- st32: streaming JSD drift monitor (a47 at ingest) --------------------------
 
 
 @register(
     "st32_stream_jsd_drift",
-    oracle=None,  # bound to a47's oracle below
+    oracle=REGISTRY["a47_js_divergence"].oracle,
     doc="a47's Jensen-Shannon divergence maintained BY THE STREAM: the "
     "micro-batch aggregation keeps TWO conditional counts per value "
     "cell (error-side and complement) — one mergeable histogram "
@@ -2976,27 +2782,49 @@ def st32_stream_jsd_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _a47_finish(spark.table(qname), precached=True)
 
 
-def _st32_set_oracle() -> None:
-    import dataclasses
+# --- st33: streaming count-min heavy hitters (a22 at ingest) ---------------------
 
-    from apache_iceberg_spark.operators import analytics  # noqa: F401
-    from apache_iceberg_spark.registry import REGISTRY
 
-    q = REGISTRY["st32_stream_jsd_drift"]
-    REGISTRY["st32_stream_jsd_drift"] = dataclasses.replace(
-        q, oracle=REGISTRY["a47_js_divergence"].oracle
+def _st33_oracle() -> str:
+    from apache_iceberg_spark.operators.analytics import (
+        CM_DEPTH,
+        CM_WIDTH,
+        _CM_COEF_DUCK,
+        _CM_LANE,
     )
 
-
-_st32_set_oracle()
-
-
-# --- st33: streaming count-min heavy hitters (a22 at ingest) ---------------------
+    return f"""
+        WITH keys AS (
+            SELECT CAST(user_id AS VARCHAR) AS user_id,
+                   CAST(COUNT(*) AS BIGINT) AS exact_cnt
+            FROM events GROUP BY 1
+        ),
+        kb AS (
+            SELECT user_id, exact_cnt, d,
+                   {_CM_LANE} % {CM_WIDTH} AS bucket
+            FROM (
+                SELECT user_id, exact_cnt, {_CM_COEF_DUCK}
+                FROM (
+                    SELECT user_id, exact_cnt, md5(user_id) AS h
+                    FROM keys
+                )
+            ), generate_series(0, {CM_DEPTH - 1}) AS g(d)
+        ),
+        cells AS (
+            SELECT d, bucket, CAST(SUM(exact_cnt) AS BIGINT) AS cnt
+            FROM kb GROUP BY 1, 2
+        )
+        SELECT kb.user_id, kb.exact_cnt,
+               CAST(MIN(cc.cnt) AS BIGINT) AS cm_estimate,
+               CAST(MIN(cc.cnt) - kb.exact_cnt AS BIGINT) AS overestimate
+        FROM kb JOIN cells cc ON cc.d = kb.d AND cc.bucket = kb.bucket
+        GROUP BY kb.user_id, kb.exact_cnt
+    """
 
 
 @register(
     "st33_stream_countmin",
-    oracle=None,  # bound below: the same sketch SQL over events.user_id
+    oracle=_st33_oracle(),
     doc="a22's count-min sketch maintained BY THE STREAM: the "
     "micro-batch aggregation keeps one COUNT per user_id — per-key "
     "counts are the mergeable sufficient statistic for the sketch "
@@ -3034,57 +2862,12 @@ def st33_stream_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _st33_set_oracle() -> None:
-    import dataclasses as _dc
-
-    from apache_iceberg_spark.operators.analytics import (
-        CM_DEPTH,
-        CM_WIDTH,
-        _CM_COEF_DUCK,
-        _CM_LANE,
-    )
-    from apache_iceberg_spark.registry import REGISTRY
-
-    oracle = f"""
-        WITH keys AS (
-            SELECT CAST(user_id AS VARCHAR) AS user_id,
-                   CAST(COUNT(*) AS BIGINT) AS exact_cnt
-            FROM events GROUP BY 1
-        ),
-        kb AS (
-            SELECT user_id, exact_cnt, d,
-                   {_CM_LANE} % {CM_WIDTH} AS bucket
-            FROM (
-                SELECT user_id, exact_cnt, {_CM_COEF_DUCK}
-                FROM (
-                    SELECT user_id, exact_cnt, md5(user_id) AS h
-                    FROM keys
-                )
-            ), generate_series(0, {CM_DEPTH - 1}) AS g(d)
-        ),
-        cells AS (
-            SELECT d, bucket, CAST(SUM(exact_cnt) AS BIGINT) AS cnt
-            FROM kb GROUP BY 1, 2
-        )
-        SELECT kb.user_id, kb.exact_cnt,
-               CAST(MIN(cc.cnt) AS BIGINT) AS cm_estimate,
-               CAST(MIN(cc.cnt) - kb.exact_cnt AS BIGINT) AS overestimate
-        FROM kb JOIN cells cc ON cc.d = kb.d AND cc.bucket = kb.bucket
-        GROUP BY kb.user_id, kb.exact_cnt
-    """
-    q = REGISTRY["st33_stream_countmin"]
-    REGISTRY["st33_stream_countmin"] = _dc.replace(q, oracle=oracle)
-
-
-_st33_set_oracle()
-
-
 # --- st34: streaming Bloom-filter build (dd25 at ingest) -------------------------
 
 
 @register(
     "st34_stream_bloom_build",
-    oracle=None,  # bound below to dd25's full-gate oracle
+    oracle=REGISTRY["dd25_bloom_filter_gate"].oracle,
     doc="dd25's Bloom filter built BY THE STREAM: the committed half of "
     "the corpus arrives as a stream and the micro-batch aggregation "
     "maintains the filter itself — per (word_idx) bit_or of lane "
@@ -3186,21 +2969,6 @@ def st34_stream_bloom_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _st34_set_oracle() -> None:
-    import dataclasses as _dc
-
-    from apache_iceberg_spark.operators import dedup
-    from apache_iceberg_spark.registry import REGISTRY
-
-    q = REGISTRY["st34_stream_bloom_build"]
-    REGISTRY["st34_stream_bloom_build"] = _dc.replace(
-        q, oracle=REGISTRY["dd25_bloom_filter_gate"].oracle
-    )
-
-
-_st34_set_oracle()
-
-
 # --- st35: streaming HyperLogLog (a52 at ingest) -------------------------------
 
 
@@ -3250,7 +3018,7 @@ def _st35_oracle() -> str:
 
 @register(
     "st35_stream_hyperloglog",
-    oracle=None,  # bound below (needs analytics loaded)
+    oracle=_st35_oracle(),
     doc="a52's HyperLogLog maintained BY THE STREAM: the micro-batch "
     "aggregation keeps one MAX-rank per register — 64 integers of "
     "state TOTAL, and MAX is commutative/associative/idempotent, so "
@@ -3296,20 +3064,6 @@ def st35_stream_hyperloglog(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _a52_finish(spark.table(qname), exact)
 
 
-def _st35_set_oracle() -> None:
-    import dataclasses as _dc
-
-    from apache_iceberg_spark.registry import REGISTRY
-
-    q = REGISTRY["st35_stream_hyperloglog"]
-    REGISTRY["st35_stream_hyperloglog"] = _dc.replace(
-        q, oracle=_st35_oracle()
-    )
-
-
-_st35_set_oracle()
-
-
 # --- st36: streaming register-stratified inspection sample ----------------
 
 #: 256 registers; priority = 29 md5 bits above the register byte, so
@@ -3349,7 +3103,7 @@ def _st36_oracle() -> str:
 
 @register(
     "st36_stream_hash_sample",
-    oracle=None,  # bound below (needs the text module's hash macro)
+    oracle=_st36_oracle(),
     doc=f"Register-stratified DETERMINISTIC sample maintained BY THE "
     f"STREAM: {ST36_REGS} registers (md5 byte of the event key), each "
     "keeping the row with the MINIMUM md5-derived priority — a "
@@ -3409,20 +3163,6 @@ def st36_stream_hash_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("cents_sum"),
     )
-
-
-def _st36_set_oracle() -> None:
-    import dataclasses as _dc
-
-    from apache_iceberg_spark.registry import REGISTRY
-
-    q = REGISTRY["st36_stream_hash_sample"]
-    REGISTRY["st36_stream_hash_sample"] = _dc.replace(
-        q, oracle=_st36_oracle()
-    )
-
-
-_st36_set_oracle()
 
 
 # --- st37: guarded CDC upsert under OUT-OF-ORDER arrival ------------------

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import csv
 import os
+import re
 
 import pytest
 
@@ -195,7 +196,7 @@ def test_manifest_pruning_skips_files(spark, tmp_path):
     import datetime
 
     from apache_iceberg_spark.catalog.manifests import (
-        scan_pruned,
+        scan_pruned_box,
         write_with_manifest,
     )
 
@@ -206,7 +207,9 @@ def test_manifest_pruning_skips_files(spark, tmp_path):
     )
     lo = datetime.datetime(1995, 3, 1)
     hi = datetime.datetime(1995, 3, 31)
-    df, files_total, files_read = scan_pruned(spark, path, "o_orderdate", lo, hi)
+    df, files_total, files_read = scan_pruned_box(
+        spark, path, [("o_orderdate", lo, hi)]
+    )
     assert files_total == 8
     assert 0 < files_read < files_total, (files_read, files_total)
     expected = o.filter(
@@ -225,7 +228,7 @@ def test_manifest_prune_collects_only_survivors(spark, tmp_path):
     from apache_iceberg_spark.catalog.manifests import (
         MANIFEST_DIR,
         prune_condition,
-        scan_pruned,
+        scan_pruned_box,
         write_with_manifest,
     )
 
@@ -236,7 +239,9 @@ def test_manifest_prune_collects_only_survivors(spark, tmp_path):
     )
     lo = datetime.datetime(1995, 3, 1)
     hi = datetime.datetime(1995, 3, 31)
-    _, files_total, files_read = scan_pruned(spark, path, "o_orderdate", lo, hi)
+    _, files_total, files_read = scan_pruned_box(
+        spark, path, [("o_orderdate", lo, hi)]
+    )
     manifest = spark.read.parquet(path + "/" + MANIFEST_DIR)
     survivors = manifest.filter(
         prune_condition([("o_orderdate", lo, hi)])
@@ -281,6 +286,106 @@ def test_manifest_from_parquet_footers(spark, tmp_path):
         assert r["record_count"] == md.num_rows
         assert r["min_o_orderkey"] == min(s.min for s in stats)
         assert r["max_o_orderkey"] == max(s.max for s in stats)
+
+
+def test_manifest_round_trip_on_path_with_space(spark, tmp_path):
+    """Spark lists files as percent-escaped URIs (a space is ``%20``);
+    the footer kernel and the pruned read must open the real path."""
+    import datetime
+
+    from apache_iceberg_spark.catalog.manifests import (
+        scan_pruned_box,
+        write_with_manifest,
+    )
+
+    o = load_table(spark, SF_DIR, "orders").select("o_orderkey", "o_orderdate")
+    path = str(tmp_path / "sp ace" / "orders")
+    write_with_manifest(
+        o, path, cluster_by="o_orderdate", track_cols=["o_orderdate"], n_files=4
+    )
+    lo = datetime.datetime(1995, 3, 1)
+    hi = datetime.datetime(1995, 3, 31)
+    df, files_total, files_read = scan_pruned_box(
+        spark, path, [("o_orderdate", lo, hi)]
+    )
+    assert 0 < files_read < files_total == 4
+    expected = o.filter(
+        (o["o_orderdate"] >= lo) & (o["o_orderdate"] <= hi)
+    ).count()
+    assert df.count() == expected
+
+
+def test_footer_stats_without_statistics_gives_null_bounds(spark, tmp_path):
+    """A file written without column statistics gets NULL bounds and its
+    true record count from the kernel, and pruning keeps it; a file with
+    statistics outside the box is still pruned."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import DoubleType, LongType, StructField
+
+    from apache_iceberg_spark.catalog.manifests import (
+        MANIFEST_DIR,
+        footer_stats,
+        scan_pruned_box,
+    )
+
+    data = tmp_path / "t" / "data"
+    data.mkdir(parents=True)
+
+    def part(name, lo, stats):
+        keys = list(range(lo, lo + 100))
+        table = pa.table({"k": keys, "v": [k / 4 for k in keys]})
+        pq.write_table(
+            table, str(data / name), write_statistics=stats, row_group_size=40
+        )
+
+    part("a.parquet", 0, False)
+    part("b.parquet", 1000, True)
+    files = spark.read.parquet(str(data)).inputFiles()
+    fields = [StructField("k", LongType()), StructField("v", DoubleType())]
+    stats = footer_stats(spark, files, fields)
+    rows = {r["file_path"].rsplit("/", 1)[1]: r for r in stats.collect()}
+    a, b = rows["a.parquet"], rows["b.parquet"]
+    assert a["record_count"] == b["record_count"] == 100
+    assert [a["min_k"], a["max_k"], a["min_v"], a["max_v"]] == [None] * 4
+    assert (b["min_k"], b["max_k"], b["min_v"], b["max_v"]) == (
+        1000, 1099, 250.0, 274.75
+    )
+
+    stats.write.parquet(str(tmp_path / "t" / MANIFEST_DIR))
+    df, files_total, files_read = scan_pruned_box(
+        spark, str(tmp_path / "t"), [("k", 10, 20)]
+    )
+    assert (files_total, files_read) == (2, 1)
+    assert sorted(r["k"] for r in df.collect()) == list(range(10, 21))
+
+
+def test_m23_without_footer_statistics_names_column_and_file(spark, tmp_path):
+    """m23 answers only from footer statistics: on tables written without
+    them it fails, naming the column and the file, instead of returning
+    NULL aggregates."""
+    import pyarrow.parquet as pq
+
+    from apache_iceberg_spark.registry import REGISTRY, _ensure_loaded
+
+    sf = tmp_path / "sf_nostats"
+    sf.mkdir()
+    for t in ("lineitem", "orders"):
+        pq.write_table(
+            pq.read_table(f"{SF_DIR}/{t}.parquet"),
+            str(sf / f"{t}.parquet"),
+            write_statistics=False,
+        )
+    _ensure_loaded()
+    with pytest.raises(Exception) as err:
+        REGISTRY["m23_metadata_only_aggregates"].spark(spark, str(sf)).collect()
+    msg = str(err.value)
+    assert re.search(
+        r"m23: footer statistics missing for "
+        r"(lineitem\.l_quantity|lineitem\.l_extendedprice|orders\.o_totalprice)"
+        r" in file:\S*sf_nostats/(lineitem|orders)\.parquet",
+        msg,
+    ), msg
 
 
 def test_zorder_clusters_both_dimensions(spark, tmp_path):

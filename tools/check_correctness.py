@@ -6,6 +6,9 @@ order-insensitive value hash (rows sorted, columns sorted by name, values
 stringified). Exact float equality is intentional: the engine's oracle
 queries are designed to be bitwise-deterministic (see registry docstring).
 
+Runs at any scale factor, on every query or only the named ones, and
+prints each query's Spark and DuckDB wall times (``t_spark``/``t_duck``).
+
 Usage: python tools/check_correctness.py [sf_dir] [query ...]
 """
 
@@ -75,7 +78,7 @@ def main() -> int:
     for name, fn in qs.items():
         if only and name not in only:
             continue
-        t0 = time.time()
+        t0 = time.monotonic()
         try:
             sdf = fn(spark, sf_dir)
             srows = sdf.collect()
@@ -86,11 +89,13 @@ def main() -> int:
             n_fail += 1
             failures.append(name)
             continue
+        t_spark = time.monotonic() - t0
         if name not in oracles:
             print(f"  ok {name}: rows-only ({len(srows)} rows) "
-                  f"[{time.time()-t0:.1f}s]")
+                  f"[t_spark={t_spark:.2f}s]")
             n_noracle += 1
             continue
+        t0 = time.monotonic()
         try:
             res = con.execute(oracles[name])
             drows = res.fetchall()
@@ -101,6 +106,7 @@ def main() -> int:
             n_fail += 1
             failures.append(name)
             continue
+        times = f"[t_spark={t_spark:.2f}s t_duck={time.monotonic() - t0:.2f}s]"
         problems = []
         if len(srows) != len(drows):
             problems.append(f"rowcount spark={len(srows)} duck={len(drows)}")
@@ -124,11 +130,11 @@ def main() -> int:
                         print(f"    first-diff duck : {b[:200]}")
                         break
         if problems:
-            print(f"FAIL {name}: {'; '.join(problems)} [{time.time()-t0:.1f}s]")
+            print(f"FAIL {name}: {'; '.join(problems)} {times}")
             n_fail += 1
             failures.append(name)
         else:
-            print(f"  ok {name}: {len(srows)} rows match [{time.time()-t0:.1f}s]")
+            print(f"  ok {name}: {len(srows)} rows match {times}")
             n_pass += 1
 
     print(
