@@ -89,11 +89,17 @@ def _green_rounds() -> dict[str, int]:
 # The one-ref-core rewrite of snapshots.py/workspace.py (every commit
 # writer, the "latest" readers and the workspace ref ops) pulls in the
 # remaining commit-layer consumers m20-m22, m29-m46, m48, m53 and m58.
+# The scratch-root and one-stream-runner change re-points every
+# operator that makes working dirs or starts a stream: ann20/ann21,
+# the scale m-family, pp1/pp3/pp6/pp10, the sources_ext s-family and
+# every st stream.
 RECHECK = frozenset({
     "ann11_trained_ivf",
     "ann16_residual_pq",
     "ann19_radius_search",
     "ann1_cosine_topk",
+    "ann20_index_persist_roundtrip",
+    "ann21_pq_index_persist",
     "ann22_binary_quantization",
     "ann23_matryoshka_truncation",
     "ann24_recall_budget_curve",
@@ -131,11 +137,17 @@ RECHECK = frozenset({
     "m11_incremental_append_scan",
     "m12_schema_evolution_scan",
     "m13_merge_on_read_scan",
+    "m14_incremental_agg_maintenance",
+    "m15_partition_evolution_scan",
+    "m16_sketch_partials_merge",
+    "m17_write_audit_publish",
     "m19_partitions_metadata",
     "m20_snapshot_rollback",
     "m21_orphan_cleanup",
     "m22_snapshot_expiry",
     "m23_metadata_only_aggregates",
+    "m24_positional_delete_scan",
+    "m25_partition_delete_scan",
     "m26_clustering_depth_report",
     "m28_compaction_plan",
     "m29_branch_tag_scan",
@@ -149,6 +161,7 @@ RECHECK = frozenset({
     "m37_workspace_expiry",
     "m38_workspace_diff",
     "m39_workspace_transplant",
+    "m3_partitioned_pruned_read",
     "m40_commit_retry_reuse",
     "m41_truncating_retention",
     "m42_workspace_rollback",
@@ -159,6 +172,7 @@ RECHECK = frozenset({
     "m47_snapshots_history_table",
     "m48_sql_at_ref",
     "m49_merge_upsert",
+    "m4_compaction_roundtrip",
     "m50_stats_pruned_scan",
     "m51_time_travel_asof",
     "m52_merge_on_read_upsert",
@@ -184,33 +198,72 @@ RECHECK = frozenset({
     "mm6_image_neardup_clusters",
     "mm7_image_search",
     "mm8_video_neardup_pairs",
+    "pp10_pretraining_job",
     "pp12_dataset_datasheet",
     "pp13_temperature_mixture",
     "pp14_corpus_drift_report",
     "pp17_importance_resampling",
+    "pp1_corpus_curation",
     "pp20_shard_planner",
     "pp21_weighted_sample",
     "pp22_budget_waterfill",
     "pp24_epoch_schedule",
+    "pp3_curation_decontaminated",
     "pp4_cascade_fuzzy",
     "pp5_domain_mixture",
+    "pp6_production_funnel",
     "pp7_contamination_report",
     "pp8_corpus_shuffle",
     "pp9_multimodal_curation",
+    "s10_parquet_export_single",
+    "s12_csv_ingest_inference",
+    "s13_jsonl_roundtrip",
+    "s14_csv_roundtrip",
+    "s15_partitioned_export",
+    "s16_permissive_csv_ingest",
+    "s17_orc_roundtrip",
+    "s18_dynamic_partition_overwrite",
+    "s21_jsonl_export_single",
+    "s22_codec_roundtrip",
+    "s9_csv_export_single",
+    "st10_stream_time_weighted_avg",
+    "st11_stream_decontam_ingest",
     "st12_stream_incremental_dedup",
     "st13_stream_index_update",
+    "st14_stream_ewma",
+    "st15_stream_cusum",
+    "st16_stream_quality_gate",
+    "st17_stream_seasonal_scoring",
+    "st18_stream_m4_downsample",
     "st19_stream_branch_ingest",
+    "st1_stream_tumbling",
     "st20_stream_atomic_publish",
+    "st21_stream_seasonal_profile",
+    "st22_stream_changepoint",
+    "st23_stream_benford",
+    "st24_stream_rank_correlation",
+    "st25_stream_periodogram",
+    "st26_stream_bootstrap_ci",
+    "st27_stream_median_ci",
     "st28_stream_neardup_gate",
+    "st29_stream_page_hinkley",
+    "st2_stream_sliding",
     "st30_stream_cdc_upsert",
     "st31_stream_mutual_information",
     "st32_stream_jsd_drift",
     "st33_stream_countmin",
     "st34_stream_bloom_build",
     "st35_stream_hyperloglog",
+    "st36_stream_hash_sample",
     "st37_stream_guarded_cdc",
     "st38_stream_schema_evolution",
+    "st3_stream_dedup",
+    "st4_stream_static_join",
+    "st5_stream_stateful_sessions",
+    "st6_stream_session_window",
     "st7_stream_upsert",
+    "st8_stream_stream_join",
+    "st9_stream_ohlc",
     "tx10_vocab_topk",
     "tx14_tfidf_keywords",
     "tx16_rarity_filter",

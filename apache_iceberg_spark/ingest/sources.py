@@ -14,6 +14,8 @@ import shutil
 import tempfile
 import urllib.request
 
+from apache_iceberg_spark.tables import scratch
+
 #: Streaming download parameters (reference: utils.py:155-159).
 CHUNK_BYTES = 8192
 TIMEOUT_SECONDS = 60
@@ -59,7 +61,7 @@ def download_remote_csv(url: str, temp_dir: str | None = None) -> tuple[str, str
     if not filename.lower().endswith(".csv"):
         filename += ".csv"
     if temp_dir is None:
-        temp_dir = tempfile.mkdtemp(prefix="ingest_loader_")
+        temp_dir = scratch("ingest_loader_")
     os.makedirs(temp_dir, exist_ok=True)
     local_path = os.path.join(temp_dir, filename)
     with urllib.request.urlopen(url, timeout=TIMEOUT_SECONDS) as resp:

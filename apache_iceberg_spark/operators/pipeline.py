@@ -23,7 +23,6 @@ arithmetic.
 from __future__ import annotations
 
 import os
-import tempfile
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -35,7 +34,7 @@ from apache_iceberg_spark.operators.text import (
     STOPWORDS,
 )
 from apache_iceberg_spark.registry import register
-from apache_iceberg_spark.tables import load_table, load_table_parallel
+from apache_iceberg_spark.tables import load_table, load_table_parallel, scratch
 
 _DUCK_TOKS = r"string_split_regex(lower(trim(text)), '\s+')"
 
@@ -964,7 +963,7 @@ def pp1_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
         "split",
     )
     # Stage 5 — export: the funnel's single materialization, read back.
-    path = os.path.join(_export_tmpdir("curation_"), "corpus.parquet")
+    path = os.path.join(scratch("curation_"), "corpus.parquet")
     export_parquet(final, path)
     return spark.read.parquet(path)
 
@@ -1040,18 +1039,6 @@ def _pp1_curated_frame(
         .otherwise("test")
         .alias("split"),
     )
-
-
-def _export_tmpdir(prefix: str) -> str:
-    """Temp dir for funnel export checkpoints, reclaimed at process exit
-    (the read-back DataFrame stays lazy over these files for the rest of
-    the session, so earlier cleanup would break it)."""
-    import atexit
-    import shutil
-
-    d = tempfile.mkdtemp(prefix=prefix)
-    atexit.register(shutil.rmtree, d, ignore_errors=True)
-    return d
 
 
 # ---------------------------------------------------------------------------
@@ -1419,7 +1406,7 @@ def pp3_curation_decontaminated(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the reference's single-file COPY-TO export shape), the checkpoint
     # here is a plain parallel write — every task streams its own part
     # file, the form that holds at 100 TB.
-    path = os.path.join(_export_tmpdir("curation_"), "curated")
+    path = os.path.join(scratch("curation_"), "curated")
     curated.write.parquet(path)
     return _decontaminate_curated(spark.read.parquet(path))
 
@@ -1464,7 +1451,7 @@ def pp6_production_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     curated = _pp1_curated_frame(spark, sf_dir, fuzzy=True)
     # Parallel checkpoint write (see pp3 — pp1 keeps the single-file
     # parity shape; the production funnel uses the scalable one).
-    path = os.path.join(_export_tmpdir("funnel_"), "curated")
+    path = os.path.join(scratch("funnel_"), "curated")
     curated.write.parquet(path)
     return _decontaminate_curated(spark.read.parquet(path))
 
@@ -2458,7 +2445,7 @@ def pp10_pretraining_job(spark: SparkSession, sf_dir: str) -> DataFrame:
     curated = _pp1_curated_frame(
         spark, sf_dir, fuzzy=True, image_dedup=True
     ).localCheckpoint(eager=True)
-    path = os.path.join(_export_tmpdir("pretrain_"), "curated")
+    path = os.path.join(scratch("pretrain_"), "curated")
     curated.write.parquet(path)
     clean = _decontaminated_frame(curated)
 

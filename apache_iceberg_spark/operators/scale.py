@@ -108,7 +108,7 @@ def upsert(
 from pyspark.sql import SparkSession  # noqa: E402
 
 from apache_iceberg_spark.registry import register  # noqa: E402
-from apache_iceberg_spark.tables import load_table  # noqa: E402
+from apache_iceberg_spark.tables import load_table, scratch  # noqa: E402
 
 
 @register(
@@ -210,14 +210,13 @@ def m2_salted_join_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def m3_partitioned_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     from apache_iceberg_spark.tables import load_table as _lt
 
     o = _lt(spark, sf_dir, "orders").withColumn(
         "month", F.date_format("o_orderdate", "yyyy-MM")
     )
-    path = os.path.join(tempfile.mkdtemp(prefix="part_orders_"), "orders")
+    path = os.path.join(scratch("part_orders_"), "orders")
     write_partitioned(
         o.select("o_orderkey", "o_orderstatus", "o_totalprice", "month"),
         path,
@@ -243,10 +242,9 @@ def m3_partitioned_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def m4_compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     l = load_table(spark, sf_dir, "lineitem")
-    base = tempfile.mkdtemp(prefix="compact_")
+    base = scratch("compact_")
     fragmented = os.path.join(base, "fragmented")
     compacted = os.path.join(base, "compacted")
     l.repartition(32).write.parquet(fragmented)
@@ -271,7 +269,6 @@ def m4_compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def m5_time_travel_versions(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     from apache_iceberg_spark.catalog.snapshots import (
         commit_snapshot,
@@ -279,7 +276,7 @@ def m5_time_travel_versions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     o = load_table(spark, sf_dir, "orders")
-    table = os.path.join(tempfile.mkdtemp(prefix="tt_"), "orders")
+    table = os.path.join(scratch("tt_"), "orders")
     v1 = commit_snapshot(o, table)
     updates = o.filter(F.col("o_orderkey") % 7 == 0).withColumn(
         "o_orderstatus", F.lit("Z")
@@ -387,7 +384,6 @@ def m6_bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def m7_manifest_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     import datetime
     import os
-    import tempfile
 
     from apache_iceberg_spark.catalog.manifests import (
         scan_pruned_box,
@@ -397,7 +393,7 @@ def m7_manifest_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderdate", "o_totalprice"
     )
-    path = os.path.join(tempfile.mkdtemp(prefix="manifest_"), "orders")
+    path = os.path.join(scratch("manifest_"), "orders")
     write_with_manifest(
         o, path, cluster_by="o_orderdate", track_cols=["o_orderdate"]
     )
@@ -452,7 +448,6 @@ def zorder_code(x_sql: str, y_sql: str, bits: int = 16) -> F.Column:
 )
 def m8_zorder_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     from apache_iceberg_spark.catalog.manifests import write_with_manifest
 
@@ -463,7 +458,7 @@ def m8_zorder_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.datediff(F.col("o_orderdate"), F.lit("1992-01-01")).alias("o_day"),
     )
     z = o.withColumn("zcode", zorder_code("o_custkey", "o_day"))
-    path = os.path.join(tempfile.mkdtemp(prefix="zorder_"), "orders")
+    path = os.path.join(scratch("zorder_"), "orders")
     write_with_manifest(
         z, path, cluster_by="zcode", track_cols=["o_custkey", "o_day"]
     )
@@ -630,7 +625,6 @@ def m10_scd2_dimension(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def m11_incremental_append_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     from apache_iceberg_spark.catalog.snapshots import (
         commit_append,
@@ -639,7 +633,7 @@ def m11_incremental_append_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     o = load_table(spark, sf_dir, "orders")
-    table = os.path.join(tempfile.mkdtemp(prefix="inc_"), "orders")
+    table = os.path.join(scratch("inc_"), "orders")
     v1 = commit_snapshot(o.filter(F.col("o_orderkey") % 5 != 0), table)
     commit_append(o.filter(F.col("o_orderkey") % 10 == 5), table)
     commit_append(o.filter(F.col("o_orderkey") % 10 == 0), table)
@@ -669,7 +663,6 @@ def m11_incremental_append_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def m12_schema_evolution_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -677,7 +670,7 @@ def m12_schema_evolution_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("o_totalprice") * 100).cast("long").alias("price_cents"),
         "o_orderstatus",
     )
-    table = os.path.join(tempfile.mkdtemp(prefix="evo_"), "orders")
+    table = os.path.join(scratch("evo_"), "orders")
     # generation 1: schema without `o_orderstatus`
     o.filter(F.col("o_orderkey") % 2 == 1).drop("o_orderstatus").write.parquet(
         os.path.join(table, "gen=1")
@@ -720,7 +713,6 @@ def m12_schema_evolution_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def m13_merge_on_read_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -728,7 +720,7 @@ def m13_merge_on_read_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderstatus",
         F.round(F.col("o_totalprice") * 100).cast("long").alias("price_cents"),
     )
-    table = os.path.join(tempfile.mkdtemp(prefix="mor_"), "orders")
+    table = os.path.join(scratch("mor_"), "orders")
     o.write.parquet(os.path.join(table, "data"))
     # the equality-delete file: keys only, written without touching data
     o.filter(
@@ -764,7 +756,6 @@ def m13_merge_on_read_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def m14_incremental_agg_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -778,7 +769,7 @@ def m14_incremental_agg_maintenance(spark: SparkSession, sf_dir: str) -> DataFra
             F.sum("cents").alias("total_cents"),
         )
 
-    mv = os.path.join(tempfile.mkdtemp(prefix="ivm_"), "mv")
+    mv = os.path.join(scratch("ivm_"), "mv")
     # historical load: aggregate once, persist the partials (the view)
     agg(o.filter(F.col("o_orderkey") % 4 != 0)).write.parquet(mv)
     # a batch appends: aggregate ONLY the delta and merge into the view
@@ -823,7 +814,6 @@ def m14_incremental_agg_maintenance(spark: SparkSession, sf_dir: str) -> DataFra
 )
 def m15_partition_evolution_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -831,7 +821,7 @@ def m15_partition_evolution_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderdate",
         F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
     )
-    table = os.path.join(tempfile.mkdtemp(prefix="pevo_"), "orders")
+    table = os.path.join(scratch("pevo_"), "orders")
     # generation 1: the pre-evolution spec (unpartitioned files)
     o.filter(F.col("o_orderkey") % 3 == 0).write.parquet(
         os.path.join(table, "gen1")
@@ -875,7 +865,6 @@ def m15_partition_evolution_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def m16_sketch_partials_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_custkey"
@@ -886,7 +875,7 @@ def m16_sketch_partials_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.hll_sketch_agg("o_custkey").alias("sk")
         )
 
-    mv = os.path.join(tempfile.mkdtemp(prefix="ndv_"), "sketches")
+    mv = os.path.join(scratch("ndv_"), "sketches")
     sketches(o.filter(F.col("o_orderkey") % 4 != 0)).write.parquet(mv)
     delta = sketches(o.filter(F.col("o_orderkey") % 4 == 0))
     merged = (
@@ -955,11 +944,10 @@ def m16_sketch_partials_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 def m17_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
-    import tempfile
 
     o = load_table(spark, sf_dir, "orders")
     batch = o.filter(F.col("o_orderkey") % 6 == 0)
-    root = tempfile.mkdtemp(prefix="wap_")
+    root = scratch("wap_")
     staging = os.path.join(root, "staging")
     published = os.path.join(root, "published")
     batch.write.parquet(staging)
@@ -1089,14 +1077,13 @@ def _required_bounds(op: str, tbl: str, col: str) -> tuple[F.Column, F.Column]:
 )
 def m19_partitions_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     from apache_iceberg_spark.catalog.manifests import footer_stats
 
     o = load_table(spark, sf_dir, "orders").withColumn(
         "o_month", F.date_format("o_orderdate", "yyyy-MM")
     )
-    path = os.path.join(tempfile.mkdtemp(prefix="m19_"), "orders")
+    path = os.path.join(scratch("m19_"), "orders")
     (
         o.repartition(8, "o_month")
         .write.mode("overwrite")
@@ -1138,7 +1125,6 @@ def m19_partitions_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def m20_snapshot_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     from apache_iceberg_spark.catalog.snapshots import (
         commit_snapshot,
@@ -1147,7 +1133,7 @@ def m20_snapshot_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     o = load_table(spark, sf_dir, "orders")
-    table = os.path.join(tempfile.mkdtemp(prefix="rb_"), "orders")
+    table = os.path.join(scratch("rb_"), "orders")
     v1 = commit_snapshot(o, table)
     bad = o.withColumn("o_orderstatus", F.lit("CORRUPT"))
     commit_snapshot(bad, table)  # v2: the batch that should not have shipped
@@ -1173,7 +1159,6 @@ def m20_snapshot_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def m21_orphan_cleanup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     from apache_iceberg_spark.catalog.snapshots import (
         commit_snapshot,
@@ -1182,7 +1167,7 @@ def m21_orphan_cleanup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     o = load_table(spark, sf_dir, "orders")
-    table = os.path.join(tempfile.mkdtemp(prefix="orph_"), "orders")
+    table = os.path.join(scratch("orph_"), "orders")
     commit_snapshot(o, table)
     # Simulated failed commit: v2's data lands, the log swap never runs.
     orphan = o.withColumn("o_orderstatus", F.lit("TORN"))
@@ -1213,7 +1198,6 @@ def m21_orphan_cleanup(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def m22_snapshot_expiry(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     from apache_iceberg_spark.catalog.snapshots import (
         commit_snapshot,
@@ -1224,7 +1208,7 @@ def m22_snapshot_expiry(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus"
     )
-    table = os.path.join(tempfile.mkdtemp(prefix="expire_"), "orders")
+    table = os.path.join(scratch("expire_"), "orders")
     commit_snapshot(o.filter(F.col("o_orderstatus") == "F"), table, ts_ms=1000)
     commit_snapshot(o.filter(F.col("o_orderstatus") == "P"), table, ts_ms=2000)
     commit_snapshot(o.filter(F.col("o_orderstatus") == "O"), table, ts_ms=3000)
@@ -1353,7 +1337,6 @@ def m23_metadata_only_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def m24_positional_delete_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     o = (
         load_table(spark, sf_dir, "orders")
@@ -1368,7 +1351,7 @@ def m24_positional_delete_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("o_orderkey")
         .coalesce(1)
     )
-    table = os.path.join(tempfile.mkdtemp(prefix="posdel_"), "orders")
+    table = os.path.join(scratch("posdel_"), "orders")
     o.write.parquet(os.path.join(table, "data"))
     base = spark.read.parquet(os.path.join(table, "data")).select(
         "*",
@@ -1418,7 +1401,6 @@ def m24_positional_delete_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def m25_partition_delete_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -1426,7 +1408,7 @@ def m25_partition_delete_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_format("o_orderdate", "yyyy").alias("o_year"),
         F.round(F.col("o_totalprice") * 100).cast("long").alias("price_cents"),
     )
-    table = os.path.join(tempfile.mkdtemp(prefix="pdel_"), "orders")
+    table = os.path.join(scratch("pdel_"), "orders")
     o.write.partitionBy("o_year").parquet(table)
     # the metadata delete: drop every file whose partition matches —
     # a manifest-list filter, zero data bytes touched
@@ -1761,7 +1743,6 @@ M28_TARGET_ROWS = 600
 )
 def m28_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     from apache_iceberg_spark.catalog.manifests import footer_stats
 
@@ -1770,7 +1751,7 @@ def m28_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderpriority").alias("o_pri"),
         "o_orderkey",
     )
-    path = os.path.join(tempfile.mkdtemp(prefix="m28_"), "orders")
+    path = os.path.join(scratch("m28_"), "orders")
     (
         o.repartition(16, "o_month", "o_pri")
         .write.mode("overwrite")
@@ -1847,7 +1828,6 @@ def m28_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def m29_branch_tag_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     from apache_iceberg_spark.catalog.snapshots import (
         commit_append_ref,
@@ -1859,7 +1839,7 @@ def m29_branch_tag_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     o = load_table(spark, sf_dir, "orders")
-    table = os.path.join(tempfile.mkdtemp(prefix="refs_"), "orders")
+    table = os.path.join(scratch("refs_"), "orders")
     commit_snapshot(o.filter(F.col("o_orderkey") % 5 != 0), table)
     create_branch(table, "etl")  # from main
     create_tag(table, "audit")  # pins v1
@@ -1936,7 +1916,6 @@ def m29_branch_tag_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def m30_branch_wap(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     from apache_iceberg_spark.catalog.snapshots import (
         commit_append_ref,
@@ -1949,7 +1928,7 @@ def m30_branch_wap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     o = load_table(spark, sf_dir, "orders")
-    table = os.path.join(tempfile.mkdtemp(prefix="bwap_"), "orders")
+    table = os.path.join(scratch("bwap_"), "orders")
     v_main = commit_snapshot(o.filter(F.col("o_orderkey") % 6 != 0), table)
     create_branch(table, "audit_wap")
     v_branch = commit_append_ref(
@@ -2021,7 +2000,6 @@ def m30_branch_wap(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def m31_ref_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     from apache_iceberg_spark.catalog.snapshots import (
         commit_append_ref,
@@ -2031,7 +2009,7 @@ def m31_ref_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     o = load_table(spark, sf_dir, "orders")
-    table = os.path.join(tempfile.mkdtemp(prefix="refdiff_"), "orders")
+    table = os.path.join(scratch("refdiff_"), "orders")
     commit_snapshot(o.filter(F.col("o_orderkey") % 5 != 0), table)
     create_branch(table, "etl_a")
     create_branch(table, "etl_b")
@@ -2092,7 +2070,6 @@ def m31_ref_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def m32_transplant_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     from apache_iceberg_spark.catalog.snapshots import (
         commit_append_ref,
@@ -2103,7 +2080,7 @@ def m32_transplant_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     o = load_table(spark, sf_dir, "orders")
-    table = os.path.join(tempfile.mkdtemp(prefix="txp_"), "orders")
+    table = os.path.join(scratch("txp_"), "orders")
     commit_snapshot(o.filter(F.col("o_orderkey") % 5 != 0), table)
     create_branch(table, "etl")
     commit_append_ref(
@@ -2175,7 +2152,6 @@ def m32_transplant_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def m33_ref_aware_expiry(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     from apache_iceberg_spark.catalog.snapshots import (
         commit_append_ref,
@@ -2188,7 +2164,7 @@ def m33_ref_aware_expiry(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     o = load_table(spark, sf_dir, "orders")
-    table = os.path.join(tempfile.mkdtemp(prefix="refgc_"), "orders")
+    table = os.path.join(scratch("refgc_"), "orders")
     k = F.col("o_orderkey") % 10
     commit_snapshot(o.filter(k.isin(1, 2, 3)), table, ts_ms=1000)
     # tagged lineage: branch -> commit -> tag -> drop branch
@@ -2276,15 +2252,13 @@ def m33_ref_aware_expiry(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("scale", "snapshot", "nessie", "transaction"),
 )
 def m34_multi_table_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from apache_iceberg_spark.catalog.workspace import (
         ws_commit,
         ws_create_tag,
         ws_read,
     )
 
-    ws = tempfile.mkdtemp(prefix="ws_")
+    ws = scratch("ws_")
     c = load_table(spark, sf_dir, "customer")
     o = load_table(spark, sf_dir, "orders")
     ws_commit(
@@ -2368,7 +2342,6 @@ def m34_multi_table_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def m35_divergent_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     from apache_iceberg_spark.catalog.snapshots import (
         commit_append_ref,
@@ -2380,7 +2353,7 @@ def m35_divergent_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     o = load_table(spark, sf_dir, "orders")
-    table = os.path.join(tempfile.mkdtemp(prefix="dvm_"), "orders")
+    table = os.path.join(scratch("dvm_"), "orders")
     k = F.col("o_orderkey") % 4
     commit_snapshot(o.filter(k == 1), table)
     create_branch(table, "etl")
@@ -2467,8 +2440,6 @@ def m35_divergent_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("scale", "lakehouse", "quality", "nessie", "transaction"),
 )
 def m36_workspace_branch_wap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from apache_iceberg_spark.catalog.workspace import (
         ws_commit,
         ws_create_branch,
@@ -2477,7 +2448,7 @@ def m36_workspace_branch_wap(spark: SparkSession, sf_dir: str) -> DataFrame:
         ws_read_incremental,
     )
 
-    ws = tempfile.mkdtemp(prefix="wswap_")
+    ws = scratch("wswap_")
     c = load_table(spark, sf_dir, "customer")
     o = load_table(spark, sf_dir, "orders")
     v1 = ws_commit(
@@ -2568,8 +2539,6 @@ def m36_workspace_branch_wap(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("scale", "snapshot", "nessie", "maintenance", "transaction"),
 )
 def m37_workspace_expiry(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from apache_iceberg_spark.catalog.workspace import (
         ws_commit,
         ws_create_branch,
@@ -2579,7 +2548,7 @@ def m37_workspace_expiry(spark: SparkSession, sf_dir: str) -> DataFrame:
         ws_read,
     )
 
-    ws = tempfile.mkdtemp(prefix="wsgc_")
+    ws = scratch("wsgc_")
     c = load_table(spark, sf_dir, "customer")
     o = load_table(spark, sf_dir, "orders")
     ck = F.col("c_custkey") % 10
@@ -2666,12 +2635,10 @@ def m37_workspace_expiry(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("scale", "snapshot", "nessie", "workspace"),
 )
 def m38_workspace_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from apache_iceberg_spark.catalog.snapshots import _read_dirs
     from apache_iceberg_spark.catalog.workspace import ws_commit, ws_diff
 
-    ws = tempfile.mkdtemp(prefix="wsdiff_")
+    ws = scratch("wsdiff_")
     c = load_table(spark, sf_dir, "customer")
     o = load_table(spark, sf_dir, "orders")
     n = load_table(spark, sf_dir, "nation")
@@ -2751,8 +2718,6 @@ def m38_workspace_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("scale", "snapshot", "nessie", "workspace"),
 )
 def m39_workspace_transplant(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from apache_iceberg_spark.catalog.workspace import (
         ws_commit,
         ws_create_branch,
@@ -2761,7 +2726,7 @@ def m39_workspace_transplant(spark: SparkSession, sf_dir: str) -> DataFrame:
         ws_transplant,
     )
 
-    ws = tempfile.mkdtemp(prefix="wstrans_")
+    ws = scratch("wstrans_")
     c = load_table(spark, sf_dir, "customer")
     o = load_table(spark, sf_dir, "orders")
     ck, ok = F.col("c_custkey") % 5, F.col("o_orderkey") % 5
@@ -2860,7 +2825,6 @@ class _RaceOnWrite:
 )
 def m40_commit_retry_reuse(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     from apache_iceberg_spark.catalog.snapshots import (
         commit_append_ref,
@@ -2871,7 +2835,7 @@ def m40_commit_retry_reuse(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     o = load_table(spark, sf_dir, "orders")
-    table = os.path.join(tempfile.mkdtemp(prefix="retry_"), "orders")
+    table = os.path.join(scratch("retry_"), "orders")
     k = F.col("o_orderkey") % 4
     commit_snapshot(o.filter(k == 1), table, ts_ms=1000)
 
@@ -2944,7 +2908,6 @@ def m40_commit_retry_reuse(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def m41_truncating_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     from apache_iceberg_spark.catalog.snapshots import (
         commit_append_ref,
@@ -2956,7 +2919,7 @@ def m41_truncating_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     o = load_table(spark, sf_dir, "orders")
-    table = os.path.join(tempfile.mkdtemp(prefix="retain_"), "orders")
+    table = os.path.join(scratch("retain_"), "orders")
     k = F.col("o_orderkey") % 8
     commit_snapshot(o.filter(k == 0), table, ts_ms=1000)
     for i in range(1, 8):  # the micro-batch stream (first commit pins main)
@@ -3028,8 +2991,6 @@ def m41_truncating_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("scale", "snapshot", "nessie", "workspace"),
 )
 def m42_workspace_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from apache_iceberg_spark.catalog.workspace import (
         ws_commit,
         ws_list_versions,
@@ -3037,7 +2998,7 @@ def m42_workspace_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
         ws_rollback,
     )
 
-    ws = tempfile.mkdtemp(prefix="wsrb_")
+    ws = scratch("wsrb_")
     c = load_table(spark, sf_dir, "customer")
     o = load_table(spark, sf_dir, "orders")
     n = load_table(spark, sf_dir, "nation")
@@ -3117,7 +3078,6 @@ def m42_workspace_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def m43_evolved_append_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     from apache_iceberg_spark.catalog.snapshots import (
         commit_append,
@@ -3126,7 +3086,7 @@ def m43_evolved_append_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     o = load_table(spark, sf_dir, "orders")
-    table = os.path.join(tempfile.mkdtemp(prefix="evolve_"), "orders")
+    table = os.path.join(scratch("evolve_"), "orders")
     k = F.col("o_orderkey") % 3
     commit_snapshot(
         o.filter(k == 0).select("o_orderkey", "o_totalprice"),
@@ -3201,7 +3161,6 @@ def m43_evolved_append_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def m44_at_ref_sugar(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     from apache_iceberg_spark.catalog.snapshots import (
         commit_append_ref,
@@ -3212,7 +3171,7 @@ def m44_at_ref_sugar(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     c = load_table(spark, sf_dir, "customer")
-    base_dir = tempfile.mkdtemp(prefix="atref_")
+    base_dir = scratch("atref_")
     table = os.path.join(base_dir, "customer")
     commit_snapshot(c.filter(F.col("c_custkey") % 4 == 0), table)
     create_branch(table, "etl")
@@ -3279,7 +3238,6 @@ def m44_at_ref_sugar(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def m45_autocompaction_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     import apache_iceberg_spark.catalog.snapshots as S
     from apache_iceberg_spark.catalog.snapshots import (
@@ -3291,7 +3249,7 @@ def m45_autocompaction_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     o = load_table(spark, sf_dir, "orders")
-    table = os.path.join(tempfile.mkdtemp(prefix="autocomp_"), "orders")
+    table = os.path.join(scratch("autocomp_"), "orders")
     half = o.filter(F.col("o_orderkey") % 14 == 0)
     orig = S.AUTO_COMPACT_MIN_SEGMENT_BYTES
     S.AUTO_COMPACT_MIN_SEGMENT_BYTES = 128  # every ~1-2 commits folds
@@ -3370,8 +3328,6 @@ def m45_autocompaction_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("scale", "snapshot", "branch", "nessie"),
 )
 def m46_workspace_at_ref(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from apache_iceberg_spark.catalog.workspace import (
         ws_commit,
         ws_create_branch,
@@ -3379,7 +3335,7 @@ def m46_workspace_at_ref(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     c = load_table(spark, sf_dir, "customer")
-    ws = tempfile.mkdtemp(prefix="ws_atref_")
+    ws = scratch("ws_atref_")
     ws_commit(ws, {"customer": c.filter(F.col("c_custkey") % 3 == 0)})
     ws_create_branch(ws, "stage")
     ws_commit(
@@ -3454,7 +3410,6 @@ def m46_workspace_at_ref(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def m47_snapshots_history_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     from apache_iceberg_spark.catalog.snapshots import (
         commit_append,
@@ -3467,7 +3422,7 @@ def m47_snapshots_history_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     o = load_table(spark, sf_dir, "orders")
-    table = os.path.join(tempfile.mkdtemp(prefix="history_"), "orders")
+    table = os.path.join(scratch("history_"), "orders")
     commit_snapshot(o.filter(F.col("o_orderkey") % 5 == 0), table, ts_ms=1000)
     commit_append(o.filter(F.col("o_orderkey") % 5 == 1), table, ts_ms=2000)
     commit_append(o.filter(F.col("o_orderkey") % 5 == 2), table, ts_ms=3000)
@@ -3540,7 +3495,6 @@ def m47_snapshots_history_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def m48_sql_at_ref(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     from apache_iceberg_spark.catalog.snapshots import (
         commit_append_ref,
@@ -3550,7 +3504,7 @@ def m48_sql_at_ref(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     c = load_table(spark, sf_dir, "customer")
-    base_dir = tempfile.mkdtemp(prefix="sqlatref_")
+    base_dir = scratch("sqlatref_")
     table = os.path.join(base_dir, "customer")
     commit_snapshot(c.filter(F.col("c_custkey") % 4 == 0), table)
     create_branch(table, "etl")
@@ -3629,7 +3583,6 @@ def m48_sql_at_ref(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def m49_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     from apache_iceberg_spark.catalog.snapshots import (
         commit_snapshot,
@@ -3639,7 +3592,7 @@ def m49_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     o = load_table(spark, sf_dir, "orders")
     cents = F.round(F.col("o_totalprice") * 100).cast("long")
-    table = os.path.join(tempfile.mkdtemp(prefix="merge_"), "orders")
+    table = os.path.join(scratch("merge_"), "orders")
     commit_snapshot(
         o.filter(F.col("o_orderkey") % 3 == 0).select(
             "o_orderkey", cents.alias("cents")
@@ -3710,7 +3663,6 @@ def m49_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def m50_stats_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     from apache_iceberg_spark.catalog.snapshots import (
         commit_append,
@@ -3724,7 +3676,7 @@ def m50_stats_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     lo, hi = o.agg(F.min("o_orderkey"), F.max("o_orderkey")).first()
     span = int(hi) - int(lo) + 1
     edges = [int(lo) + span * i // 5 for i in range(6)]
-    table = os.path.join(tempfile.mkdtemp(prefix="pruned_"), "orders")
+    table = os.path.join(scratch("pruned_"), "orders")
     first = o.filter(
         (F.col("o_orderkey") >= edges[0]) & (F.col("o_orderkey") < edges[1])
     )
@@ -3785,7 +3737,6 @@ def m50_stats_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def m51_time_travel_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     from apache_iceberg_spark.catalog.snapshots import (
         commit_append,
@@ -3797,7 +3748,7 @@ def m51_time_travel_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey",
         F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
     )
-    table = os.path.join(tempfile.mkdtemp(prefix="asof_"), "orders")
+    table = os.path.join(scratch("asof_"), "orders")
     commit_snapshot(o.filter(F.col("o_orderkey") % 3 == 0), table, ts_ms=1000)
     commit_append(o.filter(F.col("o_orderkey") % 3 == 1), table, ts_ms=2000)
     commit_append(o.filter(F.col("o_orderkey") % 3 == 2), table, ts_ms=3000)
@@ -3902,7 +3853,6 @@ def _multiset_equal(a: DataFrame, b: DataFrame) -> bool:
 )
 def m52_merge_on_read_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     from apache_iceberg_spark.catalog.snapshots import (
         _by_version,
@@ -3917,7 +3867,7 @@ def m52_merge_on_read_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     o = load_table(spark, sf_dir, "orders")
     cents = F.round(F.col("o_totalprice") * 100).cast("long")
-    table = os.path.join(tempfile.mkdtemp(prefix="mor_"), "orders")
+    table = os.path.join(scratch("mor_"), "orders")
     commit_snapshot(
         o.filter(F.col("o_orderkey") % 3 == 0).select(
             "o_orderkey", cents.alias("cents")
@@ -4031,8 +3981,6 @@ def m52_merge_on_read_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("scale", "workspace", "rename", "views"),
 )
 def m53_rename_and_views(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from apache_iceberg_spark.catalog.workspace import (
         ws_create_tag,
         ws_create_view,
@@ -4046,7 +3994,7 @@ def m53_rename_and_views(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey",
         F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
     )
-    ws = tempfile.mkdtemp(prefix="m53_ws_")
+    ws = scratch("m53_ws_")
     ws_commit(ws, {"sales": o.filter(F.col("o_orderkey") % 3 == 0)})
     ws_create_tag(ws, "pre")
     ws_rename_table(ws, "sales", "revenue")
@@ -4140,7 +4088,6 @@ def m53_rename_and_views(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def m54_mor_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     from apache_iceberg_spark.catalog.snapshots import (
         commit_snapshot,
@@ -4150,7 +4097,7 @@ def m54_mor_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     o = load_table(spark, sf_dir, "orders")
     cents = F.round(F.col("o_totalprice") * 100).cast("long")
-    table = os.path.join(tempfile.mkdtemp(prefix="morcdc_"), "orders")
+    table = os.path.join(scratch("morcdc_"), "orders")
     commit_snapshot(
         o.filter(F.col("o_orderkey") % 3 == 0).select(
             "o_orderkey", cents.alias("cents")
@@ -4277,7 +4224,6 @@ def m54_mor_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def m55_mor_stats_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     from apache_iceberg_spark.catalog.snapshots import (
         commit_append,
@@ -4294,7 +4240,7 @@ def m55_mor_stats_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     span = int(hi) - int(lo) + 1
     e1 = int(lo) + span * 1 // 3
     e2 = int(lo) + span * 2 // 3
-    table = os.path.join(tempfile.mkdtemp(prefix="morprune_"), "orders")
+    table = os.path.join(scratch("morprune_"), "orders")
     commit_snapshot(
         o.filter(
             (F.col("o_orderkey") >= int(lo)) & (F.col("o_orderkey") < e1)
@@ -4345,7 +4291,6 @@ def _m56_seed(spark: SparkSession, sf_dir: str, prefix: str):
     whose scan cost delete-file pruning (m56) and the compaction
     planner (m59) both reason about. Returns (table, lo, e1, e2, hi)."""
     import os
-    import tempfile
 
     from apache_iceberg_spark.catalog.snapshots import (
         commit_append,
@@ -4361,7 +4306,7 @@ def _m56_seed(spark: SparkSession, sf_dir: str, prefix: str):
     span = int(hi) - int(lo) + 1
     e1 = int(lo) + span * 1 // 3
     e2 = int(lo) + span * 2 // 3
-    table = os.path.join(tempfile.mkdtemp(prefix=prefix), "orders")
+    table = os.path.join(scratch(prefix), "orders")
     commit_snapshot(
         o.filter(
             (F.col("o_orderkey") >= int(lo)) & (F.col("o_orderkey") < e1)
@@ -4653,7 +4598,6 @@ def m59_mor_compaction_policy(
 )
 def m57_merge_update_set(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     from apache_iceberg_spark.catalog.snapshots import (
         commit_snapshot,
@@ -4675,7 +4619,7 @@ def m57_merge_update_set(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("cents"),
         F.lit("SRC").alias("pri"),
     )
-    base = tempfile.mkdtemp(prefix="m57_")
+    base = scratch("m57_")
     tabs = {}
     for strat in ("cow", "mor"):
         tab = os.path.join(base, strat)
@@ -4749,8 +4693,6 @@ def m57_merge_update_set(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("scale", "workspace", "views", "refs"),
 )
 def m58_view_at_ref(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from apache_iceberg_spark.catalog.workspace import (
         ws_commit,
         ws_create_tag,
@@ -4763,7 +4705,7 @@ def m58_view_at_ref(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey",
         F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
     )
-    ws = tempfile.mkdtemp(prefix="m58_ws_")
+    ws = scratch("m58_ws_")
     ws_commit(ws, {"sales": o.filter(F.col("o_orderkey") % 3 == 0)})
     ws_create_view(
         ws, "high_value", "SELECT * FROM sales WHERE cents > 15000000"
@@ -4861,7 +4803,6 @@ def m58_view_at_ref(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def m60_partitioned_mor_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     from apache_iceberg_spark.catalog.snapshots import (
         commit_snapshot,
@@ -4872,7 +4813,7 @@ def m60_partitioned_mor_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
     month = F.date_format("o_orderdate", "yyyy-MM").alias("month")
     cents = F.round(F.col("o_totalprice") * 100).cast("long")
-    table = os.path.join(tempfile.mkdtemp(prefix="morpart_"), "orders")
+    table = os.path.join(scratch("morpart_"), "orders")
     # repartition ON the partition column before each partitioned write:
     # without it every input task writes a sliver of every month (~32x84
     # tiny files per write — the classic dynamic-partition small-files
@@ -4976,7 +4917,6 @@ def m60_partitioned_mor_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def m61_conditional_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     from apache_iceberg_spark.catalog.snapshots import (
         commit_snapshot,
@@ -4998,7 +4938,7 @@ def m61_conditional_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             "END"
         ).alias("cents"),
     )
-    root = tempfile.mkdtemp(prefix="m61_")
+    root = scratch("m61_")
     outs = {}
     for strat in ("cow", "mor"):
         tab = os.path.join(root, strat)
@@ -5171,7 +5111,6 @@ def m63_merge_schema_evolution(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     import os
-    import tempfile
 
     from apache_iceberg_spark.catalog.snapshots import (
         commit_snapshot,
@@ -5193,7 +5132,7 @@ def m63_merge_schema_evolution(
             "CASE WHEN o_orderkey % 4 = 0 THEN 'eu' ELSE 'us' END"
         ).alias("region"),
     )
-    root = tempfile.mkdtemp(prefix="m63_")
+    root = scratch("m63_")
     outs = {}
     for strat in ("cow", "mor"):
         tab = os.path.join(root, strat)

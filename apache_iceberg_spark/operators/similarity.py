@@ -26,7 +26,7 @@ from apache_iceberg_spark.operators.dedup import (
 )
 from apache_iceberg_spark.operators.text import DUCK_HEX2INT, SPARK_HEX2INT
 from apache_iceberg_spark.registry import register
-from apache_iceberg_spark.tables import load_table, load_table_parallel
+from apache_iceberg_spark.tables import load_table, load_table_parallel, scratch
 
 N_QUERIES = 5  # vec_id < 5 are the query vectors
 TOP_K = 10
@@ -3583,9 +3583,7 @@ def retrain_index(spark: SparkSession, cpath: str, kpath: str) -> int:
     tags=("similarity", "llm", "embedding", "index", "snapshot"),
 )
 def ann20_index_persist_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    root = tempfile.mkdtemp(prefix="ann20_")
+    root = scratch("ann20_")
     cpath, kpath = build_ivf_index(spark, sf_dir, root)
     return serve_from_index(spark, sf_dir, cpath, kpath)
 
@@ -3852,9 +3850,7 @@ def serve_adc_from_index(
     tags=("similarity", "llm", "embedding", "quantize", "index", "snapshot"),
 )
 def ann21_pq_index_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    root = tempfile.mkdtemp(prefix="ann21_")
+    root = scratch("ann21_")
     cells, book, codes = build_pq_index(spark, sf_dir, root)
     return serve_adc_from_index(spark, sf_dir, cells, book, codes)
 

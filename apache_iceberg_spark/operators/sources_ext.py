@@ -14,13 +14,12 @@ driver-local here; at scale the path is object storage.
 from __future__ import annotations
 
 import os
-import tempfile
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from apache_iceberg_spark.registry import register
-from apache_iceberg_spark.tables import load_table
+from apache_iceberg_spark.tables import load_table, scratch
 
 _DOC_ORACLE = "SELECT doc_id, text, lang, source, n_chars FROM documents"
 _DOC_COLS = ["doc_id", "text", "lang", "source", "n_chars"]
@@ -37,7 +36,7 @@ _DOC_COLS = ["doc_id", "text", "lang", "source", "n_chars"]
 )
 def s13_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").select(*_DOC_COLS)
-    path = os.path.join(tempfile.mkdtemp(prefix="jsonl_rt_"), "docs")
+    path = os.path.join(scratch("jsonl_rt_"), "docs")
     d.write.mode("overwrite").json(path)
     return spark.read.schema(d.schema).json(path).select(*_DOC_COLS)
 
@@ -54,7 +53,7 @@ def s13_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def s14_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").select(*_DOC_COLS)
-    path = os.path.join(tempfile.mkdtemp(prefix="csv_rt_"), "docs")
+    path = os.path.join(scratch("csv_rt_"), "docs")
     # emptyValue/nullValue pinned SYMMETRICALLY on both directions:
     # Spark's CSV reader otherwise turns an empty-string field back into
     # NULL, so a document with text='' would silently break the lossless
@@ -97,7 +96,7 @@ def s12_csv_ingest_inference(spark: SparkSession, sf_dir: str) -> DataFrame:
     from apache_iceberg_spark.ingest.loader import read_csv
 
     d = load_table(spark, sf_dir, "documents").select(*_DOC_COLS)
-    path = os.path.join(tempfile.mkdtemp(prefix="csv_ing_"), "docs")
+    path = os.path.join(scratch("csv_ing_"), "docs")
     d.write.mode("overwrite").option("header", True).option("escape", '"').csv(path)
     out = read_csv(spark, path)
     return out.filter(F.col("n_chars") == F.length("text")).select(*_DOC_COLS)
@@ -124,7 +123,7 @@ def s9_csv_export_single(spark: SparkSession, sf_dir: str) -> DataFrame:
     sel = o.filter(F.col("o_orderpriority") == "1-URGENT").select(
         "o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority"
     )
-    path = os.path.join(tempfile.mkdtemp(prefix="export_"), "urgent.csv")
+    path = os.path.join(scratch("export_"), "urgent.csv")
     export_csv(sel, path)
     return (
         spark.read.schema(sel.schema).option("header", True).csv(path)
@@ -149,7 +148,7 @@ def s10_parquet_export_single(spark: SparkSession, sf_dir: str) -> DataFrame:
     sel = l.filter(F.col("l_returnflag") == "R").select(
         "l_orderkey", "l_partkey", "l_quantity", "l_extendedprice"
     )
-    path = os.path.join(tempfile.mkdtemp(prefix="export_"), "returns.parquet")
+    path = os.path.join(scratch("export_"), "returns.parquet")
     export_parquet(sel, path)
     return spark.read.parquet(path)
 
@@ -181,7 +180,7 @@ def s15_partitioned_export(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
         F.length("text").cast("long").alias("n_chars"),
     )
-    path = os.path.join(tempfile.mkdtemp(prefix="export_"), "by_lang")
+    path = os.path.join(scratch("export_"), "by_lang")
     sel.write.partitionBy("lang").parquet(path)
     return spark.read.parquet(path).select(
         "doc_id", "lang", "source", "n_chars"
@@ -219,7 +218,7 @@ def s16_permissive_csv_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("o_orderkey") % 50 == 0)
         .select("o_orderkey", "o_orderstatus")
     )
-    path = os.path.join(tempfile.mkdtemp(prefix="csv_"), "orders.csv")
+    path = os.path.join(scratch("csv_"), "orders.csv")
     export_csv(o, path)
     with open(path, "a") as f:
         f.write("not_a_number,O\n")        # bad integer
@@ -257,7 +256,7 @@ def s16_permissive_csv_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def s17_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").select(*_DOC_COLS)
-    path = os.path.join(tempfile.mkdtemp(prefix="orc_rt_"), "docs")
+    path = os.path.join(scratch("orc_rt_"), "docs")
     d.write.mode("overwrite").orc(path)
     return spark.read.schema(d.schema).orc(path).select(*_DOC_COLS)
 
@@ -296,7 +295,7 @@ def s18_dynamic_partition_overwrite(
         "o_orderstatus",
         F.round(F.col("o_totalprice") * 100).cast("long").alias("price_cents"),
     )
-    path = os.path.join(tempfile.mkdtemp(prefix="dynpo_"), "orders")
+    path = os.path.join(scratch("dynpo_"), "orders")
     o.write.partitionBy("o_orderstatus").parquet(path)
     corrected = o.filter(F.col("o_orderstatus") == "P").withColumn(
         "price_cents", F.col("price_cents") * 2
@@ -345,7 +344,7 @@ def s21_jsonl_export_single(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = load_table(spark, sf_dir, "nation").filter(
         F.col("n_regionkey") < 3
     ).select("n_nationkey", "n_regionkey", "n_name")
-    path = os.path.join(tempfile.mkdtemp(prefix="jsonl_exp_"), "nation.jsonl")
+    path = os.path.join(scratch("jsonl_exp_"), "nation.jsonl")
     export_jsonl(n, path)
     out = spark.read.schema(
         "n_nationkey bigint, n_regionkey bigint, n_name string"
@@ -398,7 +397,7 @@ def s22_codec_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             "CAST(ROUND(l_extendedprice * 100) AS BIGINT)"
         ).alias("price_cents"),
     )
-    base = tempfile.mkdtemp(prefix="s22_")
+    base = scratch("s22_")
     out = None
     for codec in S22_CODECS:
         path = os.path.join(base, codec)

@@ -2,9 +2,9 @@
 star: streams as first-class ingestion)."""
 
 from apache_iceberg_spark.streaming.events import (
-    run_stream_to_memory,
+    run_stream,
     stream_events,
     tumbling_counts_stream,
 )
 
-__all__ = ["stream_events", "tumbling_counts_stream", "run_stream_to_memory"]
+__all__ = ["stream_events", "tumbling_counts_stream", "run_stream"]

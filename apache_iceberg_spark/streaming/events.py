@@ -7,6 +7,16 @@ queries in operators/timeseries.py are the semantic oracle — a
 bounded-input stream (availableNow trigger) must produce exactly the batch
 answer, which is how the driver's DuckDB check validates st1.
 
+One runner: every operator here starts its query through ``run_stream``
+(memory sink or ``foreachBatch``), which owns the query name, the
+bounded-state partitioning, the availableNow trigger and the checkpoint.
+A checkpoint lives exactly as long as its query: a ``tables.scratch``
+dir removed once the query has terminated. A bounded availableNow run
+never resumes, and a memory-sink table stays readable without it. Other
+working files (``foreachBatch`` tables, replay fixtures) sit in their
+own scratch dirs, which live until the process exits because returned
+DataFrames read them lazily.
+
 Scale notes: in production the source is a queue (Kafka) or an Iceberg
 table scanned incrementally by snapshot; the watermark bounds state for
 late data; sinks are exactly-once via checkpointing. All of that is
@@ -16,10 +26,13 @@ config on the same logical plan shown here.
 from __future__ import annotations
 
 import itertools
-import tempfile
+import shutil
+from contextlib import contextmanager
+from typing import Callable
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import StreamingQuery
 
 # Batch operators whose oracles the streams reuse: a stream over bounded
 # input must equal its batch operator's answer. No operator module
@@ -32,7 +45,7 @@ from apache_iceberg_spark.operators import (  # noqa: F401
     timeseries,
 )
 from apache_iceberg_spark.registry import REGISTRY, register
-from apache_iceberg_spark.tables import load_table
+from apache_iceberg_spark.tables import load_table, scratch
 
 _stream_ids = itertools.count()
 
@@ -129,23 +142,21 @@ def bounded_state_parts(spark: SparkSession, bound: int | None) -> int | None:
     return max(1, min(dp, -(-int(bound) // _STATE_CELLS_PER_PART)))
 
 
-from contextlib import contextmanager  # noqa: E402  (helper-local import)
-
-
 @contextmanager
 def _bounded_state(spark: SparkSession, bound: int | None):
     """Scope ``spark.sql.shuffle.partitions`` to the bounded-state size
-    for a stream's start→awaitTermination window (the conf is read at
+    for a stream's start-to-termination window (the conf is read at
     first-batch planning time); restores the session value after.
 
     INVARIANT (r17, VERDICT r16 #3): the narrowed conf is SESSION-GLOBAL
     for the scope's duration, so any query planned concurrently inside
-    the window would silently inherit 1-2 shuffle partitions. Every
-    caller runs one bounded availableNow stream to completion inside
-    the scope and nothing else — enforced below by refusing to narrow
-    while another streaming query is active. Driver-side batch planning
-    from other threads is not a pattern this engine has; if one
-    appears, clone the session for the stream instead."""
+    the window would silently inherit 1-2 shuffle partitions. Its one
+    caller, ``run_stream``, runs one bounded availableNow stream to
+    completion inside the scope and nothing else — enforced below by
+    refusing to narrow while another streaming query is active.
+    Driver-side batch planning from other threads is not a pattern this
+    engine has; if one appears, clone the session for the stream
+    instead."""
     parts = bounded_state_parts(spark, bound)
     if parts is None:
         yield
@@ -169,44 +180,45 @@ def _bounded_state(spark: SparkSession, bound: int | None):
         spark.conf.set(key, old)
 
 
-def _run_memory_query(
-    spark: SparkSession,
-    streaming_df: DataFrame,
-    qname: str,
-    output_mode: str = "complete",
+def run_stream(
+    df: DataFrame,
+    sink: str | Callable[[DataFrame, int], None],
+    output_mode: str,
     state_bound: int | None = None,
-):
-    """Start a memory-sink availableNow stream and run it to completion
-    under the bounded-state partitioning; returns the terminated query.
-    The shared body of every memory-sink streaming operator."""
-    with _bounded_state(spark, state_bound):
-        query = (
-            streaming_df.writeStream.format("memory")
-            .queryName(qname)
-            .outputMode(output_mode)
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
+) -> StreamingQuery:
+    """Run a bounded stream to completion — the one place this module
+    starts a query; returns the terminated query.
+
+    ``sink`` is a name prefix (memory sink, read back as
+    ``spark.table(query.name)``) or a ``foreachBatch`` function. The
+    runner owns the unique query name, the bounded-state partitioning
+    (``state_bound``, see ``_bounded_state``), the availableNow trigger
+    and the checkpoint dir: a fresh ``scratch("ckpt_")`` that lives
+    exactly as long as the query. It is removed once the query has
+    terminated (a memory-sink table stays readable without it); if the
+    run fails or is interrupted, the query is stopped first."""
+    writer = df.writeStream.outputMode(output_mode)
+    if callable(sink):
+        writer = writer.foreachBatch(sink)
+    else:
+        name = f"{sink}_{next(_stream_ids)}"
+        writer = writer.format("memory").queryName(name)
+    ckpt = scratch("ckpt_")
+    try:
+        with _bounded_state(df.sparkSession, state_bound):
+            query = (
+                writer.option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            try:
+                query.awaitTermination()
+            except BaseException:
+                query.stop()
+                raise
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
     return query
-
-
-def run_stream_to_memory(
-    streaming_df: DataFrame,
-    name_prefix: str = "stream",
-    state_bound: int | None = None,
-) -> str:
-    """Run a bounded stream to completion into an in-memory sink
-    (availableNow trigger); returns the result table name."""
-    qname = f"{name_prefix}_{next(_stream_ids)}"
-    _run_memory_query(
-        streaming_df.sparkSession,
-        streaming_df,
-        qname,
-        state_bound=state_bound,
-    )
-    return qname
 
 
 @register(
@@ -227,12 +239,13 @@ def run_stream_to_memory(
     tags=("streaming", "timeseries"),
 )
 def st1_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    qname = run_stream_to_memory(
+    q = run_stream(
         tumbling_counts_stream(spark, sf_dir),
         "st1_tumbling",
+        "complete",
         state_bound=24 * 366 * 64,  # calendar hour-windows x type fanout
     )
-    return spark.table(qname)
+    return spark.table(q.name)
 
 
 @register(
@@ -278,10 +291,10 @@ def st2_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
             "value_cents",
         )
     )
-    qname = run_stream_to_memory(
-        sliding, "st2_sliding", state_bound=2 * 24 * 366 * 64
+    q = run_stream(
+        sliding, "st2_sliding", "complete", state_bound=2 * 24 * 366 * 64
     )
-    return spark.table(qname)
+    return spark.table(q.name)
 
 
 @register(
@@ -312,17 +325,7 @@ def st3_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicates(["user_id", "event_type", "hour_start"])
         .select("user_id", "event_type", "hour_start")
     )
-    qname = f"st3_dedup_{next(_stream_ids)}"
-    query = (
-        deduped.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("append")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table(qname)
+    return spark.table(run_stream(deduped, "st3_dedup", "append").name)
 
 
 @register(
@@ -353,8 +356,7 @@ def st4_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.round(F.col("value") * 100).cast("long")).alias("value_cents"),
         )
     )
-    qname = run_stream_to_memory(enriched, "st4_join")
-    return spark.table(qname)
+    return spark.table(run_stream(enriched, "st4_join", "complete").name)
 
 
 def _session_state_fn(key, pdf_iter, state):
@@ -429,17 +431,7 @@ def st5_stream_stateful_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-    qname = f"st5_sessions_{next(_stream_ids)}"
-    query = (
-        sessions.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("update")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table(qname)
+    return spark.table(run_stream(sessions, "st5_sessions", "update").name)
 
 
 @register(
@@ -493,8 +485,7 @@ def st6_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    qname = run_stream_to_memory(sessions, "st6_session")
-    return spark.table(qname)
+    return spark.table(run_stream(sessions, "st6_session", "complete").name)
 
 
 @register(
@@ -545,17 +536,7 @@ def st8_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("purchase_ts") >= F.col("click_ts"))
         & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 1 HOUR")),
     ).select("click_id", "purchase_id", "user_id")
-    qname = f"st8_join_{next(_stream_ids)}"
-    query = (
-        joined.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("append")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table(qname)
+    return spark.table(run_stream(joined, "st8_join", "append").name)
 
 
 def _latest_per_user(df: DataFrame) -> DataFrame:
@@ -605,7 +586,7 @@ def _latest_per_user(df: DataFrame) -> DataFrame:
 def st7_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
-    base = tempfile.mkdtemp(prefix="st7_")
+    base = scratch("st7_")
     src = os.path.join(base, "src")
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id", "event_type", "value"
@@ -632,16 +613,12 @@ def st7_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         latest.write.parquet(new_path)
         state["path"] = new_path
 
-    query = (
+    feed = (
         spark.readStream.schema(ev.schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
-        .writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-        .trigger(availableNow=True)
-        .start()
     )
-    query.awaitTermination()
+    run_stream(feed, merge_batch, "append")
     return spark.read.parquet(state["path"])
 
 
@@ -717,10 +694,8 @@ def st9_stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
             "volume_cents",
         )
     )
-    qname = run_stream_to_memory(
-        bars, "st9_ohlc", state_bound=24 * 366 * 64
-    )
-    return spark.table(qname)
+    q = run_stream(bars, "st9_ohlc", "complete", state_bound=24 * 366 * 64)
+    return spark.table(q.name)
 
 
 def _twa_state_fn(key, pdf_iter, state):
@@ -823,17 +798,7 @@ def st10_stream_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-    qname = f"st10_twa_{next(_stream_ids)}"
-    query = (
-        twa.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("update")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table(qname)
+    return spark.table(run_stream(twa, "st10_twa", "update").name)
 
 
 def stream_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -932,17 +897,7 @@ def st11_stream_decontam_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
         .dropDuplicates(["doc_id"])
     )
-    qname = f"st11_decontam_{next(_stream_ids)}"
-    query = (
-        flagged.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("append")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table(qname)
+    return spark.table(run_stream(flagged, "st11_decontam", "append").name)
 
 
 def _st12_oracle() -> str:
@@ -1074,17 +1029,7 @@ def st12_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame
         .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
         .dropDuplicates(["doc_id_a", "doc_id_b"])
     )
-    qname = f"st12_incdedup_{next(_stream_ids)}"
-    query = (
-        verified.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("append")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table(qname)
+    return spark.table(run_stream(verified, "st12_incdedup", "append").name)
 
 
 @register(
@@ -1139,10 +1084,10 @@ def st13_stream_index_update(spark: SparkSession, sf_dir: str) -> DataFrame:
             "added_inertia_micro"
         ),
     )
-    qname = run_stream_to_memory(
-        added, "st13_idx", state_bound=1024  # coarse-quantizer cells
+    q = run_stream(
+        added, "st13_idx", "complete", state_bound=1024  # coarse-quantizer cells
     )
-    res = spark.table(qname)
+    res = spark.table(q.name)
     # FULL-outer semantics (ADVICE r6, mirrored from ann14): batch-only
     # cells must appear even if re-assignment emptied them; realized as
     # the broadcastable LEFT + LEFT-ANTI union (see small_full_outer).
@@ -1221,21 +1166,12 @@ def st14_stream_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-    qname = f"st14_ewma_{next(_stream_ids)}"
-    query = (
-        ewma.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("update")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    query = run_stream(ewma, "st14_ewma", "update")
     # Same update-mode memory-sink duplication hazard as st15: the carried
     # EWMA state is multi-batch-correct, but the sink would show one row
     # per user per batch.
     assert_single_batch(query, "st14_stream_ewma")
-    return spark.table(qname)
+    return spark.table(query.name)
 
 
 # --- st15: streaming CUSUM — ts13's change-point monitor at ingest ----------
@@ -1339,16 +1275,7 @@ def _st15_monitor(spark: SparkSession, sf_dir: str, stream: DataFrame) -> DataFr
 )
 def st15_stream_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     cs = _st15_monitor(spark, sf_dir, stream_events(spark, sf_dir))
-    qname = f"st15_cusum_{next(_stream_ids)}"
-    query = (
-        cs.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("update")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    qname = run_stream(cs, "st15_cusum", "update").name
     # Update-mode memory sink appends one row per key per batch; the
     # monitor's answer is each key's LATEST row (n_events is strictly
     # increasing for keys that fired), so multi-batch runs are handled
@@ -1409,17 +1336,7 @@ def st16_stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", margin.alias("margin"))
         .filter(F.col("margin") > 0.0)
     )
-    qname = f"st16_quality_gate_{next(_stream_ids)}"
-    query = (
-        gated.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("append")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table(qname)
+    return spark.table(run_stream(gated, "st16_quality_gate", "append").name)
 
 
 # --- st17: streaming seasonal anomaly scoring --------------------------------
@@ -1475,17 +1392,7 @@ def st17_stream_seasonal_scoring(spark: SparkSession, sf_dir: str) -> DataFrame:
             ts14_anomaly_flag().alias("is_anomaly"),
         )
     )
-    qname = f"st17_seasonal_{next(_stream_ids)}"
-    query = (
-        scored.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("append")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table(qname)
+    return spark.table(run_stream(scored, "st17_seasonal", "append").name)
 
 
 # --- st18: streaming M4 downsampling ------------------------------------------
@@ -1548,10 +1455,8 @@ def st18_stream_m4_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("l.v_c").alias("last_v_c"),
         )
     )
-    qname = run_stream_to_memory(
-        agg, "st18_m4", state_bound=24 * 366 * 64
-    )
-    return spark.table(qname)
+    q = run_stream(agg, "st18_m4", "complete", state_bound=24 * 366 * 64)
+    return spark.table(q.name)
 
 
 def _st19_run(spark: SparkSession, sf_dir: str) -> tuple[str, DataFrame]:
@@ -1567,7 +1472,7 @@ def _st19_run(spark: SparkSession, sf_dir: str) -> tuple[str, DataFrame]:
         read_ref,
     )
 
-    base = tempfile.mkdtemp(prefix="st19_")
+    base = scratch("st19_")
     src = os.path.join(base, "src")
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
@@ -1604,16 +1509,12 @@ def _st19_run(spark: SparkSession, sf_dir: str) -> tuple[str, DataFrame]:
             keys_max=64,
         )
 
-    query = (
+    feed = (
         spark.readStream.schema(ev.schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
-        .writeStream.foreachBatch(commit_batch)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-        .trigger(availableNow=True)
-        .start()
     )
-    query.awaitTermination()
+    run_stream(feed, commit_batch, "append")
     merge_branch(table, "ingest")  # publish the whole ingest at once
     result = (
         read_ref(spark, table, "main")
@@ -1664,7 +1565,7 @@ def _st20_run(spark: SparkSession, sf_dir: str) -> tuple[str, DataFrame]:
 
     from apache_iceberg_spark.catalog.workspace import ws_commit, ws_read
 
-    base = tempfile.mkdtemp(prefix="st20_")
+    base = scratch("st20_")
     src = os.path.join(base, "src")
     ws = os.path.join(base, "ws")
     ev = load_table(spark, sf_dir, "events").select(
@@ -1704,16 +1605,12 @@ def _st20_run(spark: SparkSession, sf_dir: str) -> tuple[str, DataFrame]:
         finally:
             batch_df.unpersist()
 
-    query = (
+    feed = (
         spark.readStream.schema(ev.schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
-        .writeStream.foreachBatch(publish)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-        .trigger(availableNow=True)
-        .start()
     )
-    query.awaitTermination()
+    run_stream(feed, publish, "append")
 
     # Consistency proof inside the hash: the maintained agg table,
     # rolled up across its per-batch partials, must equal a recompute
@@ -1817,10 +1714,9 @@ def st21_stream_seasonal_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.expr("CAST(c AS DECIMAL(38,0)) * c")).alias("s2"),
         )
     )
-    qname = f"st21_seasonal_{next(_stream_ids)}"
-    query = _run_memory_query(
-        spark, per_h, qname, "complete", state_bound=24 * 64
-    )
+    qname = run_stream(
+        per_h, "st21_seasonal", "complete", state_bound=24 * 64
+    ).name
     return _ts23_finish(spark.table(qname))
 
 
@@ -1858,10 +1754,7 @@ def st22_stream_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("h")
         .agg(F.count(F.lit(1)).alias("x"))
     )
-    qname = f"st22_cusum_{next(_stream_ids)}"
-    query = _run_memory_query(
-        spark, per_h, qname, "complete", state_bound=24 * 366
-    )
+    qname = run_stream(per_h, "st22_cusum", "complete", state_bound=24 * 366).name
     return _ts25_finish(spark, spark.table(qname))
 
 
@@ -1947,10 +1840,7 @@ def st23_stream_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("digit")
         .agg(F.count(F.lit(1)).cast("long").alias("n_obs"))
     )
-    qname = f"st23_benford_{next(_stream_ids)}"
-    query = _run_memory_query(
-        spark, obs, qname, "complete", state_bound=16
-    )
+    qname = run_stream(obs, "st23_benford", "complete", state_bound=16).name
     obs_t = spark.table(qname).persist()  # plan-cache: feeds n AND cells
     exp_t = spark.createDataFrame(
         [(d, p) for d, p in BENFORD_PPM.items()], "digit bigint, p_ppm bigint"
@@ -2088,10 +1978,7 @@ def st24_stream_rank_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("g", "xv", "yv")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    qname = f"st24_rankcorr_{next(_stream_ids)}"
-    query = _run_memory_query(
-        spark, cells, qname, "complete", state_bound=None
-    )
+    qname = run_stream(cells, "st24_rankcorr", "complete").name
     return _a40_finish(spark.table(qname), "event_type", precached=True)
 
 
@@ -2129,10 +2016,9 @@ def st25_stream_periodogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("h")
         .agg(F.count(F.lit(1)).alias("x"))
     )
-    qname = f"st25_periodogram_{next(_stream_ids)}"
-    query = _run_memory_query(
-        spark, per_h, qname, "complete", state_bound=24 * 366
-    )
+    qname = run_stream(
+        per_h, "st25_periodogram", "complete", state_bound=24 * 366
+    ).name
     return _ts28_finish(spark, _spine_from_hourly(spark.table(qname)))
 
 
@@ -2178,10 +2064,7 @@ def st26_stream_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and the map-side fan-out must keep using every core.
     n_part = spark.sparkContext.defaultParallelism
     per_rep = _a43_replica_sums(stream_events(spark, sf_dir).repartition(n_part))
-    qname = f"st26_bootstrap_{next(_stream_ids)}"
-    query = _run_memory_query(
-        spark, per_rep, qname, "complete", state_bound=128
-    )
+    qname = run_stream(per_rep, "st26_bootstrap", "complete", state_bound=128).name
     return _a43_finish(spark.table(qname))
 
 
@@ -2219,10 +2102,7 @@ def st27_stream_median_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("g", "v")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    qname = f"st27_medianci_{next(_stream_ids)}"
-    query = _run_memory_query(
-        spark, per_v, qname, "complete", state_bound=None
-    )
+    qname = run_stream(per_v, "st27_medianci", "complete").name
     return _a44_finish(spark.table(qname))
 
 
@@ -2388,7 +2268,7 @@ def _st28_run(spark: SparkSession, sf_dir: str) -> tuple[str, DataFrame]:
             F.expr(f"(MAX(doc_id) * {DD15_BATCH_NUM}) DIV {DD15_BATCH_DEN}")
         ).first()[0]
     )
-    base = tempfile.mkdtemp(prefix="st28_")
+    base = scratch("st28_")
     bands_tbl = os.path.join(base, "bands")
     # The committed index: the pre-stream corpus's SKINNY band table
     # (doc_id, band_id, band_key — what _minhash_bands writes at scale,
@@ -2531,16 +2411,12 @@ def _st28_run(spark: SparkSession, sf_dir: str) -> tuple[str, DataFrame]:
         finally:
             hashed_b.unpersist()
 
-    query = (
+    feed = (
         spark.readStream.schema(batch_docs.schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
-        .writeStream.foreachBatch(gate)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-        .trigger(availableNow=True)
-        .start()
     )
-    query.awaitTermination()
+    run_stream(feed, gate, "append")
     return base, spark.read.parquet(outdir)
 
 
@@ -2573,10 +2449,9 @@ def st29_stream_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("h")
         .agg(F.count(F.lit(1)).alias("x"))
     )
-    qname = f"st29_pagehinkley_{next(_stream_ids)}"
-    query = _run_memory_query(
-        spark, per_h, qname, "complete", state_bound=24 * 366
-    )
+    qname = run_stream(
+        per_h, "st29_pagehinkley", "complete", state_bound=24 * 366
+    ).name
     return _ts31_finish(spark.table(qname))
 
 
@@ -2651,7 +2526,7 @@ def st30_stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("user_id", F.col("cents").alias("last_cents"))
         )
 
-    base = tempfile.mkdtemp(prefix="st30_")
+    base = scratch("st30_")
     table = os.path.join(base, "user_state")
     commit_snapshot(
         latest(e.filter(F.unix_micros("ts") <= t_mid)), table
@@ -2682,16 +2557,12 @@ def st30_stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             check_unique=False,
         )
 
-    query = (
+    feed = (
         spark.readStream.schema(updates.schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
-        .writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-        .trigger(availableNow=True)
-        .start()
     )
-    query.awaitTermination()
+    run_stream(feed, apply_batch, "append")
     # The returned read exercises the merge-on-read serve path (one
     # anti-join per outstanding delete file); compaction runs on m28's
     # planner cadence in production, and its hash-neutral roundtrip is
@@ -2731,10 +2602,7 @@ def st31_stream_mutual_information(spark: SparkSession, sf_dir: str) -> DataFram
         .groupBy("xv", "yv")
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    qname = f"st31_mi_{next(_stream_ids)}"
-    query = _run_memory_query(
-        spark, cells, qname, "complete", state_bound=24 * 64
-    )
+    qname = run_stream(cells, "st31_mi", "complete", state_bound=24 * 64).name
     return _a45_finish(spark.table(qname), precached=True)
 
 
@@ -2775,10 +2643,7 @@ def st32_stream_jsd_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.expr("1 - is_p")).cast("long").alias("cq"),
         )
     )
-    qname = f"st32_jsd_{next(_stream_ids)}"
-    query = _run_memory_query(
-        spark, cells, qname, "complete", state_bound=None
-    )
+    qname = run_stream(cells, "st32_jsd", "complete").name
     return _a47_finish(spark.table(qname), precached=True)
 
 
@@ -2850,10 +2715,7 @@ def st33_stream_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id")
         .agg(F.count(F.lit(1)).alias("exact_cnt"))
     )
-    qname = f"st33_cm_{next(_stream_ids)}"
-    query = _run_memory_query(
-        spark, keys, qname, "complete", state_bound=None
-    )
+    qname = run_stream(keys, "st33_cm", "complete").name
     return _countmin_estimates(
         spark.table(qname).select(
             F.col("user_id").cast("string").alias("user_id"), "exact_cnt"
@@ -2901,10 +2763,7 @@ def st34_stream_bloom_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("word_idx")
         .agg(F.expr("bit_or(mask)").alias("w"))
     )
-    qname = f"st34_bloom_{next(_stream_ids)}"
-    query = _run_memory_query(
-        spark, bloom_cells, qname, "complete", state_bound=128
-    )
+    qname = run_stream(bloom_cells, "st34_bloom", "complete", state_bound=128).name
     bloom = spark.table(qname)
 
     d = load_table(spark, sf_dir, "documents")
@@ -3054,10 +2913,7 @@ def st35_stream_hyperloglog(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("mj")
         )
     )
-    qname = f"st35_hll_{next(_stream_ids)}"
-    query = _run_memory_query(
-        spark, regs_stream, qname, "complete", state_bound=64
-    )
+    qname = run_stream(regs_stream, "st35_hll", "complete", state_bound=64).name
     exact = load_table(spark, sf_dir, "events").agg(
         F.countDistinct("user_id").alias("n")
     )
@@ -3140,16 +2996,7 @@ def st36_stream_hash_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("combined")
         )
     )
-    qname = f"st36_sample_{next(_stream_ids)}"
-    query = (
-        state_stream.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("complete")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    qname = run_stream(state_stream, "st36_sample", "complete").name
     sample = spark.table(qname).select(
         (F.col("combined") % ST36_KEY_MOD).alias("event_id")
     )
@@ -3251,7 +3098,7 @@ def st37_stream_guarded_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("user_id", "event_id", "cents", "us")
         )
 
-    base = tempfile.mkdtemp(prefix="st37_")
+    base = scratch("st37_")
     table = os.path.join(base, "user_state")
     commit_snapshot(latest(e.filter(F.col("us") <= t_mid)), table)
     updates = e.filter(F.col("us") > t_mid)
@@ -3273,16 +3120,12 @@ def st37_stream_guarded_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
 
-    query = (
+    feed = (
         spark.readStream.schema(updates.schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
-        .writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-        .trigger(availableNow=True)
-        .start()
     )
-    query.awaitTermination()
+    run_stream(feed, apply_batch, "append")
     return read_ref(spark, table, "main").select(
         "user_id",
         F.col("cents").alias("last_cents"),
@@ -3353,7 +3196,7 @@ def st38_stream_schema_evolution(
         F.min(F.unix_micros("ts")), F.max(F.unix_micros("ts"))
     ).first()
     t_mid = (int(lo) + int(hi)) // 2
-    base = tempfile.mkdtemp(prefix="st38_")
+    base = scratch("st38_")
     table = os.path.join(base, "evolving")
 
     def run_deployment(df: DataFrame, src: str) -> None:
@@ -3365,16 +3208,12 @@ def st38_stream_schema_evolution(
             else:
                 commit_append(batch_df, table)
 
-        q = (
+        feed = (
             spark.readStream.schema(df.schema)
             .option("maxFilesPerTrigger", "4")
             .parquet(src)
-            .writeStream.foreachBatch(apply_batch)
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination()
+        run_stream(feed, apply_batch, "append")
 
     cents = F.expr("CAST(ROUND(value * 100) AS BIGINT)").alias("cents")
     run_deployment(

@@ -5,11 +5,19 @@ load them lazily and register temp views so queries can be written either as
 DataFrame compositions or ``spark.sql`` — mirroring the reference's pattern of
 registering Arrow tables as queryable views (``query_iceberg.ipynb:214``,
 ``conn.register``), but lazy and distributed instead of fully materialized.
+
+``scratch`` is the one place operators get working directories: all of
+them sit under one per-process root that is removed at process exit.
 """
 
 from __future__ import annotations
 
+import atexit
+import itertools
 import os
+import shutil
+import tempfile
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -27,6 +35,39 @@ TABLE_NAMES = (
 )
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+_scratch_lock = threading.Lock()
+_scratch_root: tuple[int, str] | None = None  # (owner pid, path)
+_scratch_ids = itertools.count()
+
+
+def scratch(prefix: str) -> str:
+    """A fresh directory for an operator's or a stream's working files.
+
+    Every such directory lives under ONE root per process, made on the
+    process's first call (under a lock: operators also run from worker
+    threads) and removed by a single ``atexit`` hook that only its
+    owner runs. Operators return DataFrames that read these files
+    lazily, so nothing under the root goes earlier — except stream
+    checkpoints, which ``run_stream`` removes once their query has
+    terminated. Processes that never call this (Spark's Python workers)
+    never make a root; a forked child that does gets its own, and one
+    that exits leaves its parent's root alone.
+    """
+    global _scratch_root
+    with _scratch_lock:
+        if _scratch_root is None or _scratch_root[0] != os.getpid():
+            root = tempfile.mkdtemp(prefix="apache_iceberg_spark_")
+            _scratch_root = (os.getpid(), root)
+            atexit.register(_remove_scratch_root, *_scratch_root)
+        path = os.path.join(_scratch_root[1], f"{prefix}{next(_scratch_ids)}")
+        os.mkdir(path)
+    return path
+
+
+def _remove_scratch_root(owner_pid: int, root: str) -> None:
+    if os.getpid() == owner_pid:
+        shutil.rmtree(root, ignore_errors=True)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -1,18 +1,18 @@
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+REPO_ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO_ROOT))
 
 SF_DIR = "/root/testdata/sf0.001"
 
 
 @pytest.fixture(scope="session")
-def spark():
-    import tempfile
-
+def spark(tmp_path_factory):
     from apache_iceberg_spark.session import get_spark
 
     # Isolated warehouse: managed-table tests must not collide with stale
@@ -22,7 +22,7 @@ def spark():
         "tests",
         cpus=8,
         shuffle_partitions=8,
-        warehouse=tempfile.mkdtemp(prefix="spark_wh_"),
+        warehouse=str(tmp_path_factory.mktemp("spark_wh")),
     )
     yield s
 

@@ -700,3 +700,85 @@ def test_sql_at_ref_executes_against_branch_heads(spark, tmp_path):
     assert rows["n_audit"] == c.count()
     assert rows["n_main"] == c.filter(F2.col("c_custkey") % 2 == 0).count()
     assert rows["n_main"] < rows["n_audit"]
+
+
+def test_operators_leave_no_temp_dirs_behind(spark, tmp_path, monkeypatch):
+    """Every scratch-making module (stream runner with a memory sink and
+    with foreachBatch, scale, sources_ext, similarity, pipeline) puts its
+    working files under the one scratch root, never straight into the
+    temp dir, and no stream checkpoint outlives its query. The returned
+    DataFrames are collected only after all calls: lazy reads over
+    scratch files must survive the later calls."""
+    import glob
+    import tempfile
+
+    from apache_iceberg_spark import tables
+    from apache_iceberg_spark.registry import all_queries
+
+    # make the root first, so it is not made inside the watched dir
+    root = os.path.dirname(tables.scratch("probe_"))
+    watched = tmp_path / "tmp"
+    watched.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(watched))
+    qs = all_queries()
+    names = (
+        "st4_stream_static_join",
+        "st7_stream_upsert",
+        "m3_partitioned_pruned_read",
+        "s9_csv_export_single",
+        "ann20_index_persist_roundtrip",
+        "pp1_corpus_curation",
+    )
+    frames = {n: qs[n](spark, SF_DIR) for n in names}
+    for name, df in frames.items():
+        assert df.collect(), name
+    assert os.listdir(watched) == []
+    assert glob.glob(os.path.join(root, "ckpt_*")) == []
+
+
+def test_scratch_root_is_one_per_process_and_removed_at_exit(tmp_path):
+    """A child process calls scratch from 8 threads at once, forks a
+    grandchild that exits normally, then exits: the threads share one
+    root, the grandchild's exit leaves it alone, and the child's exit
+    removes it. No Spark session is started."""
+    import json
+    import subprocess
+    import sys
+
+    from tests.conftest import REPO_ROOT
+
+    child = """
+import json, os, sys
+from concurrent.futures import ThreadPoolExecutor
+from apache_iceberg_spark.tables import scratch
+
+sys.setswitchinterval(1e-6)  # switch threads often inside scratch
+with ThreadPoolExecutor(8) as pool:
+    dirs = list(pool.map(lambda i: scratch(f"t{i}_"), range(8)))
+roots = sorted({os.path.dirname(d) for d in dirs})
+pid = os.fork()
+if pid == 0:
+    sys.exit(0)
+os.waitpid(pid, 0)
+print(json.dumps({
+    "dirs": len(set(dirs)),
+    "roots": roots,
+    "after_fork": os.path.isdir(roots[0]),
+}))
+"""
+    env = dict(os.environ, TMPDIR=str(tmp_path))
+    out = subprocess.run(
+        [sys.executable, "-c", child],
+        cwd=REPO_ROOT,
+        env=env,
+        capture_output=True,
+        text=True,
+        check=True,
+        timeout=120,
+    )
+    got = json.loads(out.stdout.strip().splitlines()[-1])
+    assert got["dirs"] == 8
+    assert len(got["roots"]) == 1
+    assert os.path.dirname(got["roots"][0]) == str(tmp_path)
+    assert got["after_fork"] is True
+    assert os.listdir(tmp_path) == []

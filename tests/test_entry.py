@@ -26,3 +26,14 @@ def test_all_queries_callable():
     qs = entrymod.queries()
     for name, fn in qs.items():
         assert callable(fn), name
+
+
+def test_package_imported_from_this_checkout():
+    """The harness puts the checkout that holds this test first on
+    ``sys.path``, so a second checkout tests its own package."""
+    from pathlib import Path
+
+    import apache_iceberg_spark
+
+    here = Path(__file__).resolve().parents[1]
+    assert Path(apache_iceberg_spark.__file__).resolve().is_relative_to(here)

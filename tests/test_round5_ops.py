@@ -10,7 +10,7 @@ import re
 import pyspark.sql.functions as F
 import pytest
 
-from tests.conftest import SF_DIR
+from tests.conftest import REPO_ROOT, SF_DIR
 
 
 # ---------------------------------------------------------------------------
@@ -327,7 +327,7 @@ def test_quickstart_example_runs(spark, tmp_path):
     import os
     import sys
 
-    sys.path.insert(0, "/root/repo/examples")
+    sys.path.insert(0, str(REPO_ROOT / "examples"))
     import quickstart
 
     res = quickstart.main(str(tmp_path))

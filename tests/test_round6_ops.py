@@ -17,7 +17,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from apache_iceberg_spark.registry import REGISTRY, _ensure_loaded
-from tests.conftest import SF_DIR
+from tests.conftest import REPO_ROOT, SF_DIR
 
 _ensure_loaded()
 
@@ -307,7 +307,7 @@ def test_rotation_puts_fresh_and_recheck_inside_driver_sample():
     import importlib.util
 
     spec = importlib.util.spec_from_file_location(
-        "spark_entry", "/root/repo/__spark_entry__.py"
+        "spark_entry", REPO_ROOT / "__spark_entry__.py"
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)

@@ -823,8 +823,11 @@ def test_monitoring_example_runs(spark):
     internal asserts) on the fixture."""
     import importlib.util
 
+    from tests.conftest import REPO_ROOT
+
     spec = importlib.util.spec_from_file_location(
-        "monitoring_pipeline", "/root/repo/examples/monitoring_pipeline.py"
+        "monitoring_pipeline",
+        REPO_ROOT / "examples" / "monitoring_pipeline.py",
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)

@@ -11,7 +11,7 @@ import tempfile
 import pyspark.sql.functions as F
 import pytest
 
-from tests.conftest import SF_DIR
+from tests.conftest import REPO_ROOT, SF_DIR
 
 
 @pytest.fixture(scope="module")
@@ -242,13 +242,11 @@ def test_st15_two_batch_stream_matches_batch_recompute(spark, tmp_path):
     if dict(stream.dtypes).get("ts") == "timestamp_ntz":
         stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
     cs = _st15_monitor(spark, SF_DIR, stream)
-    import tempfile as _tf
-
     query = (
         cs.writeStream.format("memory")
         .queryName("st15_twobatch")
         .outputMode("update")
-        .option("checkpointLocation", _tf.mkdtemp(prefix="ckpt_"))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(availableNow=True)
         .start()
     )
@@ -1124,7 +1122,8 @@ def test_branch_workflow_example_runs(spark):
     import importlib.util
 
     spec = importlib.util.spec_from_file_location(
-        "branch_workflow", "/root/repo/examples/branch_workflow.py"
+        "branch_workflow",
+        REPO_ROOT / "examples" / "branch_workflow.py",
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)

@@ -31,7 +31,7 @@ retention cadence (``tools/ws_endurance_probe.py`` holds a keyed
 1000-batch stream flat with expiry every 200 batches).
 
 Usage:
-  PYTHONPATH=/root/repo python tools/commitlog_probe.py [bytes|wall] [n]
+  PYTHONPATH=. python tools/commitlog_probe.py [bytes|wall] [n]
 Prints one JSON line per mode section.
 """
 

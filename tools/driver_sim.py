@@ -14,9 +14,10 @@ Prints one line per query: OK / MISMATCH(reason) / ERROR.
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import datetime
 import decimal

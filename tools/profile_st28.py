@@ -16,8 +16,6 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-import tempfile
-
 from pyspark.sql import functions as F
 
 from apache_iceberg_spark.session import get_spark, release_plan_caches
@@ -42,8 +40,11 @@ from apache_iceberg_spark.operators.dedup import (
     JACCARD_THRESHOLD,
     _minhash_bands,
 )
-from apache_iceberg_spark.streaming.events import _write_ordered_range_files
-from apache_iceberg_spark.tables import load_table_parallel
+from apache_iceberg_spark.streaming.events import (
+    _write_ordered_range_files,
+    run_stream,
+)
+from apache_iceberg_spark.tables import load_table_parallel, scratch
 
 T0 = time.time()
 marks = []
@@ -61,7 +62,7 @@ t0 = int(
     d.agg(F.expr(f"(MAX(doc_id) * {DD15_BATCH_NUM}) DIV {DD15_BATCH_DEN}")).first()[0]
 )
 mark("t0 agg")
-base = tempfile.mkdtemp(prefix="st28p_")
+base = scratch("st28p_")
 bands_tbl = os.path.join(base, "bands")
 hashed_idx, bands_idx = _minhash_bands(d_par.filter(F.col("doc_id") < t0))
 commit_snapshot(bands_idx.repartition(1), bands_tbl)
@@ -141,16 +142,12 @@ def gate(batch_df, batch_id):
     mark(f"batch {batch_id} total {time.time()-tb:.3f}")
 
 
-query = (
+feed = (
     spark.readStream.schema(batch_docs.schema)
     .option("maxFilesPerTrigger", "1")
     .parquet(src)
-    .writeStream.foreachBatch(gate)
-    .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-    .trigger(availableNow=True)
-    .start()
 )
-query.awaitTermination()
+run_stream(feed, gate, "append")
 mark("stream done")
 n = spark.read.parquet(outdir).count()
 mark(f"final read ({n} rows)")

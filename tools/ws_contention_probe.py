@@ -5,7 +5,7 @@ eventually — measuring total throughput, how many CAS retries actually
 happened, and that the run ends with zero orphan debris (every loser
 reused its written data dirs).
 
-Usage: PYTHONPATH=/root/repo python tools/ws_contention_probe.py [writers] [commits_each]
+Usage: PYTHONPATH=. python tools/ws_contention_probe.py [writers] [commits_each]
 Prints one JSON line.
 """
 

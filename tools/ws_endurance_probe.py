@@ -7,7 +7,7 @@ compose: O(1)-bytes segment appends (ask #1), the O(1) idempotency
 index (ask #4), and expiry-as-compaction bounding the read side.
 
 Usage:
-  PYTHONPATH=/root/repo python tools/ws_endurance_probe.py [n] [cadence]
+  PYTHONPATH=. python tools/ws_endurance_probe.py [n] [cadence]
 Defaults: n=1000 micro-batches, expiry every 200 with keep_last=25.
 Prints one JSON line: per-commit latency by decile, log/segment sizes,
 and data-dir counts sampled at each expiry point.
