@@ -67,73 +67,19 @@ def _green_rounds() -> dict[str, int]:
     return latest
 
 
-# Queries whose IMPLEMENTATION (or a function they consume) changed this
-# round: their old green rows prove the old code, so they re-enter the
-# checked set right behind never-checked queries. Since round 15 this
-# set is DERIVED FROM THE DIFF (VERDICT r14 "what's wrong" #1 — the
-# hand-written r14 list went stale and missed a22/a23/st30):
-# ``tools/derive_recheck.py`` maps the round's changed top-level
-# functions to (a) queries whose own body changed and (b) first-order
-# consumers whose source references a changed function, and
-# ``tests/test_recheck_policy.py`` FAILS when a derived query is absent
-# here. Regenerate with: python tools/derive_recheck.py
-# r17 (optimization round 2): derived from the r17 diff by
-# tools/derive_recheck.py (regenerated as optimizations land) — every
-# query whose implementing function or a consumed helper changed this
-# round re-enters the driver's sample ahead of the oldest-green tail.
-# The derivation is first-order; the r17 catalog-read rewrites
-# (_read_dirs grouping, _one_pass_update_delta) also reach every
-# merge/commit/time-travel consumer THROUGH merge_into/read_ref, so
-# those second-order consumers (m5/m47/m49/m5x, st7/st13/st19/st20/
-# st30/st37) and VERDICT r16 #10's st31-35/st38 are added explicitly.
-# The one-ref-core rewrite of snapshots.py/workspace.py (every commit
-# writer, the "latest" readers and the workspace ref ops) pulls in the
-# remaining commit-layer consumers m20-m22, m29-m46, m48, m53 and m58.
-# The scratch-root and one-stream-runner change re-points every
-# operator that makes working dirs or starts a stream: ann20/ann21,
-# the scale m-family, pp1/pp3/pp6/pp10, the sources_ext s-family and
-# every st stream.
+# Queries whose IMPLEMENTATION (or a function they consume) changed since
+# the last round-close commit: their old green rows prove the old code, so
+# they re-enter the checked set right behind never-checked queries. The
+# set is exactly what ``tools/derive_recheck.py`` derives from the diff
+# since the last ``round N:`` commit — queries whose own top-level
+# function changed plus first-order consumers whose source references a
+# changed function — with nothing carried over by hand, so it shrinks
+# again once a later round re-proves it. ``tests/test_recheck_policy.py``
+# FAILS when a derived query is absent here. Regenerate with:
+# python tools/derive_recheck.py
 RECHECK = frozenset({
-    "ann11_trained_ivf",
-    "ann16_residual_pq",
-    "ann19_radius_search",
-    "ann1_cosine_topk",
     "ann20_index_persist_roundtrip",
     "ann21_pq_index_persist",
-    "ann22_binary_quantization",
-    "ann23_matryoshka_truncation",
-    "ann24_recall_budget_curve",
-    "ann2_lsh_bucketed",
-    "ann3_ivf",
-    "ann4_pandas_cosine",
-    "ann6_pq_adc",
-    "dc1_decontamination",
-    "dc2_fuzzy_decontamination",
-    "dd10_line_dedup",
-    "dd11_duplication_profile",
-    "dd12_containment_dedup",
-    "dd13_soft_dedup_weights",
-    "dd14_fuzzy_dup_clusters",
-    "dd15_incremental_dedup",
-    "dd18_lsh_tuning_curve",
-    "dd19_dup_span_fraction",
-    "dd21_cdc_chunk_dedup",
-    "dd23_minhash_estimate_calibration",
-    "dd24_dup_inflation_factor",
-    "dd25_bloom_filter_gate",
-    "dd26_normalization_cascade",
-    "dd2_minhash_lsh",
-    "dd3_simhash",
-    "dd4_ngram_jaccard",
-    "dd5_embedding_neardup",
-    "dd6_dup_clusters",
-    "dd8_dedup_cascade",
-    "g13_hits",
-    "g14_kcore_peeling",
-    "g15_rich_club",
-    "g16_weighted_pagerank",
-    "g17_kcore",
-    "g8_harmonic_centrality",
     "m11_incremental_append_scan",
     "m12_schema_evolution_scan",
     "m13_merge_on_read_scan",
@@ -190,31 +136,10 @@ RECHECK = frozenset({
     "m63_merge_schema_evolution",
     "m7_manifest_pruned_scan",
     "m8_zorder_clustering",
-    "mm10_vlm_sequence_packing",
-    "mm11_aspect_bucket_report",
-    "mm12_letterbox_pad_report",
-    "mm13_vision_token_budget",
-    "mm14_frame_sampling_schedule",
-    "mm6_image_neardup_clusters",
-    "mm7_image_search",
-    "mm8_video_neardup_pairs",
     "pp10_pretraining_job",
-    "pp12_dataset_datasheet",
-    "pp13_temperature_mixture",
-    "pp14_corpus_drift_report",
-    "pp17_importance_resampling",
     "pp1_corpus_curation",
-    "pp20_shard_planner",
-    "pp21_weighted_sample",
-    "pp22_budget_waterfill",
-    "pp24_epoch_schedule",
     "pp3_curation_decontaminated",
-    "pp4_cascade_fuzzy",
-    "pp5_domain_mixture",
     "pp6_production_funnel",
-    "pp7_contamination_report",
-    "pp8_corpus_shuffle",
-    "pp9_multimodal_curation",
     "s10_parquet_export_single",
     "s12_csv_ingest_inference",
     "s13_jsonl_roundtrip",
@@ -264,21 +189,6 @@ RECHECK = frozenset({
     "st7_stream_upsert",
     "st8_stream_stream_join",
     "st9_stream_ohlc",
-    "tx10_vocab_topk",
-    "tx14_tfidf_keywords",
-    "tx16_rarity_filter",
-    "tx17_bpe_encode",
-    "tx18_boilerplate_ngrams",
-    "tx20_bigram_surprisal",
-    "tx23_readability",
-    "tx24_zipf_fit",
-    "tx26_token_entropy",
-    "tx27_heaps_law_fit",
-    "tx28_heldout_perplexity",
-    "tx29_zipf_hapax",
-    "tx5_repetition",
-    "tx6_edit_distance",
-    "tx8_term_novelty",
 })
 
 

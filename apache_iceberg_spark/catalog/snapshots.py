@@ -48,29 +48,40 @@ protects main's whole ancestry). The ``*_ref`` writers and
 read ``main``'s head, so an unmerged branch commit at the log tail is
 never visible to them.
 
-Commit-log entry formats (all coexist; ``_resolve_paths`` unifies them):
+**One file-set payload.** Every table entry, and every per-table value
+in a workspace entry's ``tables``, states its file set in exactly one
+of two keys:
 
-- ``{"version", "ts_ms", "path"}`` — overwrite commit: the snapshot's
-  file set is that one directory.
-- ``{"version", "ts_ms", "paths": [...]}`` — materialized cumulative
-  list (rollback commits, pre-round-10 appends, and entries whose
-  ancestry was expired — see ``expire_snapshots_dirs``).
-- ``{"version", "ts_ms", "adds": [...], "dels": [{"path", "on"}],
-  "parent": P}`` — MERGE-ON-READ commit: ``dels`` are equality-delete
-  files (parquet of the merge keys) that remove matching rows from data
-  committed at STRICTLY EARLIER versions; ``adds`` is the same merge's
-  insert delta, exempt by ordering. The Iceberg v2 row-level-delete
-  write path: O(batch) bytes per MERGE, readers pay one anti-join per
-  outstanding delete file (``_read_mor``), ``compact_mor`` folds the
-  debt back.
-- ``{"version", "ts_ms", "pathsv": [[path, v], ...], "dels":
-  [{"path", "on", "v"}]}`` — MATERIALIZED MoR state (rollback/expiry):
-  per-directory original versions preserved so delete ordering
-  survives flattening.
-- ``{"version", "ts_ms", "adds": [...], "parent": P}`` — DELTA commit:
-  the file set is the parent's resolved set plus ``adds`` — O(1)
-  metadata bytes per append, which is also how Iceberg itself stores
-  appends (a manifest list points at mostly-shared manifests).
+- ``"set": [item, ...]`` — a restatement: the snapshot's file set is
+  exactly these items (overwrites, rollbacks, materialized entries);
+- ``"adds": [item, ...]`` — a delta over ``parent``: the parent's
+  resolved set plus these items. O(1) metadata bytes per append, which
+  is also how Iceberg itself stores appends (a manifest list points at
+  mostly-shared manifests).
+
+An item is ``[path, v]`` or ``[path, v, stats]``: ``v`` is the commit
+version that wrote the dir into this lineage (its sequence number for
+delete ordering) and ``stats`` is that dir's own ``{col: [min, max]}``,
+the input of ``read_pruned``'s file skipping. Stats ride per item,
+never per entry, so a restatement that inherits dirs can never claim
+one dir's range for another (ADVICE r14).
+
+Either key may come with ``dels``: MERGE-ON-READ equality-delete
+records ``{"path", "on", "v"[, "stats"]}`` that remove matching rows
+from data items with a STRICTLY EARLIER ``v``; the same commit's insert
+delta is exempt by ordering. This is the Iceberg v2 row-level-delete
+write path: O(batch) bytes per MERGE, readers pay one anti-join per
+outstanding delete file (``_read_mor``), ``compact_mor`` folds the
+debt back. Delete ``stats`` are the key columns' ranges.
+
+One walker, ``_resolve``, turns a version into ``(data, dels)``: it
+follows ``_ancestry`` and collects payloads down to the nearest ``set``,
+parent first. Older logs wrote other shapes (``path``, cumulative
+``paths``, ``pathsv`` triples, bare-path ``adds`` with entry-level
+``stats``, ``dels`` without ``v``, bare-path workspace payloads);
+``_canonical`` upgrades each entry as it is parsed, so nothing past the
+parser sees them, and ``compact_log`` or an expiry rewrites the log in
+the one payload. Code older than this payload cannot read such a log.
 
 Entries record ``parent``, the head of their branch at plan time.
 Entries without one (older logs) take the previous version present in
@@ -183,6 +194,52 @@ def _parse_seg_chunk(data: bytes) -> tuple[int, list[dict]]:
     return end, entries
 
 
+def _canonical(entry: dict) -> dict:
+    """The one parse-time upgrade, and the only reader of the legacy
+    payload keys: ``entry`` (table or workspace) with every file-set
+    payload in the one shape — exactly one of ``set``/``adds``, items
+    ``[path, v(, stats)]``, ``dels`` records carrying ``v``. Idempotent;
+    a canonical table entry comes back as is. Each legacy shape keeps
+    the plan the per-shape walkers gave it: ``path``, ``paths`` and
+    bare-path ``adds`` become items at the entry's version carrying the
+    entry-level ``stats``; ``pathsv`` items pass through unchanged; bare
+    workspace paths become items at the entry's version; a ``dels``
+    record without ``v`` takes the entry's version."""
+    v = entry["version"]
+
+    def payload(p: dict) -> dict:
+        kind = "set" if "set" in p else "adds"
+        if (
+            not {"path", "paths", "pathsv", "stats"} & p.keys()
+            and all(type(x) is list for x in p.get(kind, ()))
+            and all("v" in d for d in p.get("dels", ()))
+        ):
+            return p
+        tail = [v, p["stats"]] if p.get("stats") else [v]
+        if "pathsv" in p:
+            kind, items = "set", p["pathsv"]
+        elif "paths" in p:
+            kind, items = "set", [[x, *tail] for x in p["paths"]]
+        elif "path" in p:
+            kind, items = "set", [[p["path"], *tail]]
+        else:
+            items = [
+                x if type(x) is list else [x, *tail] for x in p.get(kind, ())
+            ]
+        out = {
+            k: x for k, x in p.items()
+            if k not in ("path", "paths", "pathsv", "stats", "set", "adds")
+        }
+        out[kind] = items
+        if "dels" in p:
+            out["dels"] = [d if "v" in d else {**d, "v": v} for d in p["dels"]]
+        return out
+
+    if "tables" not in entry:
+        return payload(entry)
+    return {**entry, "tables": {n: payload(p) for n, p in entry["tables"].items()}}
+
+
 def _full_state(table_path: str) -> _LogState:
     """Cold parse: base array + consumed segment prefix. Segment entries
     whose version the base already holds are SKIPPED: a compaction that
@@ -196,7 +253,7 @@ def _full_state(table_path: str) -> _LogState:
             base = json.load(f)
     except FileNotFoundError:
         base = []
-    st.log = list(base)
+    st.log = [_canonical(e) for e in base]
     st.by_v = {e["version"]: e for e in st.log}
     try:
         with open(os.path.join(table_path, _SEG), "rb") as f:
@@ -206,8 +263,8 @@ def _full_state(table_path: str) -> _LogState:
     st.seg_off, entries = _parse_seg_chunk(data)
     for e in entries:
         if e["version"] not in st.by_v:
-            st.log.append(e)
-            st.by_v[e["version"]] = e
+            st.log.append(_canonical(e))
+            st.by_v[e["version"]] = st.log[-1]
     return st
 
 
@@ -236,8 +293,8 @@ def _refresh_state(table_path: str) -> _LogState:
                 consumed, entries = _parse_seg_chunk(data)
                 for e in entries:
                     if e["version"] not in st.by_v:
-                        st.log.append(e)
-                        st.by_v[e["version"]] = e
+                        st.log.append(_canonical(e))
+                        st.by_v[e["version"]] = st.log[-1]
                 st.seg_off += consumed
             _LOG_CACHE.move_to_end(table_path)
             return st
@@ -895,123 +952,198 @@ def _data_dir(table_path: str, kind: str, version: int) -> str:
     )
 
 
-def _resolve_paths(by_v: dict[int, dict], entry: dict) -> list[str]:
-    """A snapshot's full FILE set (list of directories), whatever the
-    entry format: walks delta entries' parent chains down to the
-    nearest materialized ancestor. Order is parent-set-then-adds, which
-    keeps ``read_incremental``'s subset/difference logic stable.
+# ---------------------------------------------------------------------------
+# The file-set core — one payload (``set`` | ``adds``, optional ``dels``;
+# see the module docstring), one walker, and the operations on file sets
+# both logs share. The workspace log reads a table's payload out of each
+# entry's ``tables`` (``payload_of``); everything else is the same.
 
-    Includes equality-DELETE directories (merge-on-read commits, round
-    14) — this function answers "which directories does this snapshot
-    need on disk", the question GC/expiry/orphan-cleanup ask, and a MoR
-    snapshot is unreadable without its delete files. Callers that SCAN
-    the result as data must use ``_resolve_scan`` instead (which
-    separates data dirs from delete files).
 
-    De-duplicated preserving first occurrence (ADVICE r14): an
-    update-strategy MoR commit's delta dir doubles as its delete file
-    (``_merge_into_mor``), so a naive walk would list that directory
-    twice — harmless to set-consumers, but an order/count-sensitive
-    consumer (dir accounting, incremental diffs) must never
-    double-read it."""
-    chain: list[list[str]] = []
-    e = entry
-    while True:
-        if "pathsv" in e:
-            base = [pv[0] for pv in e["pathsv"]]
-            base.extend(d["path"] for d in e.get("dels", []))
-            break
-        if "paths" in e:
-            base = list(e["paths"])
-            break
-        if "path" in e:
-            base = [e["path"]]
-            break
-        chain.append(
-            list(e.get("adds", []))
-            + [d["path"] for d in e.get("dels", [])]
+def _item(path: str, v: int, stats: dict | None = None) -> list:
+    """One payload item: the dir, the version that wrote it into this
+    lineage, and the dir's own stats when it has any."""
+    return [path, v, stats] if stats else [path, v]
+
+
+def _items(payload: dict) -> list:
+    return payload["set"] if "set" in payload else payload.get("adds", [])
+
+
+def _resolve(
+    by_v: dict[int, dict], head: int, payload_of=None
+) -> tuple[list[tuple], list[tuple]]:
+    """The one file-set walker: ``(data, dels)`` at version ``head``,
+    following ``_ancestry`` and collecting payloads down to the nearest
+    ``set``, in parent-then-adds order. ``data`` is ``[(dir, v,
+    stats), ...]``; ``dels`` is ``[(dir, (key_col, ...), v, stats),
+    ...]`` — the merge-on-read plan (Iceberg v2 row-level deletes, spec
+    §Row-level deletes): an equality-delete file at version V removes
+    matching rows from data items of STRICTLY EARLIER versions only, so
+    the same commit's insert delta (sequence number V) is exempt, which
+    is exactly how MERGE replaces a row in one sequence step.
+
+    ``payload_of(entry)``: the payload an entry holds for this file set
+    (``None`` = untouched, skip the entry) — the entry itself for the
+    table log (the default), ``entry["tables"].get(name)`` for a
+    workspace table. Every dir is listed as often as payloads name it:
+    an update merge's delta is both a data item and its own delete file
+    (``_needed_dirs`` de-duplicates)."""
+    chain: list[dict] = []
+    for v in _ancestry(by_v, head):
+        p = by_v[v] if payload_of is None else payload_of(by_v[v])
+        if p is not None:
+            chain.append(p)
+            if "set" in p:
+                break
+    data: list[tuple] = []
+    dels: list[tuple] = []
+    for p in reversed(chain):
+        data.extend((x[0], x[1], x[2] if len(x) > 2 else {}) for x in _items(p))
+        dels.extend(
+            (d["path"], tuple(d["on"]), d["v"], d.get("stats") or {})
+            for d in p.get("dels", ())
         )
-        e = by_v[e["parent"]]
-    for adds in reversed(chain):
-        base.extend(adds)
-    seen: set[str] = set()
-    out: list[str] = []
-    for p in base:
-        if p not in seen:
-            seen.add(p)
-            out.append(p)
+    return data, dels
+
+
+def _resolve_at(table_path: str, version: int) -> tuple[list, list]:
+    """``_resolve`` on a table's cached log state (no log copy)."""
+    with _locked_state(table_path) as st:
+        if version not in st.by_v:
+            raise ValueError(
+                f"version {version} not found (have {sorted(st.by_v)})"
+            )
+        return _resolve(st.by_v, version)
+
+
+def _needed_dirs(data: list[tuple], dels: list[tuple]) -> list[str]:
+    """The dirs a resolved snapshot needs on disk, data then delete
+    files, each once (ADVICE r14: an update merge's delta doubles as its
+    delete file, and a count must not see it twice)."""
+    return list(dict.fromkeys([x[0] for x in data] + [d[0] for d in dels]))
+
+
+def _materialize(data: list[tuple], dels: list[tuple]) -> dict:
+    """A resolved file set as one restatement payload ``{"set"[,
+    "dels"]}``. Every item keeps its own version and stats: delete
+    application is strictly-earlier-ordered, so one version for all
+    would resurrect deleted rows or delete the restoring delta's own
+    rows, and one stats dict for all would let ``read_pruned`` drop
+    inherited dirs (ADVICE r14)."""
+    out: dict = {"set": [_item(p, v, s) for p, v, s in data]}
+    if dels:
+        out["dels"] = [
+            {"path": p, "on": list(on), "v": v, **({"stats": s} if s else {})}
+            for p, on, v, s in dels
+        ]
     return out
 
 
-def _resolve_scan(
-    by_v: dict[int, dict], entry: dict
-) -> tuple[list[tuple], list[tuple]]:
-    """A snapshot's SCAN PLAN: ``(data, dels)`` where ``data`` is
-    ``[(dir, commit_version, stats_dict), ...]`` and ``dels`` is
-    ``[(dir, (key_col, ...), commit_version, stats_dict), ...]`` — the
-    merge-on-read resolution (Iceberg v2 row-level deletes, spec
-    §Row-level deletes): an equality-delete file committed at version V
-    removes matching rows from data files of STRICTLY EARLIER commits
-    only; the same commit's insert delta (sequence number V) is exempt,
-    which is exactly how MERGE replaces a row — delete-old + insert-new
-    in one sequence step.
+def _named_dirs(payloads) -> set[str]:
+    """Every dir any of ``payloads`` names (items and delete files),
+    normalized, with no resolution at all. Over the entries of one log
+    this is the union of their resolved sets: a walk only ever collects
+    payloads of entries still in the log."""
+    out: set[str] = set()
+    for p in payloads:
+        out.update(os.path.normpath(x[0]) for x in _items(p))
+        out.update(os.path.normpath(d["path"]) for d in p.get("dels", ()))
+    return out
 
-    Base-entry formats: ``pathsv`` (materialized MoR state — per-dir
-    original versions preserved so delete ordering survives expiry /
-    rollback materialization; entries are ``[path, v]`` or
-    ``[path, v, stats]`` — stats ride PER DIRECTORY, never from the
-    entry level, because a materialized entry's own ``stats`` key would
-    describe only the original delta's range and applying it to
-    inherited ancestor dirs could prune them wrongly, ADVICE r14) stops
-    the walk, as do legacy ``paths`` / ``path``. Delta entries
-    contribute ``adds`` at their own version and ``dels`` (dict
-    ``{"path", "on"}`` with optional ``"v"``/``"stats"`` — stats are
-    the key columns' [min, max] over the delete file, the input of
-    ``read_pruned``'s delete-file pruning, round 15)."""
-    chain: list[dict] = []
-    e = entry
-    dels: list[tuple] = []
-    while True:
-        if "pathsv" in e:
-            data = [
-                (pv[0], pv[1], pv[2] if len(pv) > 2 else {})
-                for pv in e["pathsv"]
-            ]
-            dels.extend(
-                (
-                    d["path"],
-                    tuple(d["on"]),
-                    d.get("v", e["version"]),
-                    d.get("stats") or {},
-                )
-                for d in e.get("dels", [])
-            )
-            break
-        if "paths" in e:
-            data = [
-                (p, e["version"], e.get("stats") or {}) for p in e["paths"]
-            ]
-            break
-        if "path" in e:
-            data = [(e["path"], e["version"], e.get("stats") or {})]
-            break
-        chain.append(e)
-        e = by_v[e["parent"]]
-    for ce in reversed(chain):
-        v = ce["version"]
-        st = ce.get("stats") or {}
-        data.extend((p, v, st) for p in ce.get("adds", []))
-        dels.extend(
-            (d["path"], tuple(d["on"]), d.get("v", v), d.get("stats") or {})
-            for d in ce.get("dels", [])
+
+def _append_delta(
+    spark: SparkSession, base: list[str], target: list[str], why: str
+) -> DataFrame:
+    """The incremental append scan both logs share: scan the dirs
+    ``target`` adds over ``base``, planned from metadata only. Raises
+    ``ValueError(why + ...)`` when ``base`` is not a subset of
+    ``target`` — files were rewritten, so the difference is not an
+    append delta (Iceberg's incremental scan raises the same way)."""
+    base_set = set(base)
+    if not base_set.issubset(target):
+        raise ValueError(f"{why}; incremental append scan is undefined")
+    delta = [p for p in target if p not in base_set]
+    if not delta:
+        return _read_dirs(spark, target).limit(0)
+    return _read_dirs(spark, delta)
+
+
+def _remove_unnamed(
+    candidates: list[str], named: set[str], older_than_ms: int | None
+) -> list[str]:
+    """The orphan sweep both logs share: remove every candidate dir no
+    entry names, except those modified at or after ``older_than_ms``
+    (the concurrent-writer safety window). Returns the removed dirs."""
+    import shutil
+
+    removed = []
+    for full in candidates:
+        if full not in named and (
+            older_than_ms is None
+            or os.path.getmtime(full) * 1000 < older_than_ms
+        ):
+            shutil.rmtree(full)
+            removed.append(full)
+    return removed
+
+
+#: The keys a materialized entry's ``restate`` replaces, in both logs.
+_PAYLOAD_KEYS = ("parent", "set", "adds", "dels", "tables", "views")
+
+
+def _expire_log(
+    log_path: str,
+    older_than_ms: int,
+    keep_last: int,
+    truncate_history: bool,
+    restate,
+    payloads,
+) -> list[int]:
+    """The expiry body both logs share, under the commit lock: select
+    the expirable entries (``_expirable``), MATERIALIZE every retained
+    entry whose parent goes away — its payload keys are replaced by
+    ``restate(by_v, entry)``, resolved on the full pre-prune log, and
+    ``root`` marks the explicit end of chain (without it the implicit
+    previous-version fallback walks into a foreign lineage, ADVICE r10)
+    — rewrite the log, drop expired idempotency keys, then delete every
+    dir the expired entries name and no retained entry names
+    (``payloads(entries)`` lists the entries' file-set payloads; append
+    commits share dirs across versions). Returns the expired versions."""
+    import shutil
+
+    with _log_lock(log_path):
+        log = _read_log(log_path)
+        expired = _expirable(
+            log_path, log, older_than_ms, keep_last, truncate_history
         )
-    return data, dels
+        if not expired:
+            return []
+        by_v = _by_version(log)
+        gone = {e["version"] for e in expired}
+        keep = [
+            {
+                **{k: x for k, x in e.items() if k not in _PAYLOAD_KEYS},
+                **restate(by_v, e),
+                "root": True,
+            }
+            if e.get("parent") in gone
+            else e
+            for e in log
+            if e["version"] not in gone
+        ]
+        _touch_lock(log_path)  # heartbeat before the long rewrite
+        _write_log(log_path, keep)
+        _drop_expired_keys(log_path, keep)
+    for p in _named_dirs(payloads(expired)) - _named_dirs(payloads(keep)):
+        shutil.rmtree(p, ignore_errors=True)
+    return [e["version"] for e in expired]
+
 
 
 def _read_mor(
     spark: SparkSession, data: list[tuple], dels: list[tuple]
 ) -> DataFrame:
-    """Execute a ``_resolve_scan`` plan: scan the data directories and
+    """Execute a ``_resolve`` plan: scan the data directories and
     apply equality-delete files as ANTI-JOINS — Iceberg v2's
     merge-on-read read path (m13's scan shape, now driven by the commit
     log itself). Data dirs sharing the same applicable-delete set are
@@ -1185,13 +1317,11 @@ def _commit_data(
         entry: dict = {
             "version": version,
             "ts_ms": int(time.time() * 1000) if ts_ms is None else ts_ms,
-            **({"path": ddir} if overwrite else {"adds": [ddir]}),
+            ("set" if overwrite else "adds"): [_item(ddir, version, stats)],
         }
         if parent_v is not None:
             entry["parent"] = parent_v
         entry["partition_by"] = partition_by
-        if stats:
-            entry["stats"] = stats
         if idempotency_key is not None:
             entry["idempotency_key"] = idempotency_key
         try:
@@ -1224,7 +1354,7 @@ def commit_snapshot(
     returns the new version number. Copy-on-write: existing versions are
     untouched.
 
-    ``stats_cols``: record per-column [min, max] in the commit entry —
+    ``stats_cols``: record per-column [min, max] on the commit's item —
     Iceberg's manifest column stats, which ``read_pruned`` uses to skip
     whole data directories from a range predicate without opening them.
 
@@ -1439,22 +1569,13 @@ def read_incremental(
     processes the day's appends, never the table. Overwrite commits in
     the range make the append-diff ill-defined (files were rewritten, not
     added); like Iceberg's incremental scan, that raises."""
-    log = _read_log(table_path)
-    by_v = _by_version(log)
-    if from_version not in by_v:
-        raise ValueError(f"version {from_version} not found")
     if to_version is None:
         to_version = _resolve_ref(table_path, "main")
-    to_entry = by_v.get(to_version)
-    if to_entry is None:
-        raise ValueError(f"version {to_version} not found")
-    _, from_dels = _resolve_scan(by_v, by_v[from_version])
-    _, to_dels = _resolve_scan(by_v, to_entry)
+    base, from_dels = _resolve_at(table_path, from_version)
+    target, to_dels = _resolve_at(table_path, to_version)
     # Identity of a delete file is (path, key cols, sequence version);
     # its stats dict is an unhashable pruning hint, not identity.
-    if {(p, on, v) for p, on, v, _s in from_dels} != {
-        (p, on, v) for p, on, v, _s in to_dels
-    }:
+    if {d[:3] for d in from_dels} != {d[:3] for d in to_dels}:
         # A merge-on-read commit in the range DELETED rows; the diff is
         # not an append set. Same honesty as the overwrite raise —
         # changelog_diff / compact_mor are the tools for this shape.
@@ -1463,17 +1584,10 @@ def read_incremental(
             "snapshots; incremental append scan is undefined — "
             "compact first or use a changelog diff"
         )
-    base = set(_resolve_paths(by_v, by_v[from_version]))
-    target = _resolve_paths(by_v, to_entry)
-    if not base.issubset(target):
-        raise ValueError(
-            "overwrite commit between the two snapshots; "
-            "incremental append scan is undefined"
-        )
-    delta = [p for p in target if p not in base]
-    if not delta:
-        return _read_dirs(spark, target).limit(0)
-    return _read_dirs(spark, delta)
+    return _append_delta(
+        spark, [x[0] for x in base], [x[0] for x in target],
+        "overwrite commit between the two snapshots",
+    )
 
 
 def _rng_disjoint(rng, lo, hi) -> bool:
@@ -1539,7 +1653,7 @@ def _delete_prunable(
 def _prune_plan(
     data: list[tuple], dels: list[tuple], col: str, lo, hi
 ) -> tuple[list[tuple], list[tuple], int, int]:
-    """Metadata-only pruning of a ``_resolve_scan`` plan against
+    """Metadata-only pruning of a ``_resolve`` plan against
     ``col`` ∈ [lo, hi]: returns (kept_data, kept_dels, n_data_pruned,
     n_dels_pruned). Data dirs prune on their own committed range;
     delete files prune via ``_delete_prunable``'s proofs against the
@@ -1611,14 +1725,9 @@ def read_pruned_detail(
     "dels_pruned"})`` so a caller (m56, maintenance planners) can see
     how much of the MoR delete debt the scan actually paid. ``version``
     defaults to ``main``'s head."""
-    log = _read_log(table_path)
-    if not log:
-        raise ValueError(f"no snapshots at {table_path}")
-    by_v = _by_version(log)
-    entry = by_v[
-        version if version is not None else _resolve_ref(table_path, "main")
-    ]
-    data, dels = _resolve_scan(by_v, entry)
+    if version is None:
+        version = _resolve_ref(table_path, "main")
+    data, dels = _resolve_at(table_path, version)
     kept, kept_dels, pruned, dels_pruned = _prune_plan(
         data, dels, col, lo, hi
     )
@@ -1657,29 +1766,25 @@ def read_snapshot_dirs(
     ``version``, ``TIMESTAMP AS OF`` via ``as_of_ts_ms`` (largest commit
     at-or-before the timestamp) — the fallback twin of
     ``catalog.ddl.read_snapshot``."""
-    log = _read_log(table_path)
-    if not log:
-        raise ValueError(f"no snapshots at {table_path}")
-    by_v = _by_version(log)
-    if version is not None:
-        entry = by_v.get(version)
-        if entry is None:
-            raise ValueError(f"version {version} not found (have "
-                             f"{sorted(by_v)})")
-    elif as_of_ts_ms is not None:
-        at_or_before = [e for e in log if e["ts_ms"] <= as_of_ts_ms]
+    if version is None and as_of_ts_ms is not None:
+        at_or_before = [
+            e for e in _read_log(table_path) if e["ts_ms"] <= as_of_ts_ms
+        ]
         if not at_or_before:
             raise ValueError(f"no snapshot at or before {as_of_ts_ms}")
         # commit_snapshot accepts caller-supplied ts_ms, so the log is
         # not guaranteed ts-ordered — pick the max timestamp, not the tail
-        entry = max(at_or_before, key=lambda e: e["ts_ms"])
-    else:
-        entry = by_v[_resolve_ref(table_path, "main")]
-    return _read_mor(spark, *_resolve_scan(by_v, entry))
+        version = max(at_or_before, key=lambda e: e["ts_ms"])["version"]
+    elif version is None:
+        version = _resolve_ref(table_path, "main")
+    return _read_mor(spark, *_resolve_at(table_path, version))
 
 
 def list_snapshots(table_path: str) -> list[dict]:
-    """The commit log (version, ts_ms, path metadata), oldest first."""
+    """The commit log, oldest first: each entry's ``version``, ``ts_ms``
+    and provenance keys plus its file-set payload — ``set`` or ``adds``
+    of ``[path, v(, stats)]`` items, optional ``dels`` (module
+    docstring). Older logs read back in this shape."""
     return list(_read_log(table_path))
 
 
@@ -2041,8 +2146,7 @@ def _ref_column_names(table_path: str, branch: str) -> list[str]:
     only — the schema compare is order-insensitive and type coercion
     is the write path's job (`_widen_numeric_types` on read). Raises
     ``ValueError`` naming any data dir ``_probe_dir`` cannot vouch for."""
-    by_v = _by_version(_read_log(table_path))
-    data, _dels = _resolve_scan(by_v, by_v[_resolve_ref(table_path, branch)])
+    data, _dels = _resolve_at(table_path, _resolve_ref(table_path, branch))
     names: list[str] = []
     for path, _v, _s in data:
         for n in _probe_dir(path)[1]:
@@ -2275,7 +2379,7 @@ def _merge_into_mor(
         delta = None
     if when_matched == "delete" and explicit_del_keys is None:
         explicit_del_keys = source.select(*on)
-    adds: list[str] = []
+    ddir = None
     resolve_delta_stats = None
     if delta is not None:
         # Stats ride the write job (r16, _stats_observer): the delta
@@ -2294,8 +2398,7 @@ def _merge_into_mor(
         if layout:
             w = w.partitionBy(*layout)
         w.parquet(ddir)
-        adds = [ddir]
-    del_entry: dict = {"on": list(on)}
+    del_entry: dict = {"on": list(on), "v": version}
     if explicit_del_keys is None:
         # The delta's key column IS the delete-key set for update
         # merges (update+insert: delta = source; update+ignore: delta =
@@ -2341,20 +2444,18 @@ def _merge_into_mor(
             else None
         )
     del_entry["path"] = del_dir
+    # The delta item's stats describe the delta only (the delete file
+    # carries its own key-range stats in the dels record — round 15); a
+    # pruned read skips the merge's insert delta on value ranges like
+    # any append, and skips the delete file when provably irrelevant.
     entry = {
         "version": version,
         "ts_ms": int(time.time() * 1000),
-        "adds": adds,
+        "adds": [_item(ddir, version, entry_stats)] if ddir else [],
         "dels": [del_entry],
         "parent": parent_v,
         "partition_by": layout,
     }
-    if entry_stats:
-        # Stats describe the DELTA only (the delete file carries its
-        # own key-range stats in the dels record — round 15); a pruned
-        # read skips the merge's insert delta on value ranges like any
-        # append, and skips the delete file when provably irrelevant.
-        entry["stats"] = entry_stats
     _append_commit(
         table_path,
         entry,
@@ -2371,10 +2472,7 @@ def mor_debt(table_path: str, ref: str = "main") -> int:
     planners poll: each unit is one anti-join on every read, so a
     maintenance job triggers ``compact_mor`` when debt crosses its
     threshold. Metadata-only."""
-    log = _read_log(table_path)
-    by_v = _by_version(log)
-    _, dels = _resolve_scan(by_v, by_v[_resolve_ref(table_path, ref)])
-    return len(dels)
+    return len(_resolve_at(table_path, _resolve_ref(table_path, ref))[1])
 
 
 def mor_dels_table(table_path: str, ref: str = "main") -> list[dict]:
@@ -2386,11 +2484,7 @@ def mor_dels_table(table_path: str, ref: str = "main") -> list[dict]:
     exists to surface), and how many earlier data dirs it can apply
     to. Metadata-only; the input a maintenance dashboard renders and
     ``mor_maintenance_plan`` decides from."""
-    log = _read_log(table_path)
-    by_v = _by_version(log)
-    data, dels = _resolve_scan(
-        by_v, by_v[_resolve_ref(table_path, ref)]
-    )
+    data, dels = _resolve_at(table_path, _resolve_ref(table_path, ref))
     out = []
     for dp, on, dv, ds in dels:
         rec = {
@@ -2433,11 +2527,7 @@ def mor_maintenance_plan(
 
     Returns ``{"debt", "statless_dels", "data_dirs", "overlap_pairs",
     "applicable_pairs", "decision"}``."""
-    log = _read_log(table_path)
-    by_v = _by_version(log)
-    data, dels = _resolve_scan(
-        by_v, by_v[_resolve_ref(table_path, ref)]
-    )
+    data, dels = _resolve_at(table_path, _resolve_ref(table_path, ref))
     statless = 0
     overlap_pairs = 0
     applicable_pairs = 0
@@ -2500,7 +2590,7 @@ def mor_changes(
     if version not in by_v:
         raise ValueError(f"version {version} not found")
     e = by_v[version]
-    ins = _read_dirs(spark, e["adds"]) if e.get("adds") else None
+    ins = _read_dirs(spark, [x[0] for x in e["adds"]]) if e.get("adds") else None
     dels = e.get("dels", [])
     delk = (
         _read_dirs(spark, [d["path"] for d in dels]) if dels else None
@@ -2653,6 +2743,7 @@ def merge_branch(
     log = _read_log(table_path)
     by_v = _by_version(log)
     head = log[-1]["version"]
+    version = head + 1
 
     def _segment_has_dels(head_v: int, stop_vs: set[int]) -> bool:
         # Merge-on-read commits in the segment being merged: their
@@ -2677,17 +2768,19 @@ def merge_branch(
                 f"whose delete ordering cannot be replayed; run "
                 f"compact_mor on {src!r} first"
             )
-        src_paths = _resolve_paths(by_v, by_v[src_v])
-        into_paths = _resolve_paths(by_v, by_v[into_v])
-        into_set = set(into_paths)
-        version = head + 1
-        if into_set.issubset(set(src_paths)):
+        src_data, src_dels = _resolve(by_v, src_v)
+        into_set = {x[0] for x in _resolve(by_v, into_v)[0]}
+        if into_set.issubset(x[0] for x in src_data):
             entry: dict = {
-                "adds": [p for p in src_paths if p not in into_set],
+                "adds": [
+                    _item(p, version, st)
+                    for p, _v, st in src_data
+                    if p not in into_set
+                ],
                 "parent": into_v,
             }
         else:  # a rollback in the chain broke pure addition: materialize
-            entry = {"paths": src_paths, "parent": into_v}
+            entry = {**_materialize(src_data, src_dels), "parent": into_v}
         entry.update(
             version=version,
             ts_ms=int(time.time() * 1000) if ts_ms is None else ts_ms,
@@ -2725,12 +2818,11 @@ def merge_branch(
             "(row-delete) commits since the merge base cannot be "
             "replayed at file granularity; run compact_mor first"
         )
-    base_paths = set(_resolve_paths(by_v, by_v[base_v]))
-    src_paths = _resolve_paths(by_v, by_v[src_v])
-    into_paths = _resolve_paths(by_v, by_v[into_v])
-    rewritten = sorted(
-        (base_paths - set(src_paths)) | (base_paths - set(into_paths))
-    )
+    base_paths = {x[0] for x in _resolve(by_v, base_v)[0]}
+    src_data = _resolve(by_v, src_v)[0]
+    src_paths = {x[0] for x in src_data}
+    into_paths = {x[0] for x in _resolve(by_v, into_v)[0]}
+    rewritten = sorted((base_paths - src_paths) | (base_paths - into_paths))
     if rewritten:
         raise ValueError(
             f"cannot merge {src!r} into {into!r}: files the merge base "
@@ -2739,13 +2831,13 @@ def merge_branch(
             "content needs a rebase"
         )
     _check_partition_layout(by_v[into_v], by_v[src_v].get("partition_by"))
-    into_set = set(into_paths)
     adds = [
-        p for p in src_paths if p not in base_paths and p not in into_set
+        _item(p, version, st)
+        for p, _v, st in src_data
+        if p not in base_paths and p not in into_paths
     ]
     if not adds:  # source's additions all present (e.g. transplanted over)
         return into_v
-    version = head + 1
     _append_commit(
         table_path,
         {
@@ -2794,22 +2886,22 @@ def transplant(
             "commit; its delete file's ordering is version-relative "
             "and cannot be transplanted — compact first"
         )
-    parent_paths = set(_resolve_paths(by_v, by_v[src["parent"]]))
-    src_paths = set(_resolve_paths(by_v, src))
-    if not parent_paths.issubset(src_paths):
+    parent_paths = {x[0] for x in _resolve(by_v, src["parent"])[0]}
+    src_data = _resolve(by_v, src_version)[0]
+    if not parent_paths.issubset(x[0] for x in src_data):
         raise ValueError(
             f"commit v{src_version} rewrote files (overwrite); "
             "its delta is undefined against another base"
         )
-    delta = [
-        p for p in _resolve_paths(by_v, src) if p not in parent_paths
-    ]
     onto_v = refs["branches"][onto]
-    onto_paths = _resolve_paths(by_v, by_v[onto_v])
-    if set(delta) & set(onto_paths):
-        raise ValueError("transplant target already contains the delta")
+    onto_paths = {x[0] for x in _resolve(by_v, onto_v)[0]}
     head = log[-1]["version"]
     version = head + 1
+    # the delta joins ``onto`` at the new version: deletes committed on
+    # ``onto`` before it must not apply to it
+    delta = [_item(p, version, st) for p, _v, st in src_data if p not in parent_paths]
+    if any(x[0] in onto_paths for x in delta):
+        raise ValueError("transplant target already contains the delta")
     _append_commit(
         table_path,
         {
@@ -2873,10 +2965,11 @@ def remove_orphan_dirs(
     from a directory listing, difference removed. Returns removed paths.
     At 100 TB the listing is the only cost.
 
-    Every log entry's resolved file set counts as referenced — and since
-    refs point at log entries that ``expire_snapshots_dirs`` now refuses
-    to prune, a tagged snapshot's directories can never be collected
-    here while the tag lives.
+    Every dir any log entry names counts as referenced (``_named_dirs``:
+    the union of every entry's resolved set, with no resolution) — and
+    since refs point at log entries that ``expire_snapshots_dirs``
+    refuses to prune, a tagged snapshot's directories can never be
+    collected here while the tag lives.
 
     ``older_than_ms`` is Iceberg's safety window (epoch-ms cutoff):
     directories whose mtime is at or after the cutoff are NOT deleted,
@@ -2886,64 +2979,15 @@ def remove_orphan_dirs(
     flight (the shape m21 exercises); any concurrent-writer deployment
     must pass a cutoff of now minus several hours, as real Iceberg
     defaults to (``older_than = 3 days``)."""
-    import re
-    import shutil
-
-    log = _read_log(table_path)
-    by_v = _by_version(log)
-    referenced = {
-        os.path.normpath(p)
-        for e in log
-        for p in _resolve_paths(by_v, e)
-    }
-    removed = []
     pat = re.compile(r"^[vde]\d+(-[0-9a-f]{8})?$")
-    for name in sorted(os.listdir(table_path)):
-        full = os.path.normpath(os.path.join(table_path, name))
-        if (
-            pat.match(name)
-            and os.path.isdir(full)
-            and full not in referenced
-            and (
-                older_than_ms is None
-                or os.path.getmtime(full) * 1000 < older_than_ms
-            )
-        ):
-            shutil.rmtree(full)
-            removed.append(full)
-    return removed
-
-
-def _materialize_state(by_v: dict[int, dict], entry: dict) -> dict:
-    """Inline a snapshot's resolved state as base-entry fields (rollback
-    and expiry materialization). Plain histories flatten to ``paths``;
-    merge-on-read histories flatten to ``pathsv`` + versioned ``dels`` —
-    per-directory ORIGINAL commit versions preserved, because delete
-    application is strictly-earlier-ordered and collapsing everything to
-    one version would either resurrect deleted rows or delete the
-    restoring delta's own rows.
-
-    Stats are preserved PER DIRECTORY (``[path, v, stats]`` pathsv
-    triples / ``stats`` on each dels record — ADVICE r14: an
-    entry-LEVEL stats dict on a materialized entry would claim the
-    original delta's range for every inherited dir and let
-    ``read_pruned`` silently drop rows), so value-range skippability
-    survives rollback/expiry materialization instead of degrading to
-    full scans."""
-    data, dels = _resolve_scan(by_v, entry)
-    if not dels and not any(s for _p, _v, s in data):
-        return {"paths": [p for p, _v, _s in data]}
-    out: dict = {
-        "pathsv": [
-            [p, v, s] if s else [p, v] for p, v, s in data
-        ]
-    }
-    if dels:
-        out["dels"] = [
-            {"path": p, "on": list(on), "v": v, **({"stats": s} if s else {})}
-            for p, on, v, s in dels
-        ]
-    return out
+    candidates = [
+        os.path.normpath(os.path.join(table_path, name))
+        for name in sorted(os.listdir(table_path))
+        if pat.match(name) and os.path.isdir(os.path.join(table_path, name))
+    ]
+    return _remove_unnamed(
+        candidates, _named_dirs(_read_log(table_path)), older_than_ms
+    )
 
 
 def rollback_to(table_path: str, version: int, ts_ms: int | None = None) -> int:
@@ -2956,20 +3000,18 @@ def rollback_to(table_path: str, version: int, ts_ms: int | None = None) -> int:
     other pre-ref writers it is a ``main`` commit: parented on ``main``'s
     head, moving the pointer only when ``_refs.json`` pins ``main``, so
     ``read_ref(main)`` and the default read agree."""
-    by_v = _by_version(_read_log(table_path))
-    if version not in by_v:
-        raise ValueError(
-            f"version {version} not found (have {sorted(by_v)})"
-        )
+    restated = _materialize(*_resolve_at(table_path, version))
     refs, parent_v, _parent_entry, head = _plan_commit(table_path, "main")
+    with _locked_state(table_path) as st:
+        layout = st.by_v[version].get("partition_by")
     _append_commit(
         table_path,
         {
             "version": head + 1,
             "ts_ms": int(time.time() * 1000) if ts_ms is None else ts_ms,
-            **_materialize_state(by_v, by_v[version]),
+            **restated,
             "parent": parent_v,
-            "partition_by": by_v[version].get("partition_by"),
+            "partition_by": layout,
         },
         expected_head=head,
         move_branch="main" if "main" in refs["branches"] else None,
@@ -2993,9 +3035,9 @@ def expire_snapshots_dirs(
     (where no retained snapshot shares them) and the commit log is
     rewritten atomically under the commit lock.
 
-    Retained delta entries whose parent chain lost an entry are
-    MATERIALIZED (their full resolved path list is written inline) so
-    they stay readable without the pruned ancestor.
+    Retained entries whose parent is expired are MATERIALIZED (their
+    resolved file set is restated inline, ``_materialize``) so they stay
+    readable without the pruned ancestor.
 
     ``truncate_history``: streaming retention mode — ref protection
     covers only branch heads and tag pins, not their ancestry, so a
@@ -3004,55 +3046,8 @@ def expire_snapshots_dirs(
     forever by its own head's reachability. The retained boundary
     entries are materialized as usual. The idempotency window shrinks
     with the history: pick a cutoff beyond any possible batch replay."""
-    import shutil
-
-    with _log_lock(table_path):
-        log = _read_log(table_path)
-        expired = _expirable(
-            table_path, log, older_than_ms, keep_last, truncate_history
-        )
-        if not expired:
-            return []
-        by_v = _by_version(log)
-        expired_vs = {e["version"] for e in expired}
-        keep = []
-        for e in log:
-            if e["version"] in expired_vs:
-                continue
-            if (
-                ("adds" in e or "dels" in e)
-                and e.get("parent") in expired_vs
-            ):
-                # Materialize: the nearest ancestor is going away, so
-                # inline the resolved set (resolution runs on the FULL
-                # pre-prune log). 'parent' is dropped — it would dangle —
-                # and 'root' marks the EXPLICIT end of chain: without it
-                # the implicit previous-version fallback would walk a
-                # materialized entry's ancestry into a foreign lineage
-                # in a branched log (ADVICE r10). 'stats' is dropped too
-                # (ADVICE r14): it described only THIS entry's delta,
-                # and a materialized entry's paths include inherited
-                # ancestor dirs the range does not cover — keeping it
-                # would let read_pruned drop their rows. Per-dir stats
-                # ride inside _materialize_state's pathsv instead.
-                e = {
-                    k: v
-                    for k, v in e.items()
-                    if k not in ("adds", "parent", "dels", "stats")
-                }
-                e.update(_materialize_state(by_v, by_v[e["version"]]))
-                e["root"] = True
-            keep.append(e)
-        _touch_lock(table_path)  # heartbeat before the long rewrite
-        _write_log(table_path, keep)
-        _drop_expired_keys(table_path, keep)
-    # Delete only data directories no retained snapshot still references —
-    # append commits share files across snapshots (Iceberg's
-    # remove-orphan-files discipline, not per-snapshot delete).
-    keep_by_v = _by_version(keep)
-    still_referenced = {p for e in keep for p in _resolve_paths(keep_by_v, e)}
-    for e in expired:
-        for p in _resolve_paths(by_v, e):
-            if p not in still_referenced:
-                shutil.rmtree(p, ignore_errors=True)
-    return [e["version"] for e in expired]
+    return _expire_log(
+        table_path, older_than_ms, keep_last, truncate_history,
+        lambda by_v, e: _materialize(*_resolve(by_v, e["version"])),
+        lambda entries: entries,
+    )

@@ -13,29 +13,38 @@ This module lifts the same commit log one level up:
 
     <workspace>/
       _versions.json     # ONE log for ALL tables: [{version, ts_ms,
-      _versions.jsonl    #   parent, tables: {name: {"adds": [...]}
-                         #                        | {"set": [...]}}}]
+      _versions.jsonl    #   parent, tables: {name: {"adds": [item, ...]}
+                         #                      | {"set": [item, ...]}}}]
+                         #   item = [path, v]: the dir and the version
+                         #   that wrote it into this lineage
       _refs.json         # workspace-level branches/tags — and like
                          #   Nessie's, a workspace BRANCH spans every table
       <table>/w{N}-<tok>/  # immutable data dirs, one per table per commit
 
-A commit entry names only the tables it TOUCHED, each as a delta
-(``adds``) or a restatement (``set``), and records its ``parent``
-workspace version, so history is a TREE: resolving table T at version V
-walks V's parent chain collecting adds until a set. Readers of one
-version therefore see every table exactly as that single commit left the
-workspace — both tables of a publish, or neither — and a branch isolates
-multi-table work-in-progress until one merge publishes ALL of it (the
-catalog-level branch-WAP m36 oracle-checks; m30 is the same workflow one
-table at a time).
+A commit entry names only the tables it TOUCHED, each in the table
+log's one file-set payload — a delta (``adds``) or a restatement
+(``set``) — and records its ``parent`` workspace version, so history is
+a TREE: resolving table T at version V is the table log's one walker
+(``_resolve``) reading T's payload out of each entry along V's parent
+chain, collecting adds until a set. An empty ``set`` is a tombstone:
+the table does not exist at that version. Readers of one version
+therefore see every table exactly as that single commit left the
+workspace — both tables of a publish, or neither — and a branch
+isolates multi-table work-in-progress until one merge publishes ALL of
+it (the catalog-level branch-WAP m36 oracle-checks; m30 is the same
+workflow one table at a time).
 
-Everything below the entry payload is the table log's machinery,
-imported from ``snapshots.py`` — one implementation for both layers: the
-base + append-segment log files, refs I/O, the one ancestry walk
-(``_ancestry``), ref resolution and the ``main`` rule (``_resolve_ref``:
-the pinned pointer, else the log tail), the idempotency-key lookup,
-ref protection and key hygiene for expiry, and the commit step. Data
-commits (``ws_commit``) write their data dirs first and then run the CAS
+Everything else is the table log's machinery, imported from
+``snapshots.py`` — one implementation for both layers: the base +
+append-segment log files and the parse-time upgrade of older payloads
+(``_canonical``), refs I/O, the one ancestry walk (``_ancestry``), ref
+resolution and the ``main`` rule (``_resolve_ref``: the pinned pointer,
+else the log tail), the idempotency-key lookup, the file-set walker and
+the operations on file sets (materialization, the append delta, the
+orphan sweep, the expiry body), and the commit step. This module keeps
+what is about many tables: the per-table payloads, merges, rollbacks
+and diffs across tables, renames and views. Data commits
+(``ws_commit``) write their data dirs first and then run the CAS
 (``_append_commit``); the metadata-only commits (rename, views, merge,
 transplant, rollback) plan inside the ``O_EXCL`` lock and call the
 in-lock step (``_commit_locked``) directly, since the lock is not
@@ -54,22 +63,26 @@ from apache_iceberg_spark.catalog.snapshots import (  # noqa: F401
     CommitConflict,
     _ancestry,
     _append_commit,
+    _append_delta,
+    _by_version,
     _commit_locked,
     _create_ref,
     _data_dir,
-    _drop_expired_keys,
     _ensure_main,
-    _expirable,
+    _expire_log,
     _find_idempotent,
+    _item,
     _locked_state,
+    _materialize,
+    _named_dirs,
     _plan_commit,
     _log_lock,
     _read_dirs,
     _read_log,
     _read_refs,
+    _remove_unnamed,
+    _resolve,
     _resolve_ref,
-    _touch_lock,
-    _write_log,
     _write_refs,
     compact_log as ws_compact_log,
     create_branch as ws_create_branch,
@@ -80,83 +93,85 @@ from apache_iceberg_spark.catalog.snapshots import (  # noqa: F401
 ws_resolve_ref = _resolve_ref
 
 
-def _resolve_table(
-    log: list[dict], table: str, version: int | None = None
-) -> list[str] | None:
-    """Table ``table``'s full file set at ``version`` (default: the log
-    tail): walk the version's PARENT CHAIN collecting ``adds`` until a
-    ``set``. None if the table does not exist at that version. For a
-    linear history this is the backwards log walk; for branched history
-    it follows the right lineage."""
-    if not log:
-        return None
-    by_v = {e["version"]: e for e in log}
-    if version is None:
-        version = log[-1]["version"]
-    elif version not in by_v:
+def _ws_table(
+    by_v: dict[int, dict], version: int, table: str
+) -> list[tuple] | None:
+    """Table ``table``'s items ``[(dir, v, stats), ...]`` at ``version``:
+    the one walker over each entry's payload for it. ``None`` when the
+    table does not exist there — never touched on the lineage, or
+    tombstoned by an EMPTY restatement (``{"set": []}``, which
+    ``ws_rollback`` and renames emit; every real commit writes at least
+    one dir, so empty never means "table with no files")."""
+    if version not in by_v:
         raise ValueError(
             f"version {version} not found (have {sorted(by_v)})"
         )
-    chain: list[list[str]] = []
-    for v in _ancestry(by_v, version):
-        t = by_v[v]["tables"].get(table)
-        if t is None:
-            continue
-        if "set" in t:
-            chain.append(t["set"])
-            break
-        chain.append(t["adds"])
-    out: list[str] = []
-    for part in reversed(chain):
-        out.extend(part)
-    # an EMPTY restatement ({"set": []}) is a tombstone: ws_rollback
-    # emits it for tables created after the rollback target, so they
-    # read as absent at the new version (every real commit writes at
-    # least one dir, so empty never means "table with no files")
-    return out if out else None
+    data, _dels = _resolve(by_v, version, lambda e: e["tables"].get(table))
+    return data or None
 
 
-def _table_layout(by_v: dict[int, dict], version: int, table: str):
-    """The most recently recorded ``partition_by`` for ``table`` along
-    ``version``'s lineage; the sentinel ``"unknown"`` when no touching
-    entry recorded one (pre-validation commits)."""
-    for v in _ancestry(by_v, version):
-        t = by_v[v]["tables"].get(table)
-        if t is not None:
-            return t.get("partition_by", "unknown")
-    return "unknown"
+def _paths(items: list[tuple] | None) -> list[str]:
+    return [x[0] for x in items or ()]
 
 
-def _ws_first_touch(st, table: str, version: int | None):
+def _ws_payloads(entries):
+    """Every per-table payload of ``entries`` — what orphan sweeps and
+    expiry take the named dirs from."""
+    return (p for e in entries for p in e["tables"].values())
+
+
+def _ws_first_touch(by_v: dict[int, dict], table: str, version: int | None):
     """(exists, layout) for ``table`` along ``version``'s lineage from
     its FIRST touching entry — the commit plan's existence + layout
     check in O(steps to the last touch) instead of a full file-set
     resolution (for a table committed every micro-batch that is ONE
-    step). An empty ``set`` is the tombstone (absent); ``adds`` implies
-    a live parent (appends to a tombstoned table are creations by the
-    caller's own rule), so any touch that is not an empty set means the
-    table exists. Runs on the shared cached state: call under
-    ``_locked_state``."""
-    for v in _ancestry(st.by_v, version):
-        t = st.by_v[v]["tables"].get(table)
+    step), and the layout every restatement carries. An empty ``set``
+    is the tombstone (absent); ``adds`` implies a live parent (appends
+    to a tombstoned table are creations by the caller's own rule), so
+    any touch that is not an empty set means the table exists. The
+    layout is the sentinel ``"unknown"`` when no touching entry recorded
+    one (pre-validation commits)."""
+    for v in _ancestry(by_v, version):
+        t = by_v[v]["tables"].get(table)
         if t is not None:
             exists = bool(t["set"]) if "set" in t else True
             return exists, t.get("partition_by", "unknown")
     return False, "unknown"
 
 
+def _ws_restate(by_v: dict[int, dict], version: int) -> dict:
+    """The whole workspace at ``version`` as one metadata payload
+    ``{"tables"[, "views"]}``: every live table restated
+    (``_materialize``) with its layout, every live view's definition —
+    what a rollback commits and what expiry inlines into an entry whose
+    parent goes away."""
+    tables: dict[str, dict] = {}
+    for n in sorted({n for e in by_v.values() for n in e["tables"]}):
+        items = _ws_table(by_v, version, n)
+        if items is not None:
+            tables[n] = _materialize(items, [])
+            layout = _ws_first_touch(by_v, n, version)[1]
+            if layout != "unknown":
+                tables[n]["partition_by"] = layout
+    out: dict = {"tables": tables}
+    views = _resolve_views(by_v, version)
+    if views:
+        out["views"] = {n: {"sql": sql} for n, sql in views.items()}
+    return out
+
+
 def _log_at(ws_path: str, version: int | None = None, ref: str | None = None):
-    """``(log, version)`` for a read at ``version`` or ``ref`` — by the
+    """``(by_v, version)`` for a read at ``version`` or ``ref`` — by the
     ``main`` rule, ``main``'s head when neither is given (``None`` on an
     empty log)."""
     if ref is not None:
         if version is not None:
             raise ValueError("pass version or ref, not both")
         version = _resolve_ref(ws_path, ref)
-    log = _read_log(ws_path)
-    if version is None and log:
+    by_v = _by_version(_read_log(ws_path))
+    if version is None and by_v:
         version = _resolve_ref(ws_path, "main")
-    return log, version
+    return by_v, version
 
 
 def ws_commit(
@@ -234,7 +249,9 @@ def ws_commit(
     for attempt in range(max_retries + 1):
         refs, parent_v, _parent_entry, head = _plan_commit(ws_path, branch)
         with _locked_state(ws_path) as st:
-            touch = {name: _ws_first_touch(st, name, parent_v) for name in dfs}
+            touch = {
+                name: _ws_first_touch(st.by_v, name, parent_v) for name in dfs
+            }
         if idempotency_key is not None:
             found = _find_idempotent(
                 ws_path, refs, branch, parent_v, idempotency_key
@@ -270,7 +287,9 @@ def ws_commit(
                     w.parquet(ddir)
                 written[name] = ddir
             kind = "set" if mode == "overwrite" or not exists else "adds"
-            tables[name] = {kind: [written[name]], "partition_by": pby}
+            tables[name] = {
+                kind: [_item(written[name], version)], "partition_by": pby
+            }
         entry = {
             "version": version,
             "ts_ms": int(time.time() * 1000) if ts_ms is None else ts_ms,
@@ -307,13 +326,13 @@ def ws_read(
     is WORKSPACE-scoped, two ``ws_read`` calls with the same version (or
     the same tag/branch) are guaranteed mutually consistent — the
     cross-table read contract m34 oracle-checks."""
-    log, version = _log_at(ws_path, version, ref)
-    if not log:
+    by_v, version = _log_at(ws_path, version, ref)
+    if not by_v:
         raise ValueError(f"no commits at {ws_path}")
-    paths = _resolve_table(log, table, version)
-    if paths is None:
+    items = _ws_table(by_v, version, table)
+    if items is None:
         raise ValueError(f"table {table!r} does not exist at v{version}")
-    return _read_dirs(spark, paths)
+    return _read_dirs(spark, _paths(items))
 
 
 def ws_read_at(spark: SparkSession, ws_path: str, name: str) -> DataFrame:
@@ -331,11 +350,11 @@ def ws_read_at(spark: SparkSession, ws_path: str, name: str) -> DataFrame:
     together. Tables win a (disallowed but legacy-possible) name
     collision, matching ws_create_view's namespace rule."""
     table, ref = parse_at_ref(name)
-    log = _read_log(ws_path)
+    by_v = _by_version(_read_log(ws_path))
     version = _resolve_ref(ws_path, ref)
     if (
-        _resolve_table(log, table, version) is None
-        and table in _resolve_views(log, version)
+        _ws_table(by_v, version, table) is None
+        and table in _resolve_views(by_v, version)
     ):
         return ws_read_view(spark, ws_path, table, version=version)
     return ws_read(spark, ws_path, table, ref=ref)
@@ -353,34 +372,31 @@ def ws_read_incremental(
     audit input of the multi-table branch-WAP (m36): gates scan ONLY
     the staged delta files, never the table. Raises if files were
     rewritten in the range (the diff is then not an append delta)."""
-    log = _read_log(ws_path)
-    base = _resolve_table(log, table, from_version)
-    target = _resolve_table(log, table, to_version)
+    by_v = _by_version(_read_log(ws_path))
+    base = _ws_table(by_v, from_version, table)
+    target = _ws_table(by_v, to_version, table)
     if target is None:
         raise ValueError(f"table {table!r} does not exist at v{to_version}")
-    base_set = set(base or [])
-    if not base_set.issubset(target):
-        raise ValueError(
-            "files were rewritten between the two versions; the "
-            "incremental append scan is undefined"
-        )
-    delta = [p for p in target if p not in base_set]
-    if not delta:
-        return _read_dirs(spark, target).limit(0)
-    return _read_dirs(spark, delta)
+    return _append_delta(
+        spark, _paths(base), _paths(target),
+        "files were rewritten between the two versions",
+    )
 
 
 def ws_list_versions(ws_path: str) -> list[dict]:
+    """The workspace log, oldest first: each entry's ``version``,
+    ``ts_ms``, provenance keys and ``tables`` — per touched table a
+    ``set`` or ``adds`` of ``[path, v]`` items (plus ``partition_by``)
+    — and ``views`` when it changed any. Older logs read back in this
+    shape."""
     return list(_read_log(ws_path))
 
 
 def ws_list_tables(ws_path: str, version: int | None = None) -> list[str]:
     """Every table that exists at ``version`` (default: main's head)."""
-    log, version = _log_at(ws_path, version)
-    names = {n for e in log for n in e["tables"]}
-    return sorted(
-        n for n in names if _resolve_table(log, n, version) is not None
-    )
+    by_v, version = _log_at(ws_path, version)
+    names = {n for e in by_v.values() for n in e["tables"]}
+    return sorted(n for n in names if _ws_table(by_v, version, n) is not None)
 
 
 def ws_create_tag(ws_path: str, name: str, version: int | None = None) -> int:
@@ -419,7 +435,7 @@ def ws_merge_branch(
         # merge is pure metadata, and appending to a log read OUTSIDE
         # the lock would drop a commit that landed in between.
         log = _read_log(ws_path)
-        by_v = {e["version"]: e for e in log}
+        by_v = _by_version(log)
         refs = _ensure_main(ws_path, _read_refs(ws_path))
         for r in (src, into):
             if r not in refs["branches"]:
@@ -447,18 +463,19 @@ def ws_merge_branch(
             for x in _ancestry(by_v, v)
             for n in by_v[x]["tables"]
         }
+        version = log[-1]["version"] + 1
         tables: dict[str, dict] = {}
         conflicts: list[str] = []
         for n in sorted(names):
-            b = set(_resolve_table(log, n, base_v) or [])
-            s = _resolve_table(log, n, src_v)
-            t = _resolve_table(log, n, into_v)
-            s_set, t_set = set(s or []), set(t or [])
+            b = set(_paths(_ws_table(by_v, base_v, n)))
+            s_items = _ws_table(by_v, src_v, n) or []
+            s = _paths(s_items)
+            s_set, t_set = set(s), set(_paths(_ws_table(by_v, into_v, n)))
             if s_set == t_set:
                 continue  # untouched or identical on both sides
             if s_set == b:
                 continue  # only target touched: its state stands
-            s_layout = _table_layout(by_v, src_v, n)
+            s_layout = _ws_first_touch(by_v, n, src_v)[1]
             if t_set == b:
                 # Only src touched it: replay src wholesale — additions
                 # as a delta, a rewrite or creation as a restatement.
@@ -471,18 +488,18 @@ def ws_merge_branch(
                     else {"partition_by": s_layout}
                 )
                 if b and b.issubset(s_set):
-                    adds = [p for p in (s or []) if p not in b]
+                    adds = [_item(p, version) for p in s if p not in b]
                     if adds:
                         tables[n] = {"adds": adds, **extra}
                 else:
-                    tables[n] = {"set": list(s or []), **extra}
+                    tables[n] = {**_materialize(s_items, []), **extra}
                 continue
             # Both sides diverged from the base: mergeable only when
             # both purely added (concurrent ingest).
             if not (b.issubset(s_set) and b.issubset(t_set)):
                 conflicts.append(n)
                 continue
-            t_layout = _table_layout(by_v, into_v, n)
+            t_layout = _ws_first_touch(by_v, n, into_v)[1]
             if (
                 s_layout != "unknown"
                 and t_layout != "unknown"
@@ -491,7 +508,7 @@ def ws_merge_branch(
                 conflicts.append(n)  # incompatible partition layouts
                 continue
             adds = [
-                p for p in (s or []) if p not in b and p not in t_set
+                _item(p, version) for p in s if p not in b and p not in t_set
             ]
             # carry the layout so validation stays armed after a merge
             layout = s_layout if s_layout != "unknown" else t_layout
@@ -503,9 +520,9 @@ def ws_merge_branch(
         # Views three-way-merge by definition text (round 14): a view
         # only one side changed replays that side; both-changed-
         # differently is a conflict like a both-rewritten table.
-        base_views = _resolve_views(log, base_v)
-        src_views = _resolve_views(log, src_v)
-        into_views = _resolve_views(log, into_v)
+        base_views = _resolve_views(by_v, base_v)
+        src_views = _resolve_views(by_v, src_v)
+        into_views = _resolve_views(by_v, into_v)
         views: dict[str, dict] = {}
         for n in sorted(set(base_views) | set(src_views) | set(into_views)):
             bv, sv, tv = base_views.get(n), src_views.get(n), into_views.get(n)
@@ -530,10 +547,10 @@ def ws_merge_branch(
         return _commit_meta_locked(ws_path, log, into, into_v, ts_ms, entry)
 
 
-def _resolve_any(ws_path: str, log: list[dict], ref) -> int:
+def _resolve_any(ws_path: str, by_v: dict[int, dict], ref) -> int:
     """A workspace version from either an explicit int or a ref name."""
     if isinstance(ref, int):
-        if ref not in {e["version"] for e in log}:
+        if ref not in by_v:
             raise ValueError(f"version {ref} not found")
         return ref
     return _resolve_ref(ws_path, ref)
@@ -552,19 +569,19 @@ def ws_diff(ws_path: str, from_ref, to_ref) -> dict[str, dict]:
     two lineage resolutions per table, zero data bytes read — the
     returned directory lists are exactly what an incremental consumer
     scans, so the diff is also the PLAN of the minimal catch-up read."""
-    log = _read_log(ws_path)
-    fv = _resolve_any(ws_path, log, from_ref)
-    tv = _resolve_any(ws_path, log, to_ref)
-    names = {n for e in log for n in e["tables"]}
+    by_v = _by_version(_read_log(ws_path))
+    fv = _resolve_any(ws_path, by_v, from_ref)
+    tv = _resolve_any(ws_path, by_v, to_ref)
+    names = {n for e in by_v.values() for n in e["tables"]}
     out: dict[str, dict] = {}
     for n in sorted(names):
-        a = _resolve_table(log, n, fv)
-        b = _resolve_table(log, n, tv)
-        a_set, b_set = set(a or []), set(b or [])
+        a = _ws_table(by_v, fv, n)
+        b = _ws_table(by_v, tv, n)
+        a_set, b_set = set(_paths(a)), set(_paths(b))
         if a_set == b_set:
             continue
-        added = [p for p in (b or []) if p not in a_set]
-        removed = [p for p in (a or []) if p not in b_set]
+        added = [p for p in _paths(b) if p not in a_set]
+        removed = [p for p in _paths(a) if p not in b_set]
         if a is None:
             change = "created"
         elif b is None:
@@ -594,7 +611,7 @@ def ws_transplant(
     transplants. Metadata-only under the commit lock; zero data moved."""
     with _log_lock(ws_path):
         log = _read_log(ws_path)
-        by_v = {e["version"]: e for e in log}
+        by_v = _by_version(log)
         refs = _ensure_main(ws_path, _read_refs(ws_path))
         if onto not in refs["branches"]:
             raise ValueError(f"unknown branch {onto!r}")
@@ -608,12 +625,13 @@ def ws_transplant(
             )
         parent_v = src["parent"]
         onto_v = refs["branches"][onto]
+        version = log[-1]["version"] + 1
         tables: dict[str, dict] = {}
         for n in sorted(src["tables"]):
             t = src["tables"][n]
-            onto_paths = _resolve_table(log, n, onto_v)
+            onto_paths = _ws_table(by_v, onto_v, n)
             if "set" in t:
-                if _resolve_table(log, n, parent_v) is not None:
+                if _ws_table(by_v, parent_v, n) is not None:
                     raise ValueError(
                         f"commit v{src_version} rewrote table {n!r}; "
                         "its delta is undefined against another base"
@@ -625,14 +643,17 @@ def ws_transplant(
                     )
                 delta: dict = {"set": list(t["set"])}
             else:
-                onto_set = set(onto_paths or [])
-                adds = [p for p in t["adds"] if p not in onto_set]
+                onto_set = set(_paths(onto_paths))
+                adds = [
+                    _item(x[0], version) for x in t["adds"]
+                    if x[0] not in onto_set
+                ]
                 if not adds:
                     continue  # the delta is already on the target
                 if onto_paths is None:
                     delta = {"set": adds}  # absent target: arrives whole
                 else:
-                    t_layout = _table_layout(by_v, onto_v, n)
+                    t_layout = _ws_first_touch(by_v, n, onto_v)[1]
                     s_layout = t.get("partition_by", "unknown")
                     if (
                         t_layout != "unknown"
@@ -671,84 +692,53 @@ def ws_rollback(
     (same CAS discipline as ``ws_commit``)."""
     with _log_lock(ws_path):
         log = _read_log(ws_path)
-        by_v = {e["version"]: e for e in log}
+        by_v = _by_version(log)
         if version not in by_v:
             raise ValueError(
                 f"version {version} not found (have {sorted(by_v)})"
             )
         _refs, head_v, _entry, _head = _plan_commit(ws_path, branch)
-        names = {n for e in log for n in e["tables"]}
-        tables: dict[str, dict] = {}
-        for n in sorted(names):
-            paths = _resolve_table(log, n, version)
-            if paths is None:
-                # absent at the target: if it exists at the head it was
-                # created after V — tombstone it (empty restatement)
-                if _resolve_table(log, n, head_v) is not None:
-                    tables[n] = {"set": []}
-                continue
-            tables[n] = {"set": list(paths)}
-            layout = _table_layout(by_v, version, n)
-            if layout != "unknown":
-                tables[n]["partition_by"] = layout
-        # Views roll back too (round 14): the target's definitions
-        # restate, and views created after the target tombstone — the
-        # same atomic-undo property as the table set.
-        target_views = _resolve_views(log, version)
-        views: dict[str, dict] = {
-            n: {"sql": s} for n, s in target_views.items()
-        }
-        for n in _resolve_views(log, head_v):
-            if n not in target_views:
-                views[n] = {"drop": True}
-        entry = {"rolled_back_to": version, "tables": tables}
+        payload = _ws_restate(by_v, version)
+        # tables and views created after the target tombstone at the
+        # head, so they read as absent at the new version
+        for n in sorted({n for e in log for n in e["tables"]}):
+            if n not in payload["tables"] and _ws_table(by_v, head_v, n):
+                payload["tables"][n] = {"set": []}
+        views = payload.get("views", {})
+        for n in _resolve_views(by_v, head_v):
+            views.setdefault(n, {"drop": True})
         if views:
-            entry["views"] = views
-        return _commit_meta_locked(ws_path, log, branch, head_v, ts_ms, entry)
+            payload["views"] = views
+        return _commit_meta_locked(
+            ws_path, log, branch, head_v, ts_ms,
+            {"rolled_back_to": version, **payload},
+        )
 
 
 def ws_remove_orphans(
     ws_path: str, older_than_ms: int | None = None
 ) -> list[str]:
     """Workspace-level ``remove_orphan_files``: delete ``w{N}-*`` data
-    directories NO commit entry's resolution references — the debris of
-    CAS losers and died-mid-commit writers (ws_commit writes data
-    before the log swap, so a lost race leaves exactly this). Same
-    reconciliation as the table-level ``remove_orphan_dirs``:
-    referenced-set from the log (every table at every version),
-    candidate-set from a listing, difference removed; ``older_than_ms``
+    directories NO commit entry names — the debris of CAS losers and
+    died-mid-commit writers (ws_commit writes data before the log swap,
+    so a lost race leaves exactly this). The table-level sweep
+    (``_remove_unnamed``): referenced-set from the log (every dir any
+    per-table payload names), candidate-set from a listing, difference
+    removed; ``older_than_ms``
     is the concurrent-writer safety window (directories at or after
     the cutoff survive)."""
     import re
-    import shutil
 
-    log = _read_log(ws_path)
-    referenced: set[str] = set()
-    names = {n for e in log for n in e["tables"]}
-    for e in log:
-        for n in names:
-            for p in _resolve_table(log, n, e["version"]) or []:
-                referenced.add(os.path.normpath(p))
-    removed: list[str] = []
     pat = re.compile(r"^w\d+(-[0-9a-f]{8})?$")
-    for tdir in sorted(os.listdir(ws_path)):
-        full_t = os.path.join(ws_path, tdir)
-        if not os.path.isdir(full_t) or tdir.startswith("_"):
-            continue
-        for d in sorted(os.listdir(full_t)):
-            full = os.path.normpath(os.path.join(full_t, d))
-            if (
-                pat.match(d)
-                and os.path.isdir(full)
-                and full not in referenced
-                and (
-                    older_than_ms is None
-                    or os.path.getmtime(full) * 1000 < older_than_ms
-                )
-            ):
-                shutil.rmtree(full)
-                removed.append(full)
-    return removed
+    candidates = [
+        os.path.normpath(os.path.join(ws_path, t, d))
+        for t in sorted(os.listdir(ws_path))
+        if not t.startswith("_") and os.path.isdir(os.path.join(ws_path, t))
+        for d in sorted(os.listdir(os.path.join(ws_path, t)))
+        if pat.match(d) and os.path.isdir(os.path.join(ws_path, t, d))
+    ]
+    named = _named_dirs(_ws_payloads(_read_log(ws_path)))
+    return _remove_unnamed(candidates, named, older_than_ms)
 
 
 def ws_expire_versions(
@@ -757,75 +747,19 @@ def ws_expire_versions(
 ) -> list[int]:
     """Expire workspace versions committed before ``older_than_ms``,
     always retaining the ``keep_last`` most recent AND every
-    ref-reachable version. Retained entries whose parent is expired are
-    MATERIALIZED: every table resolvable at that version is inlined as
-    a ``set`` (resolution computed on the full pre-prune log), so the
-    entry stays readable without its pruned ancestor. Data directories
-    referenced only by expired versions are deleted; directories any
-    retained version still resolves survive (append commits share files
-    across versions). Returns the expired version numbers."""
-    import shutil
-
-    with _log_lock(ws_path):
-        log = _read_log(ws_path)
-        expired = _expirable(
-            ws_path, log, older_than_ms, keep_last, truncate_history
-        )
-        if not expired:
-            return []
-        expired_vs = {e["version"] for e in expired}
-        names = {n for e in log for n in e["tables"]}
-        # built once: truncating retention can materialize SEVERAL
-        # boundary entries in one expiry, and this dict is O(log)
-        by_v_full = {x["version"]: x for x in log}
-        keep = []
-        for e in log:
-            if e["version"] in expired_vs:
-                continue
-            if e.get("parent") in expired_vs:
-                tables = {}
-                for n in names:
-                    paths = _resolve_table(log, n, e["version"])
-                    if paths is not None:
-                        tables[n] = {"set": paths}
-                        layout = _table_layout(by_v_full, e["version"], n)
-                        if layout != "unknown":
-                            tables[n]["partition_by"] = layout
-                e = {
-                    k: v
-                    for k, v in e.items()
-                    if k not in ("parent", "views")
-                }
-                e["tables"] = tables
-                # Views materialize the same way (round 14): the full
-                # resolved view map inlines so definitions from expired
-                # ancestors survive the chain cut.
-                vmap = _resolve_views(log, e["version"])
-                if vmap:
-                    e["views"] = {n: {"sql": s} for n, s in vmap.items()}
-                # Explicit end-of-chain: without it the implicit
-                # previous-version fallback walks a materialized entry's
-                # ancestry into a foreign lineage (ADVICE r10).
-                e["root"] = True
-            keep.append(e)
-        _touch_lock(ws_path)  # heartbeat before the long rewrite
-        _write_log(ws_path, keep)
-        _drop_expired_keys(ws_path, keep)
-    still = {
-        os.path.normpath(p)
-        for e in keep
-        for n in names
-        for p in (_resolve_table(keep, n, e["version"]) or [])
-    }
-    removed = []
-    for e in expired:
-        for n in names:
-            for p in _resolve_table(log, n, e["version"]) or []:
-                p = os.path.normpath(p)
-                if p not in still and p not in removed:
-                    shutil.rmtree(p, ignore_errors=True)
-                    removed.append(p)
-    return [e["version"] for e in expired]
+    ref-reachable version — the table log's expiry body
+    (``_expire_log``). Retained entries whose parent is expired are
+    MATERIALIZED: every table and view live at that version is inlined
+    (``_ws_restate``, resolved on the full pre-prune log), so the entry
+    stays readable without its pruned ancestor. Data directories named
+    only by expired versions are deleted; directories a retained version
+    names survive (append commits share files across versions). Returns
+    the expired version numbers."""
+    return _expire_log(
+        ws_path, older_than_ms, keep_last, truncate_history,
+        lambda by_v, e: _ws_restate(by_v, e["version"]),
+        _ws_payloads,
+    )
 
 
 # --- rename + named views (round 14, VERDICT r13 'what's missing' #2) --------
@@ -875,7 +809,7 @@ def _ws_meta_commit(
     ts_ms: int | None,
     plan,
 ) -> int:
-    """Append a metadata-only workspace commit on ``branch``. ``plan(log,
+    """Append a metadata-only workspace commit on ``branch``. ``plan(by_v,
     parent_v) -> (tables, views)`` builds the entry payload; it runs
     INSIDE the commit lock (metadata-only plans are O(log walk), so
     holding the lock is cheap and removes the CAS retry loop data
@@ -885,7 +819,7 @@ def _ws_meta_commit(
         if head is None:
             raise ValueError(f"no commits at {ws_path}")
         log = _read_log(ws_path)
-        tables, views = plan(log, parent_v)
+        tables, views = plan(_by_version(log), parent_v)
         payload = {"tables": tables}
         if views:
             payload["views"] = views
@@ -922,14 +856,13 @@ def ws_rename_table(
     if old == new:
         raise ValueError("rename to the same name")
 
-    def plan(log, parent_v):
-        by_v = {e["version"]: e for e in log}
-        paths = _resolve_table(log, old, parent_v)
-        if paths is None:
+    def plan(by_v, parent_v):
+        items = _ws_table(by_v, parent_v, old)
+        if items is None:
             raise ValueError(
                 f"table {old!r} does not exist at v{parent_v}"
             )
-        if _resolve_table(log, new, parent_v) is not None:
+        if _ws_table(by_v, parent_v, new) is not None:
             raise ValueError(
                 f"table {new!r} already exists at v{parent_v}"
             )
@@ -939,7 +872,7 @@ def ws_rename_table(
             pat = _re.compile(rf"\b{_re.escape(old)}\b")
             dangling = sorted(
                 vn
-                for vn, sql in _resolve_views(log, parent_v).items()
+                for vn, sql in _resolve_views(by_v, parent_v).items()
                 if pat.search(sql)
             )
             if dangling:
@@ -951,8 +884,8 @@ def ws_rename_table(
                     "mentions the name in a string literal or as a "
                     "column name false-positives here; ADVICE r15)"
                 )
-        moved: dict = {"set": paths}
-        layout = _table_layout(by_v, parent_v, old)
+        moved = _materialize(items, [])
+        layout = _ws_first_touch(by_v, old, parent_v)[1]
         if layout != "unknown":
             moved["partition_by"] = layout
         return {old: {"set": []}, new: moved}, None
@@ -960,18 +893,13 @@ def ws_rename_table(
     return _ws_meta_commit(ws_path, branch, ts_ms, plan)
 
 
-def _resolve_views(
-    log: list[dict], version: int | None = None
-) -> dict[str, str]:
+def _resolve_views(by_v: dict[int, dict], version: int | None) -> dict[str, str]:
     """The full ``{view_name: sql}`` map at a workspace version: walk
     the version's lineage, first touch per name wins (a later CREATE OR
     REPLACE shadows, a drop tombstone hides)."""
-    if not log:
+    if not by_v:
         return {}
-    by_v = {e["version"]: e for e in log}
-    if version is None:
-        version = log[-1]["version"]
-    elif version not in by_v:
+    if version not in by_v:
         raise ValueError(
             f"version {version} not found (have {sorted(by_v)})"
         )
@@ -1001,13 +929,13 @@ def ws_create_view(
     Nessie's named-view endpoints emulated. The name must not collide
     with a live table (reads register tables by name)."""
 
-    def plan(log, parent_v):
-        if _resolve_table(log, name, parent_v) is not None:
+    def plan(by_v, parent_v):
+        if _ws_table(by_v, parent_v, name) is not None:
             raise ValueError(
                 f"{name!r} is a table at v{parent_v}; views and tables "
                 "share the name space"
             )
-        if not replace and name in _resolve_views(log, parent_v):
+        if not replace and name in _resolve_views(by_v, parent_v):
             raise ValueError(
                 f"view {name!r} already exists (pass replace=True)"
             )
@@ -1024,8 +952,8 @@ def ws_drop_view(
     versions/tags still resolve the view (same preservation rule as
     every other workspace op)."""
 
-    def plan(log, parent_v):
-        if name not in _resolve_views(log, parent_v):
+    def plan(by_v, parent_v):
+        if name not in _resolve_views(by_v, parent_v):
             raise ValueError(f"view {name!r} does not exist")
         return {}, {name: {"drop": True}}
 
@@ -1055,8 +983,8 @@ def ws_read_view(
     version; two view reads at one tag are mutually consistent exactly
     like two ``ws_read`` calls. Lazy: returns the composed DataFrame,
     nothing is collected here."""
-    log, version = _log_at(ws_path, version, ref)
-    views = _resolve_views(log, version)
+    by_v, version = _log_at(ws_path, version, ref)
+    views = _resolve_views(by_v, version)
     if name not in views:
         raise ValueError(f"view {name!r} does not exist at v{version}")
     # Transient registrations (round 15): spark.sql resolves the view

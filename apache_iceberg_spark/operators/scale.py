@@ -3393,9 +3393,9 @@ def m46_workspace_at_ref(spark: SparkSession, sf_dir: str) -> DataFrame:
     "introspection shelf next to m19's partitions table and m23's "
     "metadata-only aggregates): one row per commit with the version, "
     "its pinned timestamp, the OPERATION CLASSIFIED FROM THE ENTRY "
-    "SHAPE (path -> overwrite, adds -> append, paths -> restate/"
-    "rollback, +merged_from -> merge — the emulation's manifest-list "
-    "forensics), and the resolved file-set width. The workflow drives "
+    "PAYLOAD (adds -> append, a set of dirs the commit itself wrote "
+    "-> overwrite, any other set -> restate/rollback — the emulation's "
+    "manifest-list forensics), and the resolved file-set width. The workflow drives "
     "overwrite -> append -> append -> rollback and emits the history; "
     "version/operation/n_dirs are the CONTRACT of those four ops "
     "(hardcoded in the oracle as the spec), while n_rows is recomputed "
@@ -3418,7 +3418,8 @@ def m47_snapshots_history_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_snapshot_dirs,
         rollback_to,
         _by_version,
-        _resolve_paths,
+        _needed_dirs,
+        _resolve,
     )
 
     o = load_table(spark, sf_dir, "orders")
@@ -3432,11 +3433,13 @@ def m47_snapshots_history_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     by_v = _by_version(log)
 
     def classify(e: dict) -> str:
-        if "path" in e:
-            return "overwrite"
+        # a restatement of dirs this commit wrote is an overwrite; one
+        # that names older dirs (a rollback) restates them
         if "adds" in e:
             return "append"
-        return "merge" if "merged_from" in e else "restate"
+        if all(x[1] == e["version"] for x in e["set"]):
+            return "overwrite"
+        return "restate"
 
     out = None
     for e in log:
@@ -3447,7 +3450,7 @@ def m47_snapshots_history_table(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(e["version"]).cast("long").alias("version"),
                 F.lit(e["ts_ms"]).cast("long").alias("ts_ms"),
                 F.lit(classify(e)).alias("operation"),
-                F.lit(len(_resolve_paths(by_v, e)))
+                F.lit(len(_needed_dirs(*_resolve(by_v, e["version"]))))
                 .cast("long")
                 .alias("n_dirs"),
                 "n_rows",
@@ -3857,7 +3860,7 @@ def m52_merge_on_read_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     from apache_iceberg_spark.catalog.snapshots import (
         _by_version,
         _read_log,
-        _resolve_scan,
+        _resolve,
         commit_snapshot,
         compact_mor,
         merge_into,
@@ -3902,13 +3905,8 @@ def m52_merge_on_read_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     # post-merge head (MoR never rewrote it) — resolve both file sets
     # from metadata only.
     by_v = _by_version(_read_log(table))
-    seed_dirs = {p for p, _v, _s in _resolve_scan(by_v, by_v[1])[0]}
-    head_dirs = {
-        p
-        for p, _v, _s in _resolve_scan(
-            by_v, by_v[max(by_v)]
-        )[0]
-    }
+    seed_dirs = {p for p, _v, _s in _resolve(by_v, 1)[0]}
+    head_dirs = {p for p, _v, _s in _resolve(by_v, max(by_v))[0]}
     seed_shared = int(seed_dirs <= head_dirs)
     pre = read_ref(spark, table, "main").persist()
     n_rows, total_cents = pre.agg(

@@ -11,6 +11,15 @@ sys.path.insert(0, str(REPO_ROOT))
 SF_DIR = "/root/testdata/sf0.001"
 
 
+def fresh_dir(tmp_path, name: str) -> str:
+    """A new empty directory ``name`` under a test's ``tmp_path``: pytest
+    keeps only the last few runs' temp dirs, so nothing a test writes
+    outlives that retention. Raises if ``name`` already exists there."""
+    path = tmp_path / name
+    path.mkdir()
+    return str(path)
+
+
 @pytest.fixture(scope="session")
 def spark(tmp_path_factory):
     from apache_iceberg_spark.session import get_spark

@@ -149,7 +149,7 @@ def test_upsert_idempotent_and_unique(spark, updates_keys):
 )
 @example(text="")
 @_spark_examples
-def test_chunking_covers_text_exactly(spark, text):
+def test_chunking_covers_text_exactly(spark, tmp_path_factory, text):
     """tx9's chunks must tile the document: starts at 1, 1+stride, …;
     each chunk is the exact substring; stitching the stride-prefixes plus
     the final chunk reconstructs the document byte-for-byte. An empty
@@ -163,10 +163,9 @@ def test_chunking_covers_text_exactly(spark, text):
 
     import pyarrow as pa
     import pyarrow.parquet as pq
-    import tempfile
     import os
 
-    d = tempfile.mkdtemp(prefix="chunk_prop_")
+    d = str(tmp_path_factory.mktemp("chunk_prop"))
     pq.write_table(
         pa.table(
             {
@@ -203,13 +202,12 @@ def test_chunking_covers_text_exactly(spark, text):
 # ---------------------------------------------------------------------------
 
 
-def _csv_roundtrip(spark, header: str, lines: list[str]):
+def _csv_roundtrip(spark, tmp_path_factory, header: str, lines: list[str]):
     import os
-    import tempfile
 
     from apache_iceberg_spark.ingest.loader import read_csv
 
-    d = tempfile.mkdtemp(prefix="inf_prop_")
+    d = str(tmp_path_factory.mktemp("inf_prop"))
     p = os.path.join(d, "t.csv")
     with open(p, "w") as f:
         f.write(header + "\n")
@@ -230,12 +228,12 @@ def _csv_roundtrip(spark, header: str, lines: list[str]):
 @example(ints=[-(2**31) - 1])       # negative boundary
 @example(ints=[2**63 - 1, 0])      # bigint max
 @_spark_examples
-def test_csv_integer_inference_boundary(spark, ints):
+def test_csv_integer_inference_boundary(spark, tmp_path_factory, ints):
     """Pinned rule: a CSV integer column infers `int` iff every value
     fits int32, else `bigint`; values round-trip exactly at both widths
     (no silent float widening on the int64 boundary — the classic
     Arrow-vs-Spark divergence trap)."""
-    df = _csv_roundtrip(spark, "v", [str(i) for i in ints])
+    df = _csv_roundtrip(spark, tmp_path_factory, "v", [str(i) for i in ints])
     expect = "int" if all(-(2**31) <= i < 2**31 for i in ints) else "bigint"
     assert dict(df.dtypes)["v"] == expect
     assert sorted(r.v for r in df.collect()) == sorted(ints)
@@ -243,11 +241,11 @@ def test_csv_integer_inference_boundary(spark, ints):
 
 @given(st.integers(min_value=2**63, max_value=2**80))
 @_spark_examples
-def test_csv_beyond_int64_falls_back_to_string(spark, big):
+def test_csv_beyond_int64_falls_back_to_string(spark, tmp_path_factory, big):
     """Values past int64 infer decimal(n,0) — outside the 8-type surface —
     so restrict_to_core_types lands them as exact string, never a lossy
     double."""
-    df = _csv_roundtrip(spark, "v", [str(big), "1"])
+    df = _csv_roundtrip(spark, tmp_path_factory, "v", [str(big), "1"])
     assert dict(df.dtypes)["v"] == "string"
     assert {r.v for r in df.collect()} == {str(big), "1"}
 
@@ -266,7 +264,7 @@ def test_csv_beyond_int64_falls_back_to_string(spark, big):
     )
 )
 @_spark_examples
-def test_csv_timestamp_vs_date_inference(spark, stamps):
+def test_csv_timestamp_vs_date_inference(spark, tmp_path_factory, stamps):
     """Pinned rule: all-ISO-date columns infer `date`; one ISO timestamp
     makes the whole column `timestamp` with date-only rows at midnight.
     Values round-trip to the second either way."""
@@ -276,7 +274,7 @@ def test_csv_timestamp_vs_date_inference(spark, stamps):
         t.date().isoformat() if as_date else t.isoformat(sep="T")
         for t, as_date in stamps
     ]
-    df = _csv_roundtrip(spark, "v", cells)
+    df = _csv_roundtrip(spark, tmp_path_factory, "v", cells)
     all_dates = all(as_date for _, as_date in stamps)
     got = sorted(r.v for r in df.collect())
     if all_dates:
@@ -308,7 +306,7 @@ def test_csv_timestamp_vs_date_inference(spark, stamps):
 )
 @example(vals=[None, "", "v"])
 @_spark_examples
-def test_csv_empty_string_reads_as_null(spark, vals):
+def test_csv_empty_string_reads_as_null(spark, tmp_path_factory, vals):
     """Pinned rule (the s12/s14 trap): with read_csv's options both a
     bare empty field and a quoted "" come back NULL — empty string is NOT
     distinguishable from NULL on the CSV ingest path. Anything non-empty
@@ -321,7 +319,7 @@ def test_csv_empty_string_reads_as_null(spark, vals):
     for v in vals:
         w.writerow(["" if v is None else v])
     lines = buf.getvalue().splitlines()
-    df = _csv_roundtrip(spark, "v", lines)
+    df = _csv_roundtrip(spark, tmp_path_factory, "v", lines)
     got = [r.v for r in df.collect()]
     expect = [None if not v else v for v in vals]
     assert sorted(got, key=lambda x: (x is None, x or "")) == sorted(
@@ -572,7 +570,7 @@ def test_pp8_two_level_rank_equals_global_rank(keys, shift):
 )
 @settings(max_examples=30, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
-def test_w11_rolling_median_python_model(spark, values):
+def test_w11_rolling_median_python_model(spark, tmp_path_factory, values):
     """w11's lower-middle-of-sorted-frame median vs a pure-python model
     over arbitrary integer series (one user, event_id = position)."""
     import datetime
@@ -589,9 +587,8 @@ def test_w11_rolling_median_python_model(spark, values):
     )
     from apache_iceberg_spark.operators.functions_ext import W11_WIN
 
-    import tempfile
 
-    d = tempfile.mkdtemp(prefix="w11_prop_")
+    d = str(tmp_path_factory.mktemp("w11_prop"))
     df.write.mode("overwrite").parquet(f"{d}/events.parquet")
     from apache_iceberg_spark.registry import REGISTRY
 

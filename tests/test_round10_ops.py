@@ -7,17 +7,18 @@ from __future__ import annotations
 
 import json
 import os
-import tempfile
 
 import pytest
 from pyspark.sql import functions as F
 
+from tests.conftest import fresh_dir
+
 
 @pytest.fixture()
-def ref_table(spark):
+def ref_table(spark, tmp_path):
     from apache_iceberg_spark.catalog.snapshots import commit_snapshot
 
-    table = tempfile.mkdtemp(prefix="r10_refs_") + "/t"
+    table = fresh_dir(tmp_path, "r10_refs") + "/t"
     commit_snapshot(spark.range(10).select(F.col("id")), table, ts_ms=1000)
     return table
 
@@ -129,7 +130,7 @@ def test_branch_head_survives_expiry(spark, ref_table):
     )
 
 
-def test_expiry_materializes_orphaned_delta_entries(spark):
+def test_expiry_materializes_orphaned_delta_entries(spark, tmp_path):
     """A retained delta entry whose parent is expired gets its full path
     list inlined, so it stays readable without the pruned ancestor (the
     pre-ref linear table shape m22 exercises)."""
@@ -141,7 +142,7 @@ def test_expiry_materializes_orphaned_delta_entries(spark):
         read_snapshot_dirs,
     )
 
-    table = tempfile.mkdtemp(prefix="r10_mat_") + "/t"
+    table = fresh_dir(tmp_path, "r10_mat") + "/t"
     commit_snapshot(spark.range(5).select(F.col("id")), table, ts_ms=1000)
     commit_append(spark.range(5, 8).select(F.col("id")), table, ts_ms=2000)
     commit_append(spark.range(8, 9).select(F.col("id")), table, ts_ms=3000)
@@ -149,7 +150,7 @@ def test_expiry_materializes_orphaned_delta_entries(spark):
     expired = expire_snapshots_dirs(table, older_than_ms=10_000, keep_last=1)
     assert expired == [1, 2]
     (entry,) = list_snapshots(table)
-    assert "paths" in entry and "adds" not in entry
+    assert "set" in entry and "adds" not in entry
     got = sorted(
         r["id"] for r in read_snapshot_dirs(spark, table).collect()
     )
@@ -242,7 +243,7 @@ def test_append_entries_store_deltas_not_cumulative_lists(spark, ref_table):
     assert len(json.dumps(log[-1])) <= len(json.dumps(log[1])) + 8
 
 
-def test_legacy_cumulative_log_still_reads(spark):
+def test_legacy_cumulative_log_still_reads(spark, tmp_path):
     """Pre-round-10 logs store cumulative 'paths' lists; reads, appends,
     and incremental scans over a mixed log must keep working."""
     from apache_iceberg_spark.catalog.snapshots import (
@@ -252,7 +253,7 @@ def test_legacy_cumulative_log_still_reads(spark):
         read_snapshot_dirs,
     )
 
-    table = tempfile.mkdtemp(prefix="r10_legacy_") + "/t"
+    table = fresh_dir(tmp_path, "r10_legacy") + "/t"
     os.makedirs(table)
     v1 = os.path.join(table, "v1")
     d2 = os.path.join(table, "d2")
@@ -316,7 +317,8 @@ def test_idempotency_key_found_past_parentless_entry(spark, ref_table):
     must fall back to the implicit-parent rule and find the key."""
     from apache_iceberg_spark.catalog.snapshots import (
         _LOG,
-        _resolve_paths,
+        _needed_dirs,
+        _resolve,
         commit_append_ref,
         create_branch,
         list_snapshots,
@@ -339,7 +341,7 @@ def test_idempotency_key_found_past_parentless_entry(spark, ref_table):
         {
             "version": head["version"] + 1,
             "ts_ms": 5000,
-            "paths": _resolve_paths(by_v, head) + [d],
+            "paths": _needed_dirs(*_resolve(by_v, head["version"])) + [d],
         }
     )
     with open(os.path.join(ref_table, _LOG), "w") as f:
@@ -364,13 +366,13 @@ def test_idempotency_key_found_past_parentless_entry(spark, ref_table):
 # ADVICE r9: partition layout recorded at commit, validated on append
 
 
-def test_partition_layout_mismatch_raises_at_commit_time(spark):
+def test_partition_layout_mismatch_raises_at_commit_time(spark, tmp_path):
     from apache_iceberg_spark.catalog.snapshots import (
         commit_append,
         commit_snapshot,
     )
 
-    table = tempfile.mkdtemp(prefix="r10_layout_") + "/t"
+    table = fresh_dir(tmp_path, "r10_layout") + "/t"
     df = spark.range(10).select(
         F.col("id"), (F.col("id") % 3).alias("bucket")
     )
@@ -470,7 +472,7 @@ def test_pp17_raises_on_zero_target_tokens(spark, tmp_path):
 # Ask #2: workspace-level multi-table atomic commits
 
 
-def test_ws_commit_has_no_torn_publish_window(spark):
+def test_ws_commit_has_no_torn_publish_window(spark, tmp_path):
     """The per-table layout's torn window: two single-table commits give
     readers a version where table A moved and table B did not. The
     workspace commit eliminates it — EVERY workspace version resolves a
@@ -481,7 +483,7 @@ def test_ws_commit_has_no_torn_publish_window(spark):
         ws_read,
     )
 
-    ws = tempfile.mkdtemp(prefix="r10_ws_")
+    ws = fresh_dir(tmp_path, "r10_ws")
     a1 = spark.range(10).select(F.col("id"))
     b1 = spark.range(100, 110).select(F.col("id"))
     a2 = spark.range(10, 20).select(F.col("id"))
@@ -502,7 +504,7 @@ def test_ws_commit_has_no_torn_publish_window(spark):
         read_snapshot_dirs,
     )
 
-    root = tempfile.mkdtemp(prefix="r10_torn_")
+    root = fresh_dir(tmp_path, "r10_torn")
     ta, tb = root + "/a", root + "/b"
     commit_snapshot(a1, ta)
     commit_snapshot(b1, tb)
@@ -511,14 +513,14 @@ def test_ws_commit_has_no_torn_publish_window(spark):
     assert read_snapshot_dirs(spark, tb).count() == 10
 
 
-def test_ws_tag_reads_are_cross_table_consistent(spark):
+def test_ws_tag_reads_are_cross_table_consistent(spark, tmp_path):
     from apache_iceberg_spark.catalog.workspace import (
         ws_commit,
         ws_create_tag,
         ws_read,
     )
 
-    ws = tempfile.mkdtemp(prefix="r10_wstag_")
+    ws = fresh_dir(tmp_path, "r10_wstag")
     ws_commit(
         ws,
         {
@@ -535,11 +537,11 @@ def test_ws_tag_reads_are_cross_table_consistent(spark):
     assert ws_read(spark, ws, "b").count() == 10
 
 
-def test_ws_commit_cas_conflict(spark):
+def test_ws_commit_cas_conflict(spark, tmp_path):
     from apache_iceberg_spark.catalog.snapshots import CommitConflict
     from apache_iceberg_spark.catalog.workspace import ws_commit
 
-    ws = tempfile.mkdtemp(prefix="r10_wscas_")
+    ws = fresh_dir(tmp_path, "r10_wscas")
     ws_commit(ws, {"a": spark.range(3).select(F.col("id"))})
     racer = spark.range(10, 13).select(F.col("id"))
     loser = spark.range(20, 23).select(F.col("id"))
@@ -551,14 +553,14 @@ def test_ws_commit_cas_conflict(spark):
         ws_commit(ws, {"a": _RacingDF(loser, race)})
 
 
-def test_ws_overwrite_and_missing_table(spark):
+def test_ws_overwrite_and_missing_table(spark, tmp_path):
     from apache_iceberg_spark.catalog.workspace import (
         ws_commit,
         ws_list_tables,
         ws_read,
     )
 
-    ws = tempfile.mkdtemp(prefix="r10_wsow_")
+    ws = fresh_dir(tmp_path, "r10_wsow")
     ws_commit(ws, {"a": spark.range(5).select(F.col("id"))})
     ws_commit(
         ws, {"a": spark.range(100, 102).select(F.col("id"))},
@@ -575,14 +577,14 @@ def test_ws_overwrite_and_missing_table(spark):
 # Round-10 new operators: independent-model checks (oracle could be blind)
 
 
-def test_ws_commit_idempotency_key(spark):
+def test_ws_commit_idempotency_key(spark, tmp_path):
     from apache_iceberg_spark.catalog.workspace import (
         ws_commit,
         ws_list_versions,
         ws_read,
     )
 
-    ws = tempfile.mkdtemp(prefix="r10_wskey_")
+    ws = fresh_dir(tmp_path, "r10_wskey")
     df = spark.range(5).select(F.col("id"))
     v1 = ws_commit(ws, {"a": df}, idempotency_key="batch-0")
     v_retry = ws_commit(
@@ -849,7 +851,7 @@ def test_a30_matches_numpy(spark):
 # Workspace branches (m36): isolation, reject path, diverged merge
 
 
-def test_ws_branch_isolates_and_ff_publishes_all_tables(spark):
+def test_ws_branch_isolates_and_ff_publishes_all_tables(spark, tmp_path):
     from apache_iceberg_spark.catalog.workspace import (
         ws_commit,
         ws_create_branch,
@@ -859,7 +861,7 @@ def test_ws_branch_isolates_and_ff_publishes_all_tables(spark):
         ws_resolve_ref,
     )
 
-    ws = tempfile.mkdtemp(prefix="r10_wsbr_")
+    ws = fresh_dir(tmp_path, "r10_wsbr")
     ws_commit(
         ws,
         {
@@ -890,7 +892,7 @@ def test_ws_branch_isolates_and_ff_publishes_all_tables(spark):
     assert ws_read(spark, ws, "b").count() == 10
 
 
-def test_ws_branch_reject_path_frees_all_staged_tables(spark):
+def test_ws_branch_reject_path_frees_all_staged_tables(spark, tmp_path):
     from apache_iceberg_spark.catalog.workspace import (
         ws_commit,
         ws_create_branch,
@@ -899,7 +901,7 @@ def test_ws_branch_reject_path_frees_all_staged_tables(spark):
         ws_resolve_ref,
     )
 
-    ws = tempfile.mkdtemp(prefix="r10_wsrej_")
+    ws = fresh_dir(tmp_path, "r10_wsrej")
     v1 = ws_commit(ws, {"a": spark.range(5).select(F.col("id"))})
     ws_create_branch(ws, "staging")
     # poisoned batch staged across two tables
@@ -918,7 +920,7 @@ def test_ws_branch_reject_path_frees_all_staged_tables(spark):
         ws_read(spark, ws, "b")  # never existed on main
 
 
-def test_ws_diverged_merge_unions_appends_and_rejects_rewrites(spark):
+def test_ws_diverged_merge_unions_appends_and_rejects_rewrites(spark, tmp_path):
     from apache_iceberg_spark.catalog.workspace import (
         ws_commit,
         ws_create_branch,
@@ -926,7 +928,7 @@ def test_ws_diverged_merge_unions_appends_and_rejects_rewrites(spark):
         ws_read,
     )
 
-    ws = tempfile.mkdtemp(prefix="r10_wsdiv_")
+    ws = fresh_dir(tmp_path, "r10_wsdiv")
     ws_commit(
         ws,
         {
@@ -1070,7 +1072,7 @@ def test_ts22_matches_numpy_median_of_slopes(spark):
     assert out["slope_micro"] == want
 
 
-def test_ws_remove_orphans_reclaims_cas_loser_debris(spark):
+def test_ws_remove_orphans_reclaims_cas_loser_debris(spark, tmp_path):
     """The CAS loser's uniquely-named data dirs are exactly what
     ws_remove_orphans reclaims — and referenced dirs survive."""
     import glob as _glob
@@ -1082,7 +1084,7 @@ def test_ws_remove_orphans_reclaims_cas_loser_debris(spark):
         ws_remove_orphans,
     )
 
-    ws = tempfile.mkdtemp(prefix="r10_wsorph_")
+    ws = fresh_dir(tmp_path, "r10_wsorph")
     ws_commit(ws, {"a": spark.range(5).select(F.col("id"))})
     racer = spark.range(10, 13).select(F.col("id"))
     loser = spark.range(20, 23).select(F.col("id"))
@@ -1104,7 +1106,7 @@ def test_ws_remove_orphans_reclaims_cas_loser_debris(spark):
     assert ws_remove_orphans(ws, older_than_ms=1000) == []
 
 
-def test_ws_expiry_protects_refs_and_materializes(spark):
+def test_ws_expiry_protects_refs_and_materializes(spark, tmp_path):
     from apache_iceberg_spark.catalog.workspace import (
         ws_commit,
         ws_create_branch,
@@ -1116,7 +1118,7 @@ def test_ws_expiry_protects_refs_and_materializes(spark):
         ws_remove_orphans,
     )
 
-    ws = tempfile.mkdtemp(prefix="r10_wsgc_")
+    ws = fresh_dir(tmp_path, "r10_wsgc")
     ws_commit(
         ws,
         {"a": spark.range(5).select(F.col("id")),
@@ -1220,10 +1222,10 @@ def test_w14_matches_numpy(spark):
     assert checked == len(rows)
 
 
-def test_ws_partition_layout_validated(spark):
+def test_ws_partition_layout_validated(spark, tmp_path):
     from apache_iceberg_spark.catalog.workspace import ws_commit, ws_read
 
-    ws = tempfile.mkdtemp(prefix="r10_wslay_")
+    ws = fresh_dir(tmp_path, "r10_wslay")
     df = spark.range(10).select(
         F.col("id"), (F.col("id") % 3).alias("bucket")
     )

@@ -8,18 +8,19 @@ from __future__ import annotations
 
 import json
 import os
-import tempfile
 import threading
 
 import pytest
 from pyspark.sql import functions as F
 
+from tests.conftest import fresh_dir
+
 
 @pytest.fixture()
-def ref_table(spark):
+def ref_table(spark, tmp_path):
     from apache_iceberg_spark.catalog.snapshots import commit_snapshot
 
-    table = tempfile.mkdtemp(prefix="r11_refs_") + "/t"
+    table = fresh_dir(tmp_path, "r11_refs") + "/t"
     commit_snapshot(spark.range(10).select(F.col("id")), table, ts_ms=1000)
     return table
 
@@ -261,7 +262,7 @@ def test_commit_append_ref_retry_lands_after_lost_race(spark, ref_table):
     )
 
 
-def test_ws_commit_concurrent_writers_all_land_no_orphans(spark):
+def test_ws_commit_concurrent_writers_all_land_no_orphans(spark, tmp_path):
     """VERDICT r10 ask #2's done-criterion: N concurrent workspace
     writers with internal retry ALL land, and the run leaves zero
     orphan debris (the loser's data dirs are REUSED, not abandoned)."""
@@ -272,7 +273,7 @@ def test_ws_commit_concurrent_writers_all_land_no_orphans(spark):
         ws_remove_orphans,
     )
 
-    ws = tempfile.mkdtemp(prefix="r11_ws_race_")
+    ws = fresh_dir(tmp_path, "r11_ws_race")
     ws_commit(ws, {"t": spark.range(5).select(F.col("id"))}, ts_ms=1000)
     errors: list[Exception] = []
     n_writers = 4
@@ -307,7 +308,7 @@ def test_ws_commit_concurrent_writers_all_land_no_orphans(spark):
     assert ws_remove_orphans(ws) == []  # retries reused their data dirs
 
 
-def test_ws_commit_retry_defers_to_idempotent_racer(spark):
+def test_ws_commit_retry_defers_to_idempotent_racer(spark, tmp_path):
     from apache_iceberg_spark.catalog.workspace import (
         ws_commit,
         ws_list_versions,
@@ -316,7 +317,7 @@ def test_ws_commit_retry_defers_to_idempotent_racer(spark):
     )
     import apache_iceberg_spark.catalog.workspace as W
 
-    ws = tempfile.mkdtemp(prefix="r11_ws_idem_")
+    ws = fresh_dir(tmp_path, "r11_ws_idem")
     ws_commit(ws, {"t": spark.range(5).select(F.col("id"))}, ts_ms=1000)
 
     df = spark.range(100, 103).select(F.col("id"))
@@ -355,7 +356,7 @@ def test_ws_commit_retry_defers_to_idempotent_racer(spark):
 # log append — the head CAS alone cannot see it
 
 
-def test_ws_commit_detects_ff_merge_pointer_move(spark):
+def test_ws_commit_detects_ff_merge_pointer_move(spark, tmp_path):
     from apache_iceberg_spark.catalog.snapshots import CommitConflict
     from apache_iceberg_spark.catalog.workspace import (
         ws_commit,
@@ -363,7 +364,7 @@ def test_ws_commit_detects_ff_merge_pointer_move(spark):
         ws_merge_branch,
     )
 
-    ws = tempfile.mkdtemp(prefix="r11_ws_ff_")
+    ws = fresh_dir(tmp_path, "r11_ws_ff")
     ws_commit(ws, {"t": spark.range(5).select(F.col("id"))}, ts_ms=1000)
     ws_create_branch(ws, "dev")
     ws_commit(
@@ -379,7 +380,7 @@ def test_ws_commit_detects_ff_merge_pointer_move(spark):
         ws_commit(ws, {"t": _RacingDF(loser, race)}, ts_ms=1200)
 
 
-def test_ws_commit_retry_preserves_ff_merge(spark):
+def test_ws_commit_retry_preserves_ff_merge(spark, tmp_path):
     """With retry, the loser re-plans on the MERGED head: the merge's
     table survives and the commit lands on top — the lost-update the
     old head-only CAS would have silently caused."""
@@ -391,7 +392,7 @@ def test_ws_commit_retry_preserves_ff_merge(spark):
         ws_resolve_ref,
     )
 
-    ws = tempfile.mkdtemp(prefix="r11_ws_ff2_")
+    ws = fresh_dir(tmp_path, "r11_ws_ff2")
     ws_commit(ws, {"t": spark.range(5).select(F.col("id"))}, ts_ms=1000)
     ws_create_branch(ws, "dev")
     ws_commit(
@@ -422,7 +423,7 @@ def test_ws_commit_retry_preserves_ff_merge(spark):
 # ADVICE r10: one-sided rewrites merge by replay, not conflict
 
 
-def test_ws_merge_one_sided_rewrite_replays_src(spark):
+def test_ws_merge_one_sided_rewrite_replays_src(spark, tmp_path):
     from apache_iceberg_spark.catalog.workspace import (
         ws_commit,
         ws_create_branch,
@@ -430,7 +431,7 @@ def test_ws_merge_one_sided_rewrite_replays_src(spark):
         ws_read,
     )
 
-    ws = tempfile.mkdtemp(prefix="r11_ws_osr_")
+    ws = fresh_dir(tmp_path, "r11_ws_osr")
     ws_commit(ws, {"t": spark.range(5).select(F.col("id"))}, ts_ms=1000)
     ws_create_branch(ws, "dev")
     # dev REWRITES t; main meanwhile touches only u (diverged branches)
@@ -453,7 +454,7 @@ def test_ws_merge_one_sided_rewrite_replays_src(spark):
     ) == list(range(7))
 
 
-def test_ws_merge_target_only_rewrite_stands(spark):
+def test_ws_merge_target_only_rewrite_stands(spark, tmp_path):
     from apache_iceberg_spark.catalog.workspace import (
         ws_commit,
         ws_create_branch,
@@ -461,7 +462,7 @@ def test_ws_merge_target_only_rewrite_stands(spark):
         ws_read,
     )
 
-    ws = tempfile.mkdtemp(prefix="r11_ws_ost_")
+    ws = fresh_dir(tmp_path, "r11_ws_ost")
     ws_commit(ws, {"t": spark.range(5).select(F.col("id"))}, ts_ms=1000)
     ws_create_branch(ws, "dev")
     ws_commit(
@@ -482,14 +483,14 @@ def test_ws_merge_target_only_rewrite_stands(spark):
     ) == [0, 1, 2]
 
 
-def test_ws_merge_both_sides_rewrite_still_conflicts(spark):
+def test_ws_merge_both_sides_rewrite_still_conflicts(spark, tmp_path):
     from apache_iceberg_spark.catalog.workspace import (
         ws_commit,
         ws_create_branch,
         ws_merge_branch,
     )
 
-    ws = tempfile.mkdtemp(prefix="r11_ws_conf_")
+    ws = fresh_dir(tmp_path, "r11_ws_conf")
     ws_commit(ws, {"t": spark.range(5).select(F.col("id"))}, ts_ms=1000)
     ws_create_branch(ws, "dev")
     ws_commit(
@@ -508,14 +509,15 @@ def test_ws_merge_both_sides_rewrite_still_conflicts(spark):
 # ADVICE r10: expiry-materialized entries are EXPLICIT chain roots
 
 
-def test_materialized_entry_does_not_phantom_resolve_foreign_lineage(spark):
+def test_materialized_entry_does_not_phantom_resolve_foreign_lineage(spark, tmp_path):
     """The ADVICE scenario: a dead branch's tip survives expiry via
     keep_last while its parent is pruned. Without the root terminator,
     the materialized tip's implicit-parent fallback bisects into
     MAIN's entries, so a table that never existed on the dead branch
     phantom-resolves at its version."""
+    from apache_iceberg_spark.catalog.snapshots import _by_version
     from apache_iceberg_spark.catalog.workspace import (
-        _resolve_table,
+        _ws_table,
         ws_commit,
         ws_create_branch,
         ws_delete_branch,
@@ -524,7 +526,7 @@ def test_materialized_entry_does_not_phantom_resolve_foreign_lineage(spark):
         ws_read,
     )
 
-    ws = tempfile.mkdtemp(prefix="r11_ws_root_")
+    ws = fresh_dir(tmp_path, "r11_ws_root")
     ws_commit(ws, {"t": spark.range(5).select(F.col("id"))}, ts_ms=1000)
     ws_create_branch(ws, "b2")
     ws_commit(
@@ -546,7 +548,7 @@ def test_materialized_entry_does_not_phantom_resolve_foreign_lineage(spark):
     tip = [e for e in log if e["version"] == 4][0]
     assert tip.get("root") is True and "parent" not in tip
     # m_only was NEVER on b2's lineage: it must not resolve at v4
-    assert _resolve_table(log, "m_only", 4) is None
+    assert _ws_table(_by_version(log), 4, "m_only") is None
     # while v4's own tables stay fully readable from the inlined sets
     assert sorted(
         r["id"] for r in ws_read(spark, ws, "bx", version=4).collect()
@@ -668,7 +670,7 @@ def test_legacy_keyed_history_sets_floor_and_still_found(spark, ref_table):
     assert refs["keys"]["etl\x00new-batch"] == v_new
 
 
-def test_ws_keys_pruned_on_expiry(spark):
+def test_ws_keys_pruned_on_expiry(spark, tmp_path):
     """Indexed keys whose commit was expired are dropped — their retry
     window has passed; keys of live commits survive."""
     from apache_iceberg_spark.catalog.snapshots import _read_refs
@@ -679,7 +681,7 @@ def test_ws_keys_pruned_on_expiry(spark):
         ws_expire_versions,
     )
 
-    ws = tempfile.mkdtemp(prefix="r11_ws_keys_")
+    ws = fresh_dir(tmp_path, "r11_ws_keys")
     ws_commit(
         ws, {"t": spark.range(3).select(F.col("id"))},
         idempotency_key="b1", ts_ms=1000,
@@ -708,10 +710,10 @@ def test_ws_keys_pruned_on_expiry(spark):
 # Ask #3: workspace-level diff + transplant (m38/m39's contract edges)
 
 
-def test_ws_diff_classifies_all_change_kinds(spark):
+def test_ws_diff_classifies_all_change_kinds(spark, tmp_path):
     from apache_iceberg_spark.catalog.workspace import ws_commit, ws_diff
 
-    ws = tempfile.mkdtemp(prefix="r11_ws_diff_")
+    ws = fresh_dir(tmp_path, "r11_ws_diff")
     ws_commit(
         ws,
         {
@@ -738,14 +740,14 @@ def test_ws_diff_classifies_all_change_kinds(spark):
     assert ws_diff(ws, "main", "main") == {}
 
 
-def test_ws_transplant_refuses_rewrite_and_creation_conflict(spark):
+def test_ws_transplant_refuses_rewrite_and_creation_conflict(spark, tmp_path):
     from apache_iceberg_spark.catalog.workspace import (
         ws_commit,
         ws_create_branch,
         ws_transplant,
     )
 
-    ws = tempfile.mkdtemp(prefix="r11_ws_tr_")
+    ws = fresh_dir(tmp_path, "r11_ws_tr")
     ws_commit(ws, {"t": spark.range(3).select(F.col("id"))}, ts_ms=1000)
     ws_create_branch(ws, "dev")
     v_rw = ws_commit(
@@ -767,7 +769,7 @@ def test_ws_transplant_refuses_rewrite_and_creation_conflict(spark):
         ws_transplant(ws, v_cr, onto="main")
 
 
-def test_ws_transplant_noop_when_delta_present(spark):
+def test_ws_transplant_noop_when_delta_present(spark, tmp_path):
     from apache_iceberg_spark.catalog.workspace import (
         ws_commit,
         ws_create_branch,
@@ -777,7 +779,7 @@ def test_ws_transplant_noop_when_delta_present(spark):
         ws_transplant,
     )
 
-    ws = tempfile.mkdtemp(prefix="r11_ws_tr2_")
+    ws = fresh_dir(tmp_path, "r11_ws_tr2")
     ws_commit(ws, {"t": spark.range(3).select(F.col("id"))}, ts_ms=1000)
     ws_create_branch(ws, "dev")
     v2 = ws_commit(
@@ -835,7 +837,7 @@ def test_truncating_expiry_cuts_linear_main_history(spark, ref_table):
     assert _ids(spark, ref_table, "etl") == list(range(10))
 
 
-def test_ws_truncating_expiry_with_rewrite_bounds_everything(spark):
+def test_ws_truncating_expiry_with_rewrite_bounds_everything(spark, tmp_path):
     """The endurance-probe maintenance triple: rewrite (set
     restatement) + truncating expiry + orphan GC keeps versions, log
     and data dirs bounded while retaining every row."""
@@ -849,7 +851,7 @@ def test_ws_truncating_expiry_with_rewrite_bounds_everything(spark):
         ws_remove_orphans,
     )
 
-    ws = tempfile.mkdtemp(prefix="r11_ws_trunc_")
+    ws = fresh_dir(tmp_path, "r11_ws_trunc")
     for i in range(8):
         ws_commit(
             ws,
@@ -1262,11 +1264,10 @@ def test_w16_matches_python_exact(spark):
         assert lo <= r["winsorized_mean_micro"] // 1_000_000 <= hi
 
 
-def test_m41_leaves_root_terminated_boundaries(spark):
+def test_m41_leaves_root_terminated_boundaries(spark, tmp_path):
     """After truncating retention, every kept entry must be readable
     and the materialized boundaries must be explicit roots."""
     import os as _os
-    import tempfile as _tmp
 
     from apache_iceberg_spark.catalog.snapshots import (
         commit_append_ref,
@@ -1277,7 +1278,7 @@ def test_m41_leaves_root_terminated_boundaries(spark):
         read_ref,
     )
 
-    table = _os.path.join(_tmp.mkdtemp(prefix="r11_m41_"), "t")
+    table = _os.path.join(fresh_dir(tmp_path, "r11_m41"), "t")
     commit_snapshot(spark.range(5).select(F.col("id")), table, ts_ms=1000)
     for i in range(1, 6):
         commit_append_ref(
@@ -1468,7 +1469,7 @@ def test_bound_int_support_carries_extra_sums_through_grid(spark):
     assert agg["mass"] == n and agg["mass_a"] == n // 2
 
 
-def test_ws_mixed_concurrent_ops_hold_invariants(spark):
+def test_ws_mixed_concurrent_ops_hold_invariants(spark, tmp_path):
     """Chaos-ish integration: two retrying writers on different
     branches, a merger, and a (full-protection) expirer all race on one
     workspace. Invariants: every commit lands exactly once, the final
@@ -1484,7 +1485,7 @@ def test_ws_mixed_concurrent_ops_hold_invariants(spark):
         ws_remove_orphans,
     )
 
-    ws = tempfile.mkdtemp(prefix="r11_ws_chaos_")
+    ws = fresh_dir(tmp_path, "r11_ws_chaos")
     ws_commit(ws, {"t": spark.range(5).select(F.col("id"))}, ts_ms=1000)
     ws_create_branch(ws, "b")
     errors: list[Exception] = []
@@ -1558,7 +1559,7 @@ def test_ws_mixed_concurrent_ops_hold_invariants(spark):
     assert got2 == want
 
 
-def test_ws_rollback_restates_and_tombstones(spark):
+def test_ws_rollback_restates_and_tombstones(spark, tmp_path):
     from apache_iceberg_spark.catalog.workspace import (
         ws_commit,
         ws_diff,
@@ -1567,7 +1568,7 @@ def test_ws_rollback_restates_and_tombstones(spark):
         ws_rollback,
     )
 
-    ws = tempfile.mkdtemp(prefix="r11_ws_rb_")
+    ws = fresh_dir(tmp_path, "r11_ws_rb")
     v1 = ws_commit(
         ws, {"t": spark.range(5).select(F.col("id"))}, ts_ms=1000
     )
@@ -1597,7 +1598,7 @@ def test_ws_rollback_restates_and_tombstones(spark):
     ) == list(range(5))
 
 
-def test_ref_store_matches_python_model_over_random_op_sequence(spark):
+def test_ref_store_matches_python_model_over_random_op_sequence(spark, tmp_path):
     """Model-based sequence test for the segment-log commit store: a
     seeded pseudo-random 40-op program (appends, overwrites, branch
     commits, tags, merges, rollbacks, compactions, both expiry modes)
@@ -1620,7 +1621,7 @@ def test_ref_store_matches_python_model_over_random_op_sequence(spark):
     )
 
     rng = random.Random(1106)
-    table = tempfile.mkdtemp(prefix="r11_model_") + "/t"
+    table = fresh_dir(tmp_path, "r11_model") + "/t"
     next_id = [0]
 
     def fresh(n: int) -> tuple[list[int], object]:
@@ -1705,7 +1706,7 @@ def test_ref_store_matches_python_model_over_random_op_sequence(spark):
     check()
 
 
-def test_evolved_append_reads_null_filled_everywhere(spark, ref_table):
+def test_evolved_append_reads_null_filled_everywhere(spark, ref_table, tmp_path):
     """Additive schema evolution: post-evolution reads serve the latest
     schema with old rows null-filled — at the head, at old versions
     (unchanged), on refs, and in the workspace layer."""
@@ -1730,7 +1731,7 @@ def test_evolved_append_reads_null_filled_everywhere(spark, ref_table):
     v1 = read_snapshot_dirs(spark, ref_table, version=1)
     assert v1.columns == ["id"]
     # workspace layer shares the read path
-    ws = tempfile.mkdtemp(prefix="r11_ws_ev_")
+    ws = fresh_dir(tmp_path, "r11_ws_ev")
     ws_commit(ws, {"t": spark.range(3).select(F.col("id"))}, ts_ms=1000)
     ws_commit(
         ws,

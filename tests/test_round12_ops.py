@@ -9,18 +9,19 @@ from __future__ import annotations
 
 import json
 import os
-import tempfile
 import time
 
 import pytest
 from pyspark.sql import functions as F
 
+from tests.conftest import fresh_dir
+
 
 @pytest.fixture()
-def ref_table(spark):
+def ref_table(spark, tmp_path):
     from apache_iceberg_spark.catalog.snapshots import commit_snapshot
 
-    table = tempfile.mkdtemp(prefix="r12_refs_") + "/t"
+    table = fresh_dir(tmp_path, "r12_refs") + "/t"
     commit_snapshot(spark.range(10).select(F.col("id")), table, ts_ms=1000)
     return table
 
@@ -77,7 +78,7 @@ def test_oversized_entry_tail_read_is_incremental(spark, ref_table):
     finally:
         S._full_state = orig
     assert tail["version"] == head + 1
-    assert len(tail["paths"]) == 1200
+    assert len(tail["set"]) == 1200
 
 
 def test_corrupt_nonfinal_segment_line_raises_everywhere(spark, ref_table):
@@ -252,13 +253,13 @@ def _write_two_dirs(spark, table, second_df):
     commit_append(second_df, table)
 
 
-def test_cross_family_numeric_change_raises_at_union(spark):
+def test_cross_family_numeric_change_raises_at_union(spark, tmp_path):
     """bigint->double is NOT a legal Iceberg promotion — and it is one
     ``unionByName`` would silently coerce (ADVICE r11: the old code
     instead cast double->first-seen-bigint, truncating fractions)."""
     from apache_iceberg_spark.catalog.snapshots import read_snapshot_dirs
 
-    table = tempfile.mkdtemp(prefix="r12_widen_") + "/t"
+    table = fresh_dir(tmp_path, "r12_widen") + "/t"
     _write_two_dirs(
         spark,
         table,
@@ -270,10 +271,10 @@ def test_cross_family_numeric_change_raises_at_union(spark):
         read_snapshot_dirs(spark, table).collect()
 
 
-def test_string_vs_numeric_change_raises_at_union(spark):
+def test_string_vs_numeric_change_raises_at_union(spark, tmp_path):
     from apache_iceberg_spark.catalog.snapshots import read_snapshot_dirs
 
-    table = tempfile.mkdtemp(prefix="r12_widen_") + "/t"
+    table = fresh_dir(tmp_path, "r12_widen") + "/t"
     _write_two_dirs(
         spark,
         table,
@@ -285,14 +286,14 @@ def test_string_vs_numeric_change_raises_at_union(spark):
         read_snapshot_dirs(spark, table).collect()
 
 
-def test_legal_int_widening_still_reads(spark):
+def test_legal_int_widening_still_reads(spark, tmp_path):
     from apache_iceberg_spark.catalog.snapshots import (
         commit_append,
         commit_snapshot,
         read_snapshot_dirs,
     )
 
-    table = tempfile.mkdtemp(prefix="r12_widen_") + "/t"
+    table = fresh_dir(tmp_path, "r12_widen") + "/t"
     commit_snapshot(
         spark.range(3).select(F.col("id").cast("int").alias("v")), table
     )
@@ -401,7 +402,7 @@ def test_commit_to_concurrently_deleted_branch_conflicts(spark, ref_table):
     assert "etl" not in list_refs(ref_table)["branches"]
 
 
-def test_ws_commit_to_concurrently_deleted_branch_conflicts(spark):
+def test_ws_commit_to_concurrently_deleted_branch_conflicts(spark, tmp_path):
     from apache_iceberg_spark.catalog.snapshots import CommitConflict
     from apache_iceberg_spark.catalog.workspace import (
         ws_commit,
@@ -409,7 +410,7 @@ def test_ws_commit_to_concurrently_deleted_branch_conflicts(spark):
         ws_delete_branch,
     )
 
-    ws = tempfile.mkdtemp(prefix="r12_ws_")
+    ws = fresh_dir(tmp_path, "r12_ws")
     ws_commit(ws, {"t": spark.range(3)})
     ws_create_branch(ws, "stage")
     with pytest.raises(CommitConflict, match="deleted"):
@@ -446,18 +447,17 @@ def test_lazy_main_still_commits_without_pinned_refs(spark, ref_table):
 # ws first-touch plan parity with full resolution
 
 
-def test_ws_first_touch_matches_full_resolution(spark):
-    from apache_iceberg_spark.catalog.snapshots import _locked_state
+def test_ws_first_touch_matches_full_resolution(spark, tmp_path):
+    from apache_iceberg_spark.catalog.snapshots import _ancestry, _locked_state
     from apache_iceberg_spark.catalog.workspace import (
         _read_log,
-        _resolve_table,
-        _table_layout,
         _ws_first_touch,
+        _ws_table,
         ws_commit,
         ws_rollback,
     )
 
-    ws = tempfile.mkdtemp(prefix="r12_ft_")
+    ws = fresh_dir(tmp_path, "r12_ft")
     ws_commit(ws, {"a": spark.range(3)}, ts_ms=1)
     ws_commit(ws, {"a": spark.range(3, 6), "b": spark.range(2)}, ts_ms=2)
     ws_commit(
@@ -473,12 +473,17 @@ def test_ws_first_touch_matches_full_resolution(spark):
     with _locked_state(ws) as st:
         for name in ("a", "b", "c", "nope"):
             for v in range(1, head + 1):
-                exists, layout = _ws_first_touch(st, name, v)
+                exists, layout = _ws_first_touch(st.by_v, name, v)
                 assert exists == (
-                    _resolve_table(log, name, v) is not None
+                    _ws_table(by_v, v, name) is not None
                 ), (name, v)
                 if exists:
-                    assert layout == _table_layout(by_v, v, name), (name, v)
+                    recorded = next(
+                        by_v[x]["tables"][name].get("partition_by", "unknown")
+                        for x in _ancestry(by_v, v)
+                        if name in by_v[x]["tables"]
+                    )
+                    assert layout == recorded, (name, v)
 
 
 # ---------------------------------------------------------------------------
@@ -495,14 +500,14 @@ def test_parse_at_ref():
             parse_at_ref(bad)
 
 
-def test_ws_read_at_two_branches(spark):
+def test_ws_read_at_two_branches(spark, tmp_path):
     from apache_iceberg_spark.catalog.workspace import (
         ws_commit,
         ws_create_branch,
         ws_read_at,
     )
 
-    ws = tempfile.mkdtemp(prefix="r12_at_")
+    ws = fresh_dir(tmp_path, "r12_at")
     ws_commit(ws, {"t": spark.range(5)})
     ws_create_branch(ws, "stage")
     ws_commit(ws, {"t": spark.range(5, 8)}, branch="stage")
@@ -524,13 +529,13 @@ def _synthetic_events(spark, tmp, df):
     return tmp
 
 
-def test_a36_tie_term_exact_past_int64(spark):
+def test_a36_tie_term_exact_past_int64(spark, tmp_path):
     """One ~3M-row tie puts t = n^3 - n at 2.7e19 > 2^63: the DECIMAL
     accumulation must return it EXACTLY (a BIGINT sum wraps silently
     under non-ANSI)."""
     n_tie = 3_000_000
     n_hi = 1_000  # second value so the z variance is nonzero
-    tmp = tempfile.mkdtemp(prefix="r12_a36_")
+    tmp = fresh_dir(tmp_path, "r12_a36")
     df = spark.range(n_tie).select(
         F.when(F.col("id") % 2 == 0, "purchase")
         .otherwise("view")
@@ -574,13 +579,13 @@ def test_a36_tie_term_exact_past_int64(spark):
     assert row["z_score"] == pytest.approx(z_num / z_den, rel=1e-12)
 
 
-def test_w16_clipped_sum_exact_past_int64(spark):
+def test_w16_clipped_sum_exact_past_int64(spark, tmp_path):
     """10M rows of 1e12-cent values: the clipped sum is 1e19 > 2^63 and
     must come back exactly through the DECIMAL(38,0) accumulation,
     while the mean (1e18 micro-units) still fits its BIGINT column."""
     n = 10_000_000
     v_dollars = 1e10  # -> 1e12 cents, exactly representable as double
-    tmp = tempfile.mkdtemp(prefix="r12_w16_")
+    tmp = fresh_dir(tmp_path, "r12_w16")
     df = spark.range(n).select(
         F.lit("sensor").alias("event_type"),
         F.lit(v_dollars).alias("value"),
@@ -650,11 +655,11 @@ def test_keys_max_bounds_refs_and_keeps_recent_idempotency(spark, ref_table):
     assert len(list_snapshots(ref_table)) == n_before + 1
 
 
-def test_ws_keys_max_bounds_refs(spark):
+def test_ws_keys_max_bounds_refs(spark, tmp_path):
     from apache_iceberg_spark.catalog.snapshots import _read_refs
     from apache_iceberg_spark.catalog.workspace import ws_commit
 
-    ws = tempfile.mkdtemp(prefix="r12_keysmax_")
+    ws = fresh_dir(tmp_path, "r12_keysmax")
     for i in range(25):
         ws_commit(
             ws,
@@ -673,7 +678,7 @@ def test_ws_keys_max_bounds_refs(spark):
 # Model-based torture with AUTO-COMPACTION firing mid-sequence
 
 
-def test_model_sequence_with_autocompaction(spark):
+def test_model_sequence_with_autocompaction(spark, tmp_path):
     """Re-run the round-11 model-based 40-op sequence with the round-12
     auto-compaction threshold pinned LOW, so in-commit segment-into-base
     folds interleave with every op class (appends, branch commits,
@@ -690,7 +695,7 @@ def test_model_sequence_with_autocompaction(spark):
     orig = S.AUTO_COMPACT_MIN_SEGMENT_BYTES
     S.AUTO_COMPACT_MIN_SEGMENT_BYTES = 200  # folds every ~1-2 commits
     try:
-        test_ref_store_matches_python_model_over_random_op_sequence(spark)
+        test_ref_store_matches_python_model_over_random_op_sequence(spark, tmp_path)
     finally:
         S.AUTO_COMPACT_MIN_SEGMENT_BYTES = orig
 

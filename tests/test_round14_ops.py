@@ -8,7 +8,6 @@ cannot replay row-level deletes at file granularity.
 from __future__ import annotations
 
 import os
-import tempfile
 import time
 
 import pytest
@@ -17,7 +16,7 @@ from pyspark.sql import functions as F
 from apache_iceberg_spark.catalog.snapshots import (
     _by_version,
     _read_log,
-    _resolve_scan,
+    _resolve,
     commit_append_ref,
     commit_snapshot,
     compact_mor,
@@ -35,6 +34,7 @@ from apache_iceberg_spark.catalog.snapshots import (
     rollback_to,
     transplant,
 )
+from tests.conftest import fresh_dir
 
 
 def _seed(spark, n=100):
@@ -47,16 +47,19 @@ def _rows(df):
     return {(r["k"], r["val"]) for r in df.collect()}
 
 
-def _table(prefix="mor14_"):
-    return os.path.join(tempfile.mkdtemp(prefix=prefix), "t")
+def _table(tmp_path, prefix="mor14_"):
+    """A fresh table path under ``tmp_path`` (numbered: loops reuse a
+    prefix)."""
+    n = len(os.listdir(tmp_path))
+    return os.path.join(fresh_dir(tmp_path, f"{prefix}{n}"), "t")
 
 
 @pytest.fixture()
-def mor_table(spark):
+def mor_table(spark, tmp_path):
     """Seed + two MoR merges: update 0-9 (+1) & insert 100-104, then
     re-update key 5 and insert 200 — the layered-delete shape every
     test below reads through."""
-    t = _table()
+    t = _table(tmp_path)
     commit_snapshot(_seed(spark), t)
     src1 = (
         spark.range(0, 10)
@@ -97,8 +100,8 @@ def test_mor_file_identity_shares_untouched_dirs(spark, mor_table):
     never rewrote it), and each merge added O(batch) dirs — one delete
     file + one delta — not a restatement."""
     by_v = _by_version(_read_log(mor_table))
-    seed_data, seed_dels = _resolve_scan(by_v, by_v[1])
-    head_data, head_dels = _resolve_scan(by_v, by_v[max(by_v)])
+    seed_data, seed_dels = _resolve(by_v, 1)
+    head_data, head_dels = _resolve(by_v, max(by_v))
     assert seed_dels == []
     seed_dirs = {p for p, _v, _s in seed_data}
     head_dirs = {p for p, _v, _s in head_data}
@@ -109,7 +112,7 @@ def test_mor_file_identity_shares_untouched_dirs(spark, mor_table):
     assert mor_debt(mor_table) == 2
 
 
-def test_mor_clause_matrix_matches_cow(spark):
+def test_mor_clause_matrix_matches_cow(spark, tmp_path):
     """All four when_matched x when_not_matched combinations produce
     the identical final state under cow and mor strategies."""
     src = spark.createDataFrame(
@@ -119,7 +122,7 @@ def test_mor_clause_matrix_matches_cow(spark):
         for wnm in ("insert", "ignore"):
             states = []
             for strat in ("cow", "mor"):
-                t = _table(f"mor14_{wm}_{wnm}_")
+                t = _table(tmp_path, f"mor14_{wm}_{wnm}_")
                 commit_snapshot(_seed(spark), t)
                 merge_into(
                     spark, t, src, on=["k"], when_matched=wm,
@@ -153,7 +156,7 @@ def test_mor_time_travel_and_rollback_preserve_delete_ordering(
     spark, mor_table
 ):
     """Version reads resolve pre-merge states cleanly, and rollback to
-    a MoR version materializes per-dir versions (pathsv) so the
+    a MoR version materializes per-item versions (``set`` items) so the
     restored read still applies merge-1's deletes to the seed but NOT
     to merge-1's own delta."""
     pre = read_snapshot_dirs(spark, mor_table, version=1)
@@ -181,11 +184,11 @@ def test_mor_read_pruned_never_prunes_deletes(spark, mor_table):
     assert (1, 11) in rows and (1, 10) not in rows
 
 
-def test_mor_ref_ops_raise_with_compact_remedy(spark):
+def test_mor_ref_ops_raise_with_compact_remedy(spark, tmp_path):
     """merge_branch / transplant / read_incremental cannot replay
     row-level deletes at file granularity — they must raise (naming
     the remedy), never silently read delete files as data."""
-    t = _table("mor14_refops_")
+    t = _table(tmp_path, "mor14_refops_")
     commit_snapshot(_seed(spark), t)
     v1 = _read_log(t)[-1]["version"]
     create_branch(t, "etl")
@@ -208,8 +211,8 @@ def test_mor_ref_ops_raise_with_compact_remedy(spark):
     assert (1, 111) in got and (1, 10) not in got
 
 
-def test_mor_source_key_uniqueness_still_enforced(spark):
-    t = _table("mor14_dup_")
+def test_mor_source_key_uniqueness_still_enforced(spark, tmp_path):
+    t = _table(tmp_path, "mor14_dup_")
     commit_snapshot(_seed(spark), t)
     dup = spark.createDataFrame(
         [(1, 111), (1, 222)], "k long, val long"
@@ -218,11 +221,11 @@ def test_mor_source_key_uniqueness_still_enforced(spark):
         merge_into(spark, t, dup, on=["k"], strategy="mor")
 
 
-def test_mor_append_after_merge_is_exempt_from_earlier_deletes(spark):
+def test_mor_append_after_merge_is_exempt_from_earlier_deletes(spark, tmp_path):
     """A plain append AFTER a MoR merge must not lose rows to the
     earlier delete file even when it reuses deleted keys — delete
     application is strictly-earlier-ordered."""
-    t = _table("mor14_append_")
+    t = _table(tmp_path, "mor14_append_")
     commit_snapshot(_seed(spark, 10), t)
     merge_into(
         spark, t,
@@ -430,12 +433,11 @@ def test_st33_stream_equals_batch_sketch(spark):
     assert got == want
 
 
-def test_m54_changelog_replay_reconstructs_table(spark):
+def test_m54_changelog_replay_reconstructs_table(spark, tmp_path):
     """Applying each MoR commit's exported changes (delete keys, then
     inserts) onto the seed must reconstruct the head table exactly —
     the CDC consumer contract."""
     import os
-    import tempfile
 
     from pyspark.sql import functions as F
 
@@ -450,7 +452,7 @@ def test_m54_changelog_replay_reconstructs_table(spark):
     df = spark.range(0, 50).select(
         F.col("id").alias("k"), (F.col("id") * 10).alias("val")
     )
-    t = os.path.join(tempfile.mkdtemp(prefix="m54rt_"), "t")
+    t = os.path.join(fresh_dir(tmp_path, "m54rt"), "t")
     commit_snapshot(df, t)
     v2 = merge_into(
         spark,

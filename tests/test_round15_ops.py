@@ -3,13 +3,12 @@ r14 ask #1) with the resurrection-safety proofs, the compaction policy
 planner (m59), SET-clause partial-column MERGE updates (m57, ask #4),
 views at refs + the rename dangling-view guard (m58, ask #6 + ADVICE
 r14), and the ADVICE r14 correctness fixes (expiry stats scope,
-empty-plan guard, _resolve_paths dedup, a51 dof clamp).
+empty-plan guard, needed-dirs dedup, a51 dof clamp).
 """
 
 from __future__ import annotations
 
 import os
-import tempfile
 import time
 
 import pytest
@@ -19,8 +18,8 @@ from apache_iceberg_spark.catalog.snapshots import (
     _by_version,
     _read_log,
     _read_mor,
-    _resolve_paths,
-    _resolve_scan,
+    _needed_dirs,
+    _resolve,
     commit_append,
     commit_snapshot,
     compact_mor,
@@ -40,10 +39,14 @@ from apache_iceberg_spark.catalog.workspace import (
     ws_read_at,
     ws_rename_table,
 )
+from tests.conftest import fresh_dir
 
 
-def _table(prefix="r15_"):
-    return os.path.join(tempfile.mkdtemp(prefix=prefix), "t")
+def _table(tmp_path, prefix="r15_"):
+    """A fresh table path under ``tmp_path`` (numbered: loops reuse a
+    prefix)."""
+    n = len(os.listdir(tmp_path))
+    return os.path.join(fresh_dir(tmp_path, f"{prefix}{n}"), "t")
 
 
 def _rows(df):
@@ -57,11 +60,11 @@ def _kv(spark, lo, hi):
 
 
 @pytest.fixture()
-def pruned_mor_table(spark):
+def pruned_mor_table(spark, tmp_path):
     """Three key-range chunks [0,100) [100,200) [200,300) committed
     WITH k-stats, plus a stats-carrying delete of {200..209} and a
     STAT-LESS delete of {150..154}."""
-    t = _table("prune15_")
+    t = _table(tmp_path, "prune15_")
     commit_snapshot(_kv(spark, 0, 100), t, stats_cols=["k"])
     commit_append(_kv(spark, 100, 200), t, stats_cols=["k"])
     commit_append(_kv(spark, 200, 300), t, stats_cols=["k"])
@@ -111,12 +114,12 @@ def test_statless_delete_always_applied(spark, pruned_mor_table):
     assert ks == set(range(100, 200)) - set(range(150, 155))
 
 
-def test_delete_data_range_proof(spark):
+def test_delete_data_range_proof(spark, tmp_path):
     """Rule-3 (data-range) proof: the delete's key range overlaps the
     SCAN range but is disjoint from every surviving dir's committed
     range (the merge deleted keys that were never ingested) -> the
     delete file is pruned even though the predicate can't prove it."""
-    t = _table("rng15_")
+    t = _table(tmp_path, "rng15_")
     commit_snapshot(_kv(spark, 0, 100), t, stats_cols=["k"])
     merge_into(
         spark, t, _kv(spark, 500, 510), on=["k"],
@@ -129,11 +132,11 @@ def test_delete_data_range_proof(spark):
     assert df.count() == 100
 
 
-def test_delete_sequence_proof(spark):
+def test_delete_sequence_proof(spark, tmp_path):
     """Rule-1 (sequence) proof: when every surviving data dir is NEWER
     than the delete file, it can't match anything in the scan — even
     stat-less deletes prune."""
-    t = _table("seq15_")
+    t = _table(tmp_path, "seq15_")
     commit_snapshot(_kv(spark, 0, 100), t, stats_cols=["k"])
     merge_into(
         spark, t, _kv(spark, 0, 1000), on=["k"],
@@ -170,13 +173,13 @@ def test_read_mor_raises_on_empty_plan(spark):
         _read_mor(spark, [], [("whatever", ("k",), 2, {})])
 
 
-def test_expiry_materialization_drops_entry_stats(spark):
+def test_expiry_materialization_drops_entry_stats(spark, tmp_path):
     """The ADVICE r14 medium: an expiry-materialized delta entry used to
     KEEP its own 'stats' key, which the resolver then applied to every
     inherited ancestor dir — read_pruned could silently drop the
     ancestor's rows. The ancestor's rows must survive a probe whose
     range lies outside the delta's stats."""
-    t = _table("exp15_")
+    t = _table(tmp_path, "exp15_")
     commit_snapshot(_kv(spark, 0, 100), t)  # ancestor WITHOUT stats
     commit_append(_kv(spark, 5000, 5100), t, stats_cols=["k"])
     time.sleep(0.01)
@@ -192,39 +195,39 @@ def test_expiry_materialization_drops_entry_stats(spark):
     assert d["data_scanned"] >= 1
 
 
-def test_materialization_preserves_per_dir_stats(spark):
-    """Rollback materialization keeps each dir's OWN stats (pathsv
-    triples), so value-range skipping survives the flatten instead of
+def test_materialization_preserves_per_dir_stats(spark, tmp_path):
+    """Rollback materialization keeps each dir's OWN stats (per-item
+    stats), so value-range skipping survives the flatten instead of
     degrading to full scans — and never misapplies a neighbor's range."""
-    t = _table("mat15_")
+    t = _table(tmp_path, "mat15_")
     commit_snapshot(_kv(spark, 0, 100), t, stats_cols=["k"])
     commit_append(_kv(spark, 100, 200), t, stats_cols=["k"])
-    merge_into(  # make the history MoR so the flatten goes pathsv
+    merge_into(  # make the history MoR so the flatten carries dels
         spark, t, _kv(spark, 0, 5), on=["k"],
         when_matched="delete", when_not_matched="ignore", strategy="mor",
     )
     v = rollback_to(t, 3)
     by_v = _by_version(_read_log(t))
-    data, dels = _resolve_scan(by_v, by_v[v])
+    data, dels = _resolve(by_v, v)
     stats = {s.get("k") and tuple(s["k"]) for _p, _v, s in data}
     assert (0, 99) in stats and (100, 199) in stats
     _df, d = read_pruned_detail(spark, t, "k", 150, 199)
     assert d["data_pruned"] == 1 and d["data_scanned"] == 1
 
 
-def test_resolve_paths_dedups_update_delta(spark):
+def test_resolve_paths_dedups_update_delta(spark, tmp_path):
     """ADVICE r14: an update-strategy MoR commit's delta dir doubles as
-    its delete file; _resolve_paths must list it once."""
-    t = _table("dedup15_")
+    its delete file; the needed-dirs list must name it once."""
+    t = _table(tmp_path, "dedup15_")
     commit_snapshot(_kv(spark, 0, 100), t)
     merge_into(spark, t, _kv(spark, 50, 150), on=["k"], strategy="mor")
     by_v = _by_version(_read_log(t))
-    paths = _resolve_paths(by_v, by_v[max(by_v)])
+    paths = _needed_dirs(*_resolve(by_v, max(by_v)))
     assert len(paths) == len(set(paths))
     assert len(paths) == 2  # seed dir + the dual-role delta dir
 
 
-def test_update_set_cow_equals_mor(spark):
+def test_update_set_cow_equals_mor(spark, tmp_path):
     """SET-clause subset update: identical result under both write
     strategies, expression sees both sides, unlisted columns keep the
     target value."""
@@ -236,7 +239,7 @@ def test_update_set_cow_equals_mor(spark):
     )
     outs = {}
     for strat in ("cow", "mor"):
-        t = _table(f"set15_{strat}_")
+        t = _table(tmp_path, f"set15_{strat}_")
         commit_snapshot(target, t)
         merge_into(
             spark, t, source, on=["k"], strategy=strat,
@@ -250,11 +253,11 @@ def test_update_set_cow_equals_mor(spark):
     assert outs["mor"] == want
 
 
-def test_update_set_ignore_inserts(spark):
+def test_update_set_ignore_inserts(spark, tmp_path):
     target = spark.createDataFrame([(1, 10), (2, 20)], "k long, v long")
     source = spark.createDataFrame([(2, 1), (9, 9)], "k long, v long")
     for strat in ("cow", "mor"):
-        t = _table(f"seti15_{strat}_")
+        t = _table(tmp_path, f"seti15_{strat}_")
         commit_snapshot(target, t)
         merge_into(
             spark, t, source, on=["k"], strategy=strat,
@@ -264,8 +267,8 @@ def test_update_set_ignore_inserts(spark):
         assert _rows(read_ref(spark, t, "main")) == [(1, 10), (2, 120)]
 
 
-def test_update_set_guards(spark):
-    t = _table("setg15_")
+def test_update_set_guards(spark, tmp_path):
+    t = _table(tmp_path, "setg15_")
     commit_snapshot(spark.createDataFrame([(1, 10)], "k long, v long"), t)
     src = spark.createDataFrame([(1, 5)], "k long, v long")
     with pytest.raises(ValueError, match="merge-key"):
@@ -279,10 +282,10 @@ def test_update_set_guards(spark):
         )
 
 
-def test_rename_dangling_view_guard(spark):
+def test_rename_dangling_view_guard(spark, tmp_path):
     """ADVICE r14: rename raises naming dependent views; force=True
     allows (views dangle at head, still resolve at pre-rename refs)."""
-    ws = tempfile.mkdtemp(prefix="ws15_")
+    ws = fresh_dir(tmp_path, "ws15")
     ws_commit(ws, {"sales": _kv(spark, 0, 10)})
     ws_create_view(ws, "big_sales", "SELECT * FROM sales WHERE val > 50")
     with pytest.raises(ValueError, match="big_sales"):
@@ -296,8 +299,8 @@ def test_rename_dangling_view_guard(spark):
         ws_read_at(spark, ws, "big_sales@main").count()
 
 
-def test_ws_read_at_dispatches_views_and_tables(spark):
-    ws = tempfile.mkdtemp(prefix="ws15b_")
+def test_ws_read_at_dispatches_views_and_tables(spark, tmp_path):
+    ws = fresh_dir(tmp_path, "ws15b")
     ws_commit(ws, {"sales": _kv(spark, 0, 10)})
     ws_create_view(ws, "doubled", "SELECT k, val * 2 AS val FROM sales")
     assert ws_read_at(spark, ws, "sales@main").count() == 10
@@ -331,13 +334,13 @@ def test_mor_maintenance_plan_overlap_budget(spark, pruned_mor_table):
     assert plan["decision"] == "hold"
 
 
-def test_a51_degenerate_dof_no_crash(spark):
+def test_a51_degenerate_dof_no_crash(spark, tmp_path):
     """ADVICE r14: a single-event-type table has dof = 0; the clamp
     must yield a row (g == 0 there) instead of a divide-by-zero."""
     import apache_iceberg_spark.operators.analytics  # noqa: F401
     from apache_iceberg_spark.registry import REGISTRY
 
-    sf = tempfile.mkdtemp(prefix="a51deg_")
+    sf = fresh_dir(tmp_path, "a51deg")
     spark.createDataFrame(
         [("click", f"2024-01-0{d} 10:00:00") for d in range(1, 8)],
         "event_type string, ts_s string",
@@ -348,7 +351,7 @@ def test_a51_degenerate_dof_no_crash(spark):
     assert row["g_per_dof_micro"] == 0
 
 
-def test_conditional_merge_matrix_cow_equals_mor(spark):
+def test_conditional_merge_matrix_cow_equals_mor(spark, tmp_path):
     """WHEN MATCHED AND <cond>: update/delete actions, with and
     without SET clauses, identical under both strategies; gated rows
     keep target values."""
@@ -375,14 +378,14 @@ def test_conditional_merge_matrix_cow_equals_mor(spark):
     ]
     for kwargs, want in cases:
         for strat in ("cow", "mor"):
-            t = _table(f"cond15_{strat}_")
+            t = _table(tmp_path, f"cond15_{strat}_")
             commit_snapshot(target, t)
             merge_into(spark, t, source, on=["k"], strategy=strat, **kwargs)
             got = _rows(read_ref(spark, t, "main"))
             assert got == sorted(want), (strat, kwargs, got)
 
 
-def test_conditional_merge_null_condition_keeps_target(spark):
+def test_conditional_merge_null_condition_keeps_target(spark, tmp_path):
     """A NULL condition must behave as false (SQL clause rule): the
     matched row keeps its target values, on both strategies."""
     target = spark.createDataFrame([(1, 10), (2, 20)], "k long, v long")
@@ -390,7 +393,7 @@ def test_conditional_merge_null_condition_keeps_target(spark):
         [(1, None), (2, 99)], "k long, v long"
     )
     for strat in ("cow", "mor"):
-        t = _table(f"condnull15_{strat}_")
+        t = _table(tmp_path, f"condnull15_{strat}_")
         commit_snapshot(target, t)
         merge_into(
             spark, t, source, on=["k"], strategy=strat,
@@ -400,7 +403,7 @@ def test_conditional_merge_null_condition_keeps_target(spark):
         assert _rows(read_ref(spark, t, "main")) == [(1, 10), (2, 99)]
 
 
-def test_conditional_mor_deletes_only_gated_keys(spark):
+def test_conditional_mor_deletes_only_gated_keys(spark, tmp_path):
     """The MoR delete-key file must cover ONLY condition-true matched
     keys — an untouched matched row deleted-by-key would vanish from
     the anti-join read."""
@@ -408,7 +411,7 @@ def test_conditional_mor_deletes_only_gated_keys(spark):
 
     target = _kv(spark, 0, 10)
     source = _kv(spark, 5, 15)  # matched: 5..9
-    t = _table("condkeys15_")
+    t = _table(tmp_path, "condkeys15_")
     commit_snapshot(target, t)
     v = merge_into(
         spark, t, source, on=["k"], strategy="mor",
@@ -422,7 +425,7 @@ def test_conditional_mor_deletes_only_gated_keys(spark):
     )
 
 
-def test_st37_guard_is_load_bearing(spark):
+def test_st37_guard_is_load_bearing(spark, tmp_path):
     """Under st37's adversarial (hash-bucketed, time-interleaved)
     arrival order, the UNGUARDED merge must disagree with the guarded
     one — proving the matched_condition is what makes out-of-order CDC
@@ -459,7 +462,7 @@ def test_st37_guard_is_load_bearing(spark):
             .select("user_id", "event_id", "cents", "us")
         )
 
-    base = tempfile.mkdtemp(prefix="st37un_")
+    base = fresh_dir(tmp_path, "st37un")
     table = os.path.join(base, "t")
     commit_snapshot(latest(e.filter(F.col("us") <= t_mid)), table)
     src_dir = os.path.join(base, "src")
@@ -492,7 +495,7 @@ def test_st37_guard_is_load_bearing(spark):
     assert guarded == want
 
 
-def test_merge_schema_evolution(spark):
+def test_merge_schema_evolution(spark, tmp_path):
     """merge_schema=True: a source with a NEW column evolves the table
     additively on BOTH strategies (pre-evolution rows read NULL);
     without the flag the drift raises with both schemas named, and the
@@ -503,7 +506,7 @@ def test_merge_schema_evolution(spark):
         [(2, 25, "eu"), (3, 30, "us")], "k long, v long, region string"
     )
     for strat in ("cow", "mor"):
-        t = _table(f"evo15_{strat}_")
+        t = _table(tmp_path, f"evo15_{strat}_")
         commit_snapshot(target, t)
         with pytest.raises(ValueError, match="merge_schema"):
             merge_into(spark, t, source, on=["k"], strategy=strat)
@@ -516,11 +519,11 @@ def test_merge_schema_evolution(spark):
         )
 
 
-def test_merge_schema_guards(spark):
+def test_merge_schema_guards(spark, tmp_path):
     """merge_schema composes only with the plain paths; a SET-clause
     partial-payload source stays legitimate WITHOUT the flag when it
     cannot land source-shaped rows (ignore-inserts)."""
-    t = _table("evog15_")
+    t = _table(tmp_path, "evog15_")
     commit_snapshot(
         spark.createDataFrame([(1, 10, "a")], "k long, v long, tag string"), t
     )

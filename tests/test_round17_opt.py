@@ -15,7 +15,6 @@ invariant an r17 performance rewrite relies on.
 from __future__ import annotations
 
 import os
-import tempfile
 
 import pytest
 
@@ -26,17 +25,18 @@ from apache_iceberg_spark.catalog.snapshots import (
     read_ref,
 )
 from apache_iceberg_spark.operators.scale import _multiset_equal
+from tests.conftest import fresh_dir
 
 
 def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def test_read_dirs_groups_same_schema_dirs(spark):
+def test_read_dirs_groups_same_schema_dirs(spark, tmp_path):
     """Same-schema dirs collapse into one multi-path scan; the frame is
     row-identical to the per-dir union, and the plan carries ONE scan
     relation instead of one per dir."""
-    t = os.path.join(tempfile.mkdtemp(prefix="r17rd_"), "t")
+    t = os.path.join(fresh_dir(tmp_path, "r17rd"), "t")
     commit_snapshot(
         spark.createDataFrame([(1, "a")], "k long, v string"), t
     )
@@ -51,11 +51,11 @@ def test_read_dirs_groups_same_schema_dirs(spark):
     assert "Union" not in plan
 
 
-def test_read_dirs_schema_evolution_still_unions(spark):
+def test_read_dirs_schema_evolution_still_unions(spark, tmp_path):
     """Dirs with divergent footers stay in their own groups: additive
     evolution fills NULLs, int->long widening applies — the old per-dir
     semantics exactly."""
-    t = os.path.join(tempfile.mkdtemp(prefix="r17rd_"), "t")
+    t = os.path.join(fresh_dir(tmp_path, "r17rd"), "t")
     commit_snapshot(spark.createDataFrame([(1,)], "k int"), t)
     commit_append(spark.createDataFrame([(2, "b")], "k bigint, v string"), t)
     df = read_ref(spark, t, "main")

@@ -134,7 +134,7 @@ def test_rollback_is_metadata_only_and_preserves_forensics(spark, tmp_path):
     log = {e["version"]: e for e in list_snapshots(table)}
     # metadata-only: the rollback entry references v1's directory, and no
     # new data directory exists for v3
-    assert log[v3]["paths"] == [log[v1]["path"]]
+    assert log[v3]["set"] == log[v1]["set"]
     import glob as _glob
     assert _glob.glob(os.path.join(table, f"v{v3}-*")) == []
     # forensics: the bad snapshot is still readable by version

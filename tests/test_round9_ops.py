@@ -6,20 +6,19 @@ like m20's time travel, and static partition pruning on the postings scan.
 
 from __future__ import annotations
 
-import tempfile
 
 import pyspark.sql.functions as F
 import pytest
 
-from tests.conftest import REPO_ROOT, SF_DIR
+from tests.conftest import REPO_ROOT, SF_DIR, fresh_dir
 
 
 @pytest.fixture(scope="module")
-def ivf_index(spark):
+def ivf_index(spark, tmp_path_factory):
     """One trained+committed index shared by the lifecycle tests."""
     from apache_iceberg_spark.operators.similarity import build_ivf_index
 
-    root = tempfile.mkdtemp(prefix="ann20_test_")
+    root = str(tmp_path_factory.mktemp("ann20_test"))
     cpath, kpath = build_ivf_index(spark, SF_DIR, root)
     return cpath, kpath
 
@@ -143,7 +142,7 @@ def test_ann20_retrain_overwrite_commit_time_travels(spark, ivf_index):
     assert _sorted_rows(new) == _sorted_rows(direct)
 
 
-def test_ann20_serving_scan_prunes_partitions(spark):
+def test_ann20_serving_scan_prunes_partitions(spark, tmp_path_factory):
     """The postings scan must carry the probed cells as a LITERAL partition
     predicate: the planned file set touches probed cell directories only.
     Uses a fresh index — the shared one is mutated by the add/retrain
@@ -157,8 +156,10 @@ def test_ann20_serving_scan_prunes_partitions(spark):
     )
     from apache_iceberg_spark.operators.dedup import _SPARK_DOT
 
+    # a short root: the plan string abbreviates each scan's location, and
+    # the "/codes/" match below must fall inside the abbreviation
     cpath, kpath = build_ivf_index(
-        spark, SF_DIR, tempfile.mkdtemp(prefix="ann20_prune_")
+        spark, SF_DIR, str(tmp_path_factory.mktemp("ann20_prune"))
     )
     # Independently recompute the probe set from the stored model.
     c1 = read_stored_centroids(spark, cpath)
@@ -370,11 +371,11 @@ def test_g7_two_cycle_detection_logic(spark):
 
 
 @pytest.fixture()
-def ref_table(spark):
+def ref_table(spark, tmp_path):
     """A tiny two-commit-capable table: main holds ids 0-9."""
     from apache_iceberg_spark.catalog.snapshots import commit_snapshot
 
-    table = tempfile.mkdtemp(prefix="refs_test_") + "/t"
+    table = fresh_dir(tmp_path, "refs_test") + "/t"
     commit_snapshot(spark.range(10).select(F.col("id")), table)
     return table
 
@@ -560,7 +561,7 @@ def test_pre_ref_linear_history_is_mergeable_ancestry(spark, ref_table):
     assert _ids(spark, ref_table, "main") == list(range(13)) + [30]
 
 
-def test_m30_reject_path_abandons_branch_and_main_never_moves(spark):
+def test_m30_reject_path_abandons_branch_and_main_never_moves(spark, tmp_path):
     """Branch-WAP's failure half: a poisoned batch (null keys) fails the
     audit, the branch ref is deleted, and main still serves exactly the
     pre-commit state."""
@@ -574,7 +575,7 @@ def test_m30_reject_path_abandons_branch_and_main_never_moves(spark):
         read_ref,
     )
 
-    table = tempfile.mkdtemp(prefix="bwap_rej_") + "/t"
+    table = fresh_dir(tmp_path, "bwap_rej") + "/t"
     base = spark.range(10).select(F.col("id").alias("o_orderkey"))
     v1 = commit_snapshot(base, table)
     create_branch(table, "audit_wap")
@@ -879,10 +880,9 @@ def test_ann21_stored_adc_equals_in_session_ann9(spark):
     assert got == want
 
 
-def test_ann21_codes_scan_prunes_to_probed_cells(spark):
+def test_ann21_codes_scan_prunes_to_probed_cells(spark, tmp_path):
     """The codes scan must carry the literal cell_id partition filter —
     static pruning, not a full-index read."""
-    import tempfile
 
     from apache_iceberg_spark.operators.similarity import (
         build_pq_index,
@@ -890,7 +890,7 @@ def test_ann21_codes_scan_prunes_to_probed_cells(spark):
     )
     from tests.conftest import SF_DIR
 
-    root = tempfile.mkdtemp(prefix="ann21_test_")
+    root = fresh_dir(tmp_path, "ann21_test")
     cells, book, codes = build_pq_index(spark, SF_DIR, root)
     df = serve_adc_from_index(spark, SF_DIR, cells, book, codes)
     plan = df._jdf.queryExecution().executedPlan().toString()
@@ -920,14 +920,14 @@ def test_ann21_codes_scan_prunes_to_probed_cells(spark):
 # s18: dynamic partition overwrite
 
 
-def test_s18_dynamic_mode_leaves_untouched_partition_files(spark):
+def test_s18_dynamic_mode_leaves_untouched_partition_files(spark, tmp_path):
     """The mode's defining property: partitions absent from the incoming
     batch keep their ORIGINAL data files byte-for-byte; only the touched
     partition's files are replaced (static mode would truncate all)."""
     import glob
     import os
 
-    base = tempfile.mkdtemp(prefix="s18_test_") + "/t"
+    base = fresh_dir(tmp_path, "s18_test") + "/t"
     df = spark.createDataFrame(
         [(i, "A" if i % 2 == 0 else "B", i * 10) for i in range(20)],
         "id LONG, part STRING, v LONG",
@@ -1136,7 +1136,7 @@ def test_branch_workflow_example_runs(spark):
 # m31/m32: Nessie diff + transplant
 
 
-def test_transplant_excludes_siblings_and_refuses_overwrites(spark):
+def test_transplant_excludes_siblings_and_refuses_overwrites(spark, tmp_path):
     from apache_iceberg_spark.catalog.snapshots import (
         commit_append_ref,
         commit_snapshot,
@@ -1145,7 +1145,7 @@ def test_transplant_excludes_siblings_and_refuses_overwrites(spark):
         transplant,
     )
 
-    table = tempfile.mkdtemp(prefix="txp_test_") + "/t"
+    table = fresh_dir(tmp_path, "txp_test") + "/t"
     commit_snapshot(spark.range(10).select(F.col("id")), table)
     create_branch(table, "etl")
     commit_append_ref(

@@ -4,14 +4,13 @@ physical plan, upsert merge semantics."""
 from __future__ import annotations
 
 import os
-import tempfile
 
 import pyspark.sql.functions as F
 import pytest
 
 from apache_iceberg_spark.operators.scale import salted_join, upsert, write_partitioned
 from apache_iceberg_spark.tables import load_table
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, fresh_dir
 
 
 def test_salted_join_matches_plain_join(spark):
@@ -41,11 +40,11 @@ def test_salted_join_spreads_hot_key(spark):
     assert out.count() == salted_join(left, right, "k", n_salts=8).count()
 
 
-def test_partitioned_write_prunes(spark):
+def test_partitioned_write_prunes(spark, tmp_path):
     events = load_table(spark, SF_DIR, "events").withColumn(
         "day", F.to_date("ts")
     )
-    target = os.path.join(tempfile.mkdtemp(prefix="part_"), "events_by_day")
+    target = os.path.join(fresh_dir(tmp_path, "part"), "events_by_day")
     write_partitioned(events, target, ["day"])
     back = spark.read.parquet(target)
     one_day = back.select("day").distinct().limit(1).collect()[0]["day"]

@@ -56,7 +56,8 @@ def bytes_mode(n: int) -> None:
     os.makedirs(table)
     seg = os.path.join(table, "_versions.jsonl")
 
-    # st19-shape entries: one 60-byte data path added per commit.
+    # st19-shape entries in the one file-set payload: one 60-byte data
+    # path added per commit, as a ``[path, v]`` item.
     per_commit_bytes: list[int] = []
     prev_size = 0
     t0 = time.time()
@@ -64,12 +65,12 @@ def bytes_mode(n: int) -> None:
     for v in range(1, n + 1):
         path = f"{table}/d{v}-{'x' * max(0, 52 - len(str(v)))}"
         entry = (
-            {"version": 1, "ts_ms": v, "path": path, "partition_by": None}
+            {"version": 1, "ts_ms": v, "set": [[path, v]], "partition_by": None}
             if v == 1
             else {
                 "version": v,
                 "ts_ms": v,
-                "adds": [path],
+                "adds": [[path, v]],
                 "parent": v - 1,
                 "partition_by": None,
             }
@@ -112,6 +113,15 @@ def bytes_mode(n: int) -> None:
             },
             separators=(",", ":"),
         )
+    )
+
+
+def _log_bytes(path: str) -> int:
+    """Bytes of a log's base file plus its append segment."""
+    return sum(
+        os.path.getsize(os.path.join(path, f))
+        for f in ("_versions.json", "_versions.jsonl")
+        if os.path.exists(os.path.join(path, f))
     )
 
 
@@ -185,6 +195,9 @@ def wall_mode(n: int) -> None:
                             if os.path.exists(base)
                             else 0
                         ),
+                        "log_bytes_per_commit": round(
+                            _log_bytes(table) / (n + 1), 1
+                        ),
                     },
                 ),
                 separators=(",", ":"),
@@ -205,7 +218,14 @@ def wall_mode(n: int) -> None:
         lat.append(time.perf_counter() - t0)
     print(
         json.dumps(
-            _wall_stats(lat, {"mode": "wall_workspace", "autocompact": False}),
+            _wall_stats(
+                lat,
+                {
+                    "mode": "wall_workspace",
+                    "autocompact": False,
+                    "log_bytes_per_commit": round(_log_bytes(ws) / n, 1),
+                },
+            ),
             separators=(",", ":"),
         ),
         flush=True,
@@ -242,6 +262,9 @@ def wall_mode(n: int) -> None:
                     "keys_max": 64,
                     "refs_bytes": os.path.getsize(
                         os.path.join(table, "_refs.json")
+                    ),
+                    "log_bytes_per_commit": round(
+                        _log_bytes(table) / (n + 1), 1
                     ),
                 },
             ),
